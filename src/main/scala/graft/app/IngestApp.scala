@@ -13,7 +13,7 @@ import graft.synth.TranscriptGen
   *   IngestApp <warehouseDir> [--input <parquet-of-transcripts>]
   *             [--input-jsonl <jsonl-of-transcripts>]
   *             [--synth convs=N,turns=M,skew=S,seed=K] [--master local[N]]
-  *             [--sorted true|auto] [--fused true] [--incremental true]
+  *             [--sorted true|auto] [--incremental true]
   *             [--ontology <topics.json>] [--fact-embeddings true]
   *
   * With --input, reads an (conv_id, turn_idx, role, text, tool, ts) parquet
@@ -28,11 +28,8 @@ import graft.synth.TranscriptGen
   * additionally lets the planner measure the corpus's max-conversation
   * share first (TurnChunker.preferSorted) and fall back to the
   * skew-invariant salted windowed plan when a pathological conversation
-  * would starve the sorted path's layout-bound parallelism. `--fused true`
-  * runs the triples-only pipeline (Ingest.runFused): the fused single-pass
-  * extractor feeds the raw-triple table directly and the corpus-sized chunks
-  * table is never written — the deployment shape when chunk-text provenance
-  * is not needed. `--incremental true` ingests the input as an ADDITIONAL
+  * would starve the sorted path's layout-bound parallelism.
+  * `--incremental true` ingests the input as an ADDITIONAL
   * corpus into an existing warehouse (Ingest.runIncremental, J4 entity
   * linking: new entities link against the committed registry, triples and
   * chunks merge-append idempotently) — the CLI form of the reference's
@@ -49,7 +46,7 @@ object IngestApp {
       System.err.println(
         "usage: IngestApp <warehouseDir> [--input <parquet>] [--input-jsonl <jsonl>] " +
           "[--synth convs=N,turns=M,skew=S,seed=K] [--master local[N]] " +
-          "[--sorted true|auto] [--fused true] [--incremental true] " +
+          "[--sorted true|auto] [--incremental true] " +
           "[--ontology <topics.json>] [--fact-embeddings true]")
       sys.exit(2)
     }
@@ -58,7 +55,7 @@ object IngestApp {
       case Array(k, v) if k.startsWith("--") => k -> v
     }.toMap
     val unknown = opts.keys.filterNot(
-      Set("--input", "--input-jsonl", "--synth", "--master", "--sorted", "--fused",
+      Set("--input", "--input-jsonl", "--synth", "--master", "--sorted",
         "--incremental", "--ontology", "--fact-embeddings"))
     if (unknown.nonEmpty) {
       System.err.println(s"unknown option(s): ${unknown.mkString(", ")}")
@@ -101,13 +98,7 @@ object IngestApp {
     }
 
     val t0 = System.nanoTime()
-    val fused = opts.get("--fused").exists(_.toBoolean)
     val incremental = opts.get("--incremental").exists(_.toBoolean)
-    if (fused && incremental) {
-      System.err.println("--fused and --incremental are mutually exclusive " +
-        "(incremental linking needs the chunk-provenance path)")
-      sys.exit(2)
-    }
     val sortedInput = opts.get("--sorted") match {
       case Some("auto") =>
         // input is declared storage-ordered; let the planner decide whether
@@ -137,15 +128,13 @@ object IngestApp {
       factEmbeddings = opts.get("--fact-embeddings").exists(_.toBoolean))
     val result =
       if (incremental) Ingest.runIncremental(spark, turns, warehouse, icfg)
-      else if (fused) Ingest.runFused(spark, turns, warehouse, icfg)
       else Ingest.run(spark, turns, warehouse, icfg)
     val nTriples = result.triples.count()
     val nEntities = result.entities.count()
     // incremental: chunks = the NEW corpus's chunks; entity/triple counts are
     // the LIVE post-merge tables
     val chunksNote =
-      if (fused) "chunks=skipped(fused)"
-      else if (incremental) s"chunks_new=${result.chunks.count()}"
+      if (incremental) s"chunks_new=${result.chunks.count()}"
       else s"chunks=${result.chunks.count()}"
     val secs = (System.nanoTime() - t0) / 1e9
     jsonlObs.foreach { o =>

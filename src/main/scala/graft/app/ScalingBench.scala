@@ -80,12 +80,29 @@ object ScalingBench {
     cfg.totalTurns
   }
 
-  /** Best-of-reps pipeline wall time at one parallelism level.
-    * mode "full" = chunk→…→assembled triples; mode "extract" = chunk→extract
-    * only (the north-rule throughput metric), a straight-line scan+window+
-    * mapPartitions job with no persists; mode "extract_sorted" = the same
-    * over a storage-ordered corpus via the chunker's shuffle-free
-    * sortedInput fast path.
+  /** The pipeline shapes `measure` times; see its scaladoc. */
+  private val Modes: Seq[String] =
+    Seq("chunk", "extract", "extract_sorted", "extract_fused", "full", "full_sorted")
+
+  /** Exit 2 naming the valid modes, before any session starts: an unknown
+    * mode must not silently measure a different pipeline.
+    */
+  private def requireMode(mode: String): Unit =
+    if (!Modes.contains(mode)) {
+      System.err.println(s"unknown mode '$mode'; valid modes: ${Modes.mkString(", ")}")
+      sys.exit(2)
+    }
+
+  /** Best-of-reps pipeline wall time at one parallelism level, by mode:
+    *  - "full": chunk→…→assembled triples (`Ingest.runInMemory`, which takes
+    *    the fused extractor at the default config); "full_sorted": the same
+    *    through the chunker's sortedInput fast path
+    *  - "extract": chunk→extract only (the north-rule throughput metric), a
+    *    straight-line scan+window+mapPartitions job with no persists;
+    *    "extract_sorted": the same over a storage-ordered corpus via the
+    *    chunker's shuffle-free sortedInput fast path
+    *  - "extract_fused": the fused single-pass extractor
+    *  - "chunk": the chunker alone
     */
   def measure(cores: Int, corpusDir: String, reps: Int, mode: String = "full"): Double = {
     val spark = session(cores)
@@ -93,33 +110,23 @@ object ScalingBench {
     def once(): Double = {
       val turns = spark.read.parquet(corpusDir).as[graft.model.Turn]
       val t0 = System.nanoTime()
-      if (mode == "chunk") {
-        graft.chunk.TurnChunker.chunk(spark, turns)
-          .write.mode("overwrite").format("noop").save()
-      } else if (mode == "extract_fused") {
+      val out = mode match {
+        case "chunk" => graft.chunk.TurnChunker.chunk(spark, turns).toDF()
         // fused single-pass chunk-gate + extraction (spec-asserted
         // row-identical to extract(chunk(...))) — the deployment shape when
         // only triples are needed from a standing transcript store
-        graft.extract.TripleExtractor.extractFused(spark, turns)
-          .write.mode("overwrite").format("noop").save()
-      } else if (mode == "extract" || mode == "extract_sorted") {
-        val ccfg = graft.chunk.TurnChunker.Config(
-          sortedInput = mode == "extract_sorted")
-        val chunks = graft.chunk.TurnChunker.chunk(spark, turns, ccfg)
-        graft.extract.TripleExtractor.extract(spark, chunks)
-          .write.mode("overwrite").format("noop").save()
-      } else if (mode == "full_fused") {
-        // triples-only pipeline end-to-end (Ingest.runFused deployment
-        // shape): fused extraction feeds dedup/link/assemble directly —
-        // no chunk table, no chunk-window pass
-        Ingest.runInMemoryFused(spark, turns).triples
-          .write.mode("overwrite").format("noop").save()
-      } else {
-        val icfg = Ingest.Config(chunker = graft.chunk.TurnChunker.Config(
-          sortedInput = mode == "full_sorted"))
-        Ingest.runInMemory(spark, turns, icfg).triples
-          .write.mode("overwrite").format("noop").save()
+        case "extract_fused" => graft.extract.TripleExtractor.extractFused(spark, turns).toDF()
+        case "extract" | "extract_sorted" =>
+          val ccfg = graft.chunk.TurnChunker.Config(
+            sortedInput = mode == "extract_sorted")
+          val chunks = graft.chunk.TurnChunker.chunk(spark, turns, ccfg)
+          graft.extract.TripleExtractor.extract(spark, chunks).toDF()
+        case "full" | "full_sorted" =>
+          val icfg = Ingest.Config(chunker = graft.chunk.TurnChunker.Config(
+            sortedInput = mode == "full_sorted"))
+          Ingest.runInMemory(spark, turns, icfg).triples
       }
+      out.write.mode("overwrite").format("noop").save()
       (System.nanoTime() - t0) / 1e9
     }
     // warmup: ONE uncounted pass of the real job. A tiny-corpus warmup
@@ -250,14 +257,16 @@ object ScalingBench {
     if (args.headOption.contains("--measure")) {
       // child-JVM entry used by forkMeasure: one level, one mode, one line
       val Array(_, coresS, dir, repsS, mode) = args
+      requireMode(mode)
       val secs = measure(coresS.toInt, dir, repsS.toInt, mode)
       println(f"[measure] $secs%.6f")
       return
     }
+    val mode = args.lift(3).getOrElse("full")
+    requireMode(mode)
     val turns = args.headOption.map(_.toLong).getOrElse(1000000L)
     val cores = args.lift(1).map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(8, 32))
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val mode = args.lift(3).getOrElse("full")
     val tps = run(turns, cores, reps, mode)
     cores.sliding(2).foreach {
       case Seq(a, b) =>

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.assemble.TripleAssembler
 import graft.canon.EntityDedup
@@ -10,7 +11,7 @@ import graft.extract.TripleExtractor
 import graft.link.{EntityLinker, TopicResolver}
 import graft.model._
 import graft.synth.TranscriptGen
-import graft.tables.SnapshotLog
+import graft.tables.{Checkpoints, SnapshotLog}
 
 /** End-to-end knowledge-graph construction over a transcripts table
   * (SURVEY.md §3.1): chunk → extract → collect/dedup/canonicalize → link →
@@ -56,176 +57,127 @@ object Ingest {
       factEmbeddings: Boolean = false,
       groupId: String = "default")
 
-  /** Run without the table layer (used by tests/bench). Only the raw-triple
-    * stage is persisted: its four downstream consumers (mentions, topic
-    * names ×2, assembly) would otherwise re-run the chunk-window shuffle and
-    * regex extraction each. Chunks have a single consumer (extraction) — a
-    * cache there would be a pure write-read overhead. In the committed `run`
-    * path the snapshot tables play the persistence role.
+  /** Where the stage chain keeps each stage's output. Each hook receives the
+    * stage's plan by name, so a sink that already holds a stage (a committed
+    * table on resume) never builds it; the defaults leave a stage a lazy
+    * plan.
+    */
+  private abstract class Sink {
+    /** The sink keeps the chunks table, so raw triples are extracted from it
+      * rather than fused straight off the turns.
+      */
+    def writesChunks: Boolean
+    def chunks(c: => DataFrame): DataFrame = c
+    def raw(r: => DataFrame): DataFrame = r
+    def mentions(m: => DataFrame): DataFrame = m
+    /** (entities, remap, topics) from dedup's (entities, remap) and the
+      * resolved topics.
+      */
+    def canon(dedup: => (DataFrame, DataFrame),
+        topics: => DataFrame): (DataFrame, DataFrame, DataFrame)
+    def triples(t: => DataFrame): DataFrame = t
+  }
+
+  /** The one stage chain behind every sink: chunk → extract → mentions →
+    * dedup (→ link, incremental sink) → topic resolve → assemble.
     *
-    * Raw-triple extraction routes through the FUSED single-pass extractor
-    * whenever the chunker config satisfies its identity precondition
-    * (windowSize == 1, no markdown header stacks — the defaults;
-    * spec-asserted row-identical to extract(chunk(turns))): the chunk table
-    * is NOT an input of the triple stream there, only of chunk-text
-    * provenance, and `Result.chunks` stays lazily available either way — so
-    * an action that materializes only `.triples` pays ONE corpus pass
-    * instead of the chunker's stats + zip passes (guide §1.2: remove whole
-    * passes before tuning inside them). Windowed/header configs keep the
-    * chunk-table route.
+    * Raw-triple extraction takes the FUSED single-pass extractor when the
+    * sink keeps no chunks table and the chunker config satisfies its
+    * identity precondition (windowSize == 1, no markdown header stacks — the
+    * defaults; spec-asserted row-identical to extract(chunk(turns))): an
+    * action that materializes only `.triples` then pays ONE corpus pass
+    * instead of the chunker's stats + zip passes. `Result.chunks` stays
+    * lazily available either way.
+    */
+  private def chain(spark: SparkSession, turns: Dataset[Turn], cfg: Config,
+      sink: Sink): Result = {
+    import spark.implicits._
+    val c = cfg.chunker
+    val chunks = sink.chunks(TurnChunker.chunk(spark, turns, c).toDF())
+    val fused = !sink.writesChunks && c.windowSize == 1 && !c.markdownHeaders
+    val rawDf = sink.raw(
+      if (fused) TripleExtractor.extractFused(spark, turns, c.minChars, c.groupId).toDF()
+      else TripleExtractor.extract(spark, chunks.as[Chunk]).toDF())
+    val raw = rawDf.as[RawTriple]
+    val mentions = sink.mentions(TripleExtractor.mentions(spark, raw).toDF())
+    val (entities, remap, topics) = sink.canon(
+      { val (e, r) = EntityDedup.dedup(spark, mentions.as[Mention], cfg.dedup); (e.toDF(), r) },
+      {
+        // one pass over raw (not a 3-way union = 3 scans): topics array ∪
+        // topic-typed subjects ∪ topic-typed objects
+        val names = rawDf.select(explode(concat($"topics",
+            when(lower($"subject_type") === "topic", array($"subject")).otherwise(array()),
+            when(lower($"object_type") === "topic", array($"object")).otherwise(array())))
+            .as("name"), $"group_id")
+          .distinct()
+        TopicResolver.resolve(spark, names, cfg.ontology, cfg.topics)
+      })
+    val triples = sink.triples(
+      TripleAssembler.assemble(spark, raw, remap, topics, cfg.assembler).toDF())
+    Result(chunks, rawDf, entities, triples)
+  }
+
+  /** Run without the table layer (used by tests/bench); keeps no chunks
+    * table, so the default chunker config takes the fused extractor.
+    *
+    * Only the raw-triple stage is persisted, and it stays persisted on
+    * purpose: its consumers (mentions, topic names, and the assembly that the
+    * lazy `Result.triples` runs whenever the caller materializes it) would
+    * otherwise re-run extraction each. Chunks have a single consumer
+    * (extraction) — a cache there would be a pure write-read overhead.
+    *
+    * entities/remap/topics are tiny (≈ distinct names); eagerly truncating
+    * their lineage (the in-memory analogue of the committed path's stage
+    * tables) stops downstream broadcast subqueries from re-running the whole
+    * chunk+extract subtree — measured as a repeated multi-second broadcast
+    * build in the assembly phase. The three tables are mutually independent,
+    * so they materialize in ONE job (truncateAll) instead of three sequential
+    * driver rounds. Checkpoints prefers a reliable checkpoint when a dir is
+    * configured (cluster failure model).
     */
   def runInMemory(spark: SparkSession, turns: Dataset[Turn],
-      cfg: Config = Config()): Result = {
-    import org.apache.spark.storage.StorageLevel
-    val chunks = TurnChunker.chunk(spark, turns, cfg.chunker)
-    val fusable = cfg.chunker.windowSize == 1 && !cfg.chunker.markdownHeaders
-    val raw = (if (fusable)
-        TripleExtractor.extractFused(spark, turns, cfg.chunker.minChars, cfg.chunker.groupId)
-      else TripleExtractor.extract(spark, chunks))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (entities, triples) = inMemoryDownstream(spark, raw, cfg)
-    Result(chunks.toDF(), raw.toDF(), entities, triples)
-  }
-
-  /** In-memory triples-only run (see `runFused`): fused single-pass
-    * extraction feeds the downstream stages directly — no Chunk objects, no
-    * chunk-window/stats pass. windowSize=1 / markdownHeaders=false semantics
-    * only (enforced).
-    */
-  def runInMemoryFused(spark: SparkSession, turns: Dataset[Turn],
-      cfg: Config = Config()): Result = {
-    import spark.implicits._
-    import org.apache.spark.storage.StorageLevel
-    require(cfg.chunker.windowSize == 1 && !cfg.chunker.markdownHeaders,
-      "runInMemoryFused implements windowSize=1 / markdownHeaders=false semantics; " +
-        "use runInMemory() for windowed or header-stack configs")
-    val raw = TripleExtractor.extractFused(spark, turns,
-        cfg.chunker.minChars, cfg.chunker.groupId)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (entities, triples) = inMemoryDownstream(spark, raw, cfg)
-    Result(spark.emptyDataset[Chunk].toDF(), raw.toDF(), entities, triples)
-  }
-
-  private def inMemoryDownstream(spark: SparkSession, raw: Dataset[RawTriple],
-      cfg: Config): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val mentions = TripleExtractor.mentions(spark, raw)
-    val (entities0, remap0) = EntityDedup.dedup(spark, mentions, cfg.dedup)
-    // one pass over raw (not a 3-way union = 3 cache scans): topics array ∪
-    // topic-typed subjects ∪ topic-typed objects
-    val topicNames = raw.select(explode(concat($"topics",
-        when(lower($"subject_type") === "topic", array($"subject")).otherwise(array()),
-        when(lower($"object_type") === "topic", array($"object")).otherwise(array())))
-        .as("name"), $"group_id")
-      .distinct()
-    // entities/remap/topics are tiny (≈ distinct names); eagerly truncating
-    // their lineage here (the in-memory analogue of the committed path's
-    // stage tables) stops downstream broadcast subqueries from re-running the
-    // whole chunk+extract subtree — measured as a repeated multi-second
-    // broadcast build in the assembly phase. The three tables are mutually
-    // independent, so they materialize in ONE job (truncateAll) instead of
-    // three sequential driver rounds. Checkpoints prefers a reliable
-    // checkpoint when a dir is configured (cluster failure model).
-    val Seq(entities, remap, topics) = graft.tables.Checkpoints.truncateAll(
-      entities0.toDF(), remap0,
-      TopicResolver.resolve(spark, topicNames, cfg.ontology, cfg.topics))
-    val triples = TripleAssembler.assemble(spark, raw, remap, topics, cfg.assembler)
-    (entities, triples.toDF())
-  }
+      cfg: Config = Config()): Result =
+    chain(spark, turns, cfg, new Sink {
+      val writesChunks = false
+      override def raw(r: => DataFrame) = r.persist(StorageLevel.MEMORY_AND_DISK)
+      def canon(dedup: => (DataFrame, DataFrame), topics: => DataFrame) = {
+        val (e, r) = dedup
+        val Seq(entities, remap, t) = Checkpoints.truncateAll(e, r, topics)
+        (entities, remap, t)
+      }
+    })
 
   /** Full run with committed snapshots + lineage + resume.
-    * Tables: chunks, raw_triples, entities, entity_remap, topics, triples —
-    * all partitioned by group_id (tenant pruning, SURVEY.md §1.1) and the big
-    * ones additionally bucketed by conv_id hash range at write time.
+    * Tables: chunks, raw_triples, mentions, entities, entity_remap, topics,
+    * triples — partitioned by group_id (tenant pruning, SURVEY.md §1.1)
+    * except the tiny remap and topics. Each stage commits once; a relaunch
+    * reads it back instead.
     */
   def run(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
       cfg: Config = Config()): Result = {
-    import spark.implicits._
     val log = new SnapshotLog(spark, warehouseDir)
-
-    val chunksDf = log.computeIfAbsent("chunks", Seq("group_id"),
-        bloomKeys = Seq("chunk_uuid")) {
-      TurnChunker.chunk(spark, turns, cfg.chunker).toDF()
-    }
-    val chunks = chunksDf.as[Chunk]
-
-    val rawDf = log.computeIfAbsent("raw_triples", Seq("group_id")) {
-      TripleExtractor.extract(spark, chunks).toDF()
-    }
-
-    val (entitiesDf, triplesDf) = downstream(spark, log, rawDf, cfg)
-    Result(chunksDf, rawDf, entitiesDf, triplesDf)
-  }
-
-  /** Triples-only committed run: the raw-triple table is computed by the
-    * FUSED single-pass extractor straight off the turn stream
-    * (`TripleExtractor.extractFused`) and the corpus-sized chunks table is
-    * never materialized — at 10^12 turns that is ~1× corpus bytes of write
-    * volume saved, and no chunk-window shuffle/stats pass at all. Provenance
-    * still resolves per triple via the carried (conv_id, turn_idx,
-    * chunk_uuid); deployments that need chunk TEXT provenance (J12 lookups,
-    * v7 chunk-centric retrieval) use `run`. Fused semantics are
-    * windowSize=1 without markdown header stacks (spec-asserted identical to
-    * extract(chunk(turns)) there); other chunker configs must take `run`.
-    */
-  def runFused(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
-      cfg: Config = Config()): Result = {
-    import spark.implicits._
-    require(cfg.chunker.windowSize == 1 && !cfg.chunker.markdownHeaders,
-      "runFused implements windowSize=1 / markdownHeaders=false semantics; " +
-        "use run() for windowed or header-stack configs")
-    val log = new SnapshotLog(spark, warehouseDir)
-    val rawDf = log.computeIfAbsent("raw_triples", Seq("group_id")) {
-      TripleExtractor.extractFused(spark, turns,
-        cfg.chunker.minChars, cfg.chunker.groupId).toDF()
-    }
-    val (entitiesDf, triplesDf) = downstream(spark, log, rawDf, cfg)
-    Result(spark.emptyDataset[Chunk].toDF(), rawDf, entitiesDf, triplesDf)
-  }
-
-  /** Stages downstream of the committed raw-triple table, shared by `run`
-    * (chunk-table provenance path) and `runFused` (triples-only path):
-    * mentions → dedup/canonicalize → topic resolve → assembly, each a
-    * committed resume-aware snapshot.
-    */
-  private def downstream(spark: SparkSession, log: SnapshotLog, rawDf: DataFrame,
-      cfg: Config): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val raw = rawDf.as[RawTriple]
-
-    val mentionsDf = log.computeIfAbsent("mentions", Seq("group_id")) {
-      TripleExtractor.mentions(spark, raw).toDF()
-    }
-
-    val (entitiesDf, remapDf) =
-      (log.read("entities"), log.read("entity_remap")) match {
-        case (Some(e), Some(r)) => (e, r)
-        case _ =>
-          val (e, r) = EntityDedup.dedup(spark, mentionsDf.as[Mention], cfg.dedup)
-          // link against a pre-existing entity table if one was committed by a
-          // previous corpus run (incremental ingest, J4)
-          log.commit("entities", e.toDF(), Seq("group_id"),
-            bloomKeys = Seq("entity_uuid"))
-          log.commit("entity_remap", r)
-          (log.read("entities").get, log.read("entity_remap").get)
+    chain(spark, turns, cfg, new Sink {
+      val writesChunks = true
+      override def chunks(c: => DataFrame) =
+        log.computeIfAbsent("chunks", Seq("group_id"), bloomKeys = Seq("chunk_uuid"))(c)
+      override def raw(r: => DataFrame) = log.computeIfAbsent("raw_triples", Seq("group_id"))(r)
+      override def mentions(m: => DataFrame) = log.computeIfAbsent("mentions", Seq("group_id"))(m)
+      def canon(dedup: => (DataFrame, DataFrame), topics: => DataFrame) = {
+        val (entities, remap) = (log.read("entities"), log.read("entity_remap")) match {
+          case (Some(e), Some(r)) => (e, r)
+          case _ =>
+            val (e, r) = dedup
+            log.commit("entities", e, Seq("group_id"), bloomKeys = Seq("entity_uuid"))
+            log.commit("entity_remap", r)
+            (log.read("entities").get, log.read("entity_remap").get)
+        }
+        (entities, remap, log.computeIfAbsent("topics")(topics))
       }
-
-    val topicsDf = log.computeIfAbsent("topics") {
-      val names = rawDf.select(explode(concat($"topics",
-          when(lower($"subject_type") === "topic", array($"subject")).otherwise(array()),
-          when(lower($"object_type") === "topic", array($"object")).otherwise(array())))
-          .as("name"), $"group_id")
-        .distinct()
-      TopicResolver.resolve(spark, names, cfg.ontology, cfg.topics)
-    }
-
-    val triplesDf = log.computeIfAbsent("triples", Seq("group_id"),
-        bloomKeys = Seq("fact_uuid"), auxBloomKeys = TripleLookupBlooms) {
-      val t = TripleAssembler.assemble(spark, raw, remapDf, topicsDf, cfg.assembler).toDF()
-      if (cfg.factEmbeddings) graft.query.Retriever.withFactEmbeddings(t) else t
-    }
-
-    (entitiesDf, triplesDf)
+      override def triples(t: => DataFrame) = log.computeIfAbsent("triples", Seq("group_id"),
+          bloomKeys = Seq("fact_uuid"), auxBloomKeys = TripleLookupBlooms) {
+        if (cfg.factEmbeddings) graft.query.Retriever.withFactEmbeddings(t) else t
+      }
+    })
   }
 
   /** Incremental ingest of an additional corpus into an EXISTING warehouse
@@ -239,6 +191,10 @@ object Ingest {
     * from it): the additional corpus must carry fresh conv ids for
     * genuinely new conversations — a re-submitted conv_id deduplicates by
     * uuid (idempotent re-ingest) rather than storing divergent content.
+    *
+    * Chunks and raw triples are persisted for the run (each feeds several
+    * consumers) and released once the merges are committed; the returned
+    * `Result.chunks` and `rawTriples` remain valid as lazy plans.
     */
   def runIncremental(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
       cfg: Config = Config()): Result = {
@@ -246,40 +202,40 @@ object Ingest {
     val log = new SnapshotLog(spark, warehouseDir)
     val existing = log.read("entities").getOrElse(
       throw new IllegalStateException("runIncremental needs a committed entities table"))
-
-    val chunks = TurnChunker.chunk(spark, turns, cfg.chunker)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val raw = TripleExtractor.extract(spark, chunks)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mentions = TripleExtractor.mentions(spark, raw)
-    val (newEntities, remap) = EntityDedup.dedup(spark, mentions, cfg.dedup)
-
-    val linked = EntityLinker.link(spark, newEntities.toDF(), existing, cfg.linker)
-    // remap through the link result: mention name → resolved (existing or new)
-    val finalRemap = remap
-      .join(linked.select($"entity_uuid".as("canonical_uuid"),
-        $"resolved_uuid", $"resolved_name"), Seq("canonical_uuid"))
-      .select($"entity_uuid", $"resolved_uuid".as("canonical_uuid"),
-        $"resolved_name".as("canonical_name"), $"name")
-
-    val topicNames = raw.toDF().select(explode($"topics").as("name"), $"group_id").distinct()
-    val topics = TopicResolver.resolve(spark, topicNames, cfg.ontology, cfg.topics)
-    val triples0 = TripleAssembler.assemble(spark, raw, finalRemap, topics, cfg.assembler).toDF()
     // segment schemas must agree across increments: follow the COMMITTED
     // table's layout (persisted vectors iff the base run persisted them),
     // regardless of this run's flag
-    val triples =
-      if (log.read("triples").exists(_.columns.contains("embedding")))
-        graft.query.Retriever.withFactEmbeddings(triples0)
-      else triples0
-
-    val entityRows = foldLinkedEntities(spark, linked, existing.columns)
-    log.mergeUpsert("entities", entityRows, Seq("entity_uuid"), Seq("group_id"))
-    log.mergeAppend("triples", triples, Seq("fact_uuid"), Seq("group_id"),
-      auxBloomKeys = TripleLookupBlooms)
-    log.mergeAppend("chunks", chunks.toDF(), Seq("chunk_uuid"), Seq("group_id"))
-
-    Result(chunks.toDF(), raw.toDF(), log.read("entities").get, log.read("triples").get)
+    val withVectors = log.read("triples").exists(_.columns.contains("embedding"))
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame) = { cached += df; df.persist(StorageLevel.MEMORY_AND_DISK) }
+    try {
+      // the linked rows stand in for this run's entities: the commit below
+      // folds them into upserts of the committed entity table
+      val r = chain(spark, turns, cfg, new Sink {
+        val writesChunks = true
+        override def chunks(c: => DataFrame) = cache(c)
+        override def raw(r: => DataFrame) = cache(r)
+        def canon(dedup: => (DataFrame, DataFrame), topics: => DataFrame) = {
+          val (newEntities, remap) = dedup
+          val linked = EntityLinker.link(spark, newEntities, existing, cfg.linker)
+          // remap through the link result: mention name → resolved (existing or new)
+          val finalRemap = remap
+            .join(linked.select($"entity_uuid".as("canonical_uuid"),
+              $"resolved_uuid", $"resolved_name"), Seq("canonical_uuid"))
+            .select($"entity_uuid", $"resolved_uuid".as("canonical_uuid"),
+              $"resolved_name".as("canonical_name"), $"name")
+          (linked, finalRemap, topics)
+        }
+        override def triples(t: => DataFrame) =
+          if (withVectors) graft.query.Retriever.withFactEmbeddings(t) else t
+      })
+      log.mergeUpsert("entities", foldLinkedEntities(spark, r.entities, existing.columns),
+        Seq("entity_uuid"), Seq("group_id"))
+      log.mergeAppend("triples", r.triples, Seq("fact_uuid"), Seq("group_id"),
+        auxBloomKeys = TripleLookupBlooms)
+      log.mergeAppend("chunks", r.chunks, Seq("chunk_uuid"), Seq("group_id"))
+      r.copy(entities = log.read("entities").get, triples = log.read("triples").get)
+    } finally cached.foreach(_.unpersist())
   }
 
   /** Fold EntityLinker output into one upsert row per resolved uuid

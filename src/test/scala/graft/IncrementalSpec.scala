@@ -393,4 +393,18 @@ class IncrementalSpec extends SparkSpec {
       f0.getString(0), topK = 5,
       dateFrom = Some("1990-01-01"), dateTo = Some("2099-12-31")).count() > 0)
   }
+
+  test("runIncremental releases the relations it caches") {
+    val dir = Files.createTempDirectory("graft-incr-cache").toString
+    val base = TranscriptGen.Config(numConvs = 3, turnsPerConv = 20, skew = 1)
+    Ingest.run(spark, TranscriptGen.transcripts(spark, base), dir)
+    spark.catalog.clearCache()
+    Seq("inc1-", "inc2-").foreach { prefix =>
+      val turns = TranscriptGen.transcripts(spark, base.copy(seed = 7L))
+        .withColumn("conv_id", concat(lit(prefix), $"conv_id")).as[graft.model.Turn]
+      Ingest.runIncremental(spark, turns, dir)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "runIncremental must unpersist its chunks and raw triples")
+  }
 }

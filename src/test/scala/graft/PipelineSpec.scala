@@ -82,13 +82,21 @@ class PipelineSpec extends SparkSpec {
   test("committed-path parity: Ingest.run stage tables yield the same triples as runInMemory") {
     val small = TranscriptGen.Config(numConvs = 5, turnsPerConv = 25, skew = 3)
     val turns = TranscriptGen.transcripts(spark, small)
-    val inMem = Ingest.runInMemory(spark, turns).triples
-      .orderBy($"fact_uuid").collect()
-    val dir = Files.createTempDirectory("graft-parity").toString
-    val committed = Ingest.run(spark, turns, dir).triples
-      .orderBy($"fact_uuid").collect()
-    assert(inMem.length === committed.length && inMem.nonEmpty)
-    inMem.zip(committed).foreach { case (a, b) => assert(a === b) }
+    // the in-memory sink takes the fused extractor at the default config
+    // (which has no layout requirement, hence the arbitrary repartition) and
+    // the chunk route at windowSize 2; the committed sink always chunks
+    val windowed = Ingest.Config(chunker = graft.chunk.TurnChunker.Config(windowSize = 2))
+    Seq(("default", turns, Ingest.Config()), ("repartition(7)", turns.repartition(7),
+        Ingest.Config()), ("windowSize=2", turns, windowed)).foreach {
+      case (input, t, cfg) =>
+        val inMem = Ingest.runInMemory(spark, t, cfg).triples
+          .orderBy($"fact_uuid").collect()
+        val dir = Files.createTempDirectory("graft-parity").toString
+        val committed = Ingest.run(spark, t, dir, cfg).triples
+          .orderBy($"fact_uuid").collect()
+        assert(inMem.length === committed.length && inMem.nonEmpty, input)
+        inMem.zip(committed).foreach { case (a, b) => assert(a === b, input) }
+    }
   }
 
   test("determinism under parallelism + skew: triple set identical across partitionings") {
@@ -103,28 +111,6 @@ class PipelineSpec extends SparkSpec {
     val b = tripleSet(16)
     assert(a === b, "output must not depend on partitioning")
     assert(a.nonEmpty)
-  }
-
-  test("fused triples-only run: identical triples table, no chunks table written") {
-    val small = TranscriptGen.Config(numConvs = 5, turnsPerConv = 25, skew = 3)
-    val turns = TranscriptGen.transcripts(spark, small)
-    val dirA = Files.createTempDirectory("graft-fusedA").toString
-    val full = Ingest.run(spark, turns, dirA).triples.orderBy($"fact_uuid").collect()
-    val dirB = Files.createTempDirectory("graft-fusedB").toString
-    // fused path has no layout requirement — hand it an arbitrary repartition
-    val fusedRes = Ingest.runFused(spark, turns.repartition(7), dirB)
-    val fused = fusedRes.triples.orderBy($"fact_uuid").collect()
-    assert(full.length === fused.length && full.nonEmpty)
-    full.zip(fused).foreach { case (a, b) => assert(a === b) }
-    val log = new SnapshotLog(spark, dirB)
-    assert(log.latestSnapshot("chunks").isEmpty,
-      "fused run must not materialize the chunks table")
-    assert(fusedRes.chunks.isEmpty)
-    // windowed / header-stack configs are outside fused semantics → rejected
-    intercept[IllegalArgumentException] {
-      Ingest.runFused(spark, turns, dirB,
-        Ingest.Config(chunker = graft.chunk.TurnChunker.Config(windowSize = 2)))
-    }
   }
 
   test("persisted fact vectors (factEmbeddings): committed == derived; increments follow the layout") {
@@ -170,5 +156,42 @@ class PipelineSpec extends SparkSpec {
     assert(log.latestSnapshot("chunks").get === 1L, "chunks stage must be reused")
     assert(log.latestSnapshot("triples").nonEmpty)
     assert(r.triples.count() > 0)
+  }
+
+  test("job count of each sink stays at or below its pinned ceiling") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.perfbench.ListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val small = TranscriptGen.Config(numConvs = 5, turnsPerConv = 25, skew = 3)
+    val turns = TranscriptGen.transcripts(spark, small)
+    // fresh conversations for the increment: same generator, prefixed conv ids
+    val batch = TranscriptGen.transcripts(spark, small.copy(numConvs = 3, seed = 7L))
+      .withColumn("conv_id", concat(lit("inc-"), $"conv_id")).as[graft.model.Turn]
+    val dir = Files.createTempDirectory("graft-jobs").toString
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf(sinkRun: => Any): Int = {
+      spark.catalog.clearCache()
+      ListenerBus.drain(spark.sparkContext)
+      jobs.set(0)
+      sinkRun
+      ListenerBus.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val counts = try Seq(
+      "runInMemory" -> jobsOf(Ingest.runInMemory(spark, turns).triples
+        .write.mode("overwrite").format("noop").save()),
+      "run" -> jobsOf(Ingest.run(spark, turns, dir)),
+      "runIncremental" -> jobsOf(Ingest.runIncremental(spark, batch, dir)))
+    finally spark.sparkContext.removeSparkListener(listener)
+    info(counts.map { case (s, n) => s"$s=$n" }.mkString(" "))
+    // pinned at the measured counts: an extra driver round in a sink fails here
+    val ceilings = Map("runInMemory" -> 20, "run" -> 37, "runIncremental" -> 58)
+    counts.foreach { case (sink, n) =>
+      assert(n <= ceilings(sink), s"$sink ran $n jobs, ceiling ${ceilings(sink)}")
+    }
   }
 }
