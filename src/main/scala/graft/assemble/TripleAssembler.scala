@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Ids, Norm}
 import graft.model.{RawTriple, Triple}
+import graft.tables.Checkpoints
 
 /** Fact assembly: resolve subjects/objects, mint stable fact ids (SURVEY.md
   * §2.3 J7, §2.7 F1/F2).
@@ -19,28 +20,30 @@ import graft.model.{RawTriple, Triple}
   *    rel_type, object_canonical, fact_text, date_context) (:856-864).
   *
   * Spark shape: two equi-joins on lower(name). The resolution table (canonical
-  * entities + remap) is far smaller than the triple stream, so it is broadcast
-  * when `broadcastResolutions` (default); hot entity names (skew) otherwise
-  * fall to AQE skew-join handling. Topics resolve through a broadcast ontology
-  * map; unresolved topics are dropped from the array (pipeline.py:1694-1696),
-  * not the fact.
+  * entities + remap) is far smaller than the triple stream, so it is always
+  * broadcast: in the in-memory sink its inputs are checkpointed relations
+  * with no size statistics Catalyst could decide from. Topics resolve through a broadcast ontology
+  * map, capped by `derivedTopicCap`; unresolved topics are dropped from the
+  * array (pipeline.py:1694-1696), not the fact.
   */
 object TripleAssembler {
 
-  /** `maxBroadcastTopics` caps the driver-collected resolved-topic map for
-    * the broadcast fast path. Default 0 = DERIVE from the session's own
-    * `spark.sql.autoBroadcastJoinThreshold` at ~50 B per (key, label) entry —
-    * the same budget Catalyst itself would apply to a broadcast join of that
-    * table — so a session tuned for bigger/smaller broadcasts moves this cap
-    * with it. Overflow falls back to the explode+regroup shuffle path.
+  /** Assembly has no settings; the config stays so `Ingest.Config` keeps one
+    * per stage.
     */
-  case class Config(broadcastResolutions: Boolean = true, groupId: String = "default",
-      maxBroadcastTopics: Int = 0)
+  case class Config()
 
   /** ~bytes per broadcast map entry (short lowercase key + label + overhead). */
   private val BytesPerTopicEntry = 50L
 
-  private[assemble] def derivedTopicCap(spark: SparkSession): Int = {
+  /** Cap on the driver-collected resolved-topic map of the broadcast fast
+    * path, derived from the session's own `spark.sql.autoBroadcastJoinThreshold`
+    * at ~50 B per (key, label) entry — the same budget Catalyst itself would
+    * apply to a broadcast join of that table — so a session tuned for
+    * bigger/smaller broadcasts moves this cap with it. Overflow falls back to
+    * the explode+regroup shuffle path.
+    */
+  private[graft] def derivedTopicCap(spark: SparkSession): Int = {
     val raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     val bytes =
       try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
@@ -85,8 +88,7 @@ object TripleAssembler {
     // degrades to a full shuffle of the fact stream.
     val lookup0 = res0.select($"key", $"r_uuid", $"r_name", lit(false).as("is_topic"))
       .union(topic0.select($"key", $"r_uuid", $"r_name", lit(true).as("is_topic")))
-    val lookup = if (cfg.broadcastResolutions) broadcast(lookup0) else lookup0
-    val topicMap = if (cfg.broadcastResolutions) broadcast(topic0) else topic0
+    val lookup = broadcast(lookup0)
 
     val t = rawTriples.toDF()
       .withColumn("subject_key", lower(trim($"subject")))
@@ -99,29 +101,11 @@ object TripleAssembler {
     // pipeline.py:1694-1696). Fast path: the resolved-topic map is bounded by
     // the distinct surface forms that matched the ontology — broadcast it and
     // rewrite the array in place (no explode, no fact-stream regroup shuffle).
-    // Falls back to explode + regroup when the map is unexpectedly large.
-    val maxBroadcastTopics =
-      if (cfg.maxBroadcastTopics > 0) cfg.maxBroadcastTopics
-      else derivedTopicCap(spark)
-    // single job: fetch up to the cap + 1; overflow → fallback path.
-    // Scan ALL partitions in the first CollectLimit round (the default
-    // initialNumPartitions=1 costs 4 sequential scale-up jobs on a small
-    // topic table — see ConnectedComponents.run for the same probe shape);
-    // scoped + restored around this one collect.
-    val limitConfKey = "spark.sql.limit.initialNumPartitions"
-    val prevInit = spark.conf.getOption(limitConfKey)
-    val capped =
-      try {
-        spark.conf.set(limitConfKey, 100000)
-        topic0.select($"key", $"r_name").limit(maxBroadcastTopics + 1).collect()
-      } finally {
-        prevInit match {
-          case Some(v) => spark.conf.set(limitConfKey, v)
-          case None => spark.conf.unset(limitConfKey)
-        }
-      }
-    val resolved =
-      if (cfg.broadcastResolutions && capped.length <= maxBroadcastTopics) {
+    // Falls back to explode + regroup when the map exceeds derivedTopicCap;
+    // one bounded collect both decides and fetches.
+    val resolved = Checkpoints.collectUpTo(topic0.select($"key", $"r_name"),
+        derivedTopicCap(spark)) match {
+      case Some(capped) =>
         val entries = capped.map(r => r.getString(0) -> r.getString(1)).toMap
         val bc = spark.sparkContext.broadcast(entries)
         val resolveTopics = udf { (ts: Seq[String]) =>
@@ -129,18 +113,18 @@ object TripleAssembler {
           else ts.flatMap(x => bc.value.get(x.trim.toLowerCase(java.util.Locale.ROOT))).distinct.sorted
         }
         withObj.withColumn("topics", resolveTopics($"topics"))
-      } else {
+      case None =>
         val exploded = withObj
           .withColumn("topic_raw", explode_outer($"topics"))
           .withColumn("topic_key", lower(trim($"topic_raw")))
-          .join(topicMap.select($"key".as("topic_key"), $"r_name".as("topic_label")),
+          .join(broadcast(topic0).select($"key".as("topic_key"), $"r_name".as("topic_label")),
             Seq("topic_key"), "left")
         exploded
           .groupBy($"chunk_uuid", $"conv_id", $"group_id", $"fact", $"subject",
             $"subject_type", $"relationship", $"object", $"object_type", $"date_context",
             $"subject_uuid", $"subject_canonical", $"object_uuid", $"object_canonical")
           .agg(array_sort(array_distinct(collect_list($"topic_label"))).as("topics"))
-      }
+    }
 
     resolved
       .withColumn("predicate", relTypeUdf($"relationship"))

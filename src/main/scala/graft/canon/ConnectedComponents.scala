@@ -39,43 +39,30 @@ object ConnectedComponents {
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
       smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
     import spark.implicits._
-    // lineage truncation per round: reliable checkpoint when the session has
-    // a checkpoint dir (survives executor loss on a real cluster);
-    // localCheckpoint otherwise (single-JVM local mode)
-    def truncate(df: DataFrame): DataFrame = graft.tables.Checkpoints.truncate(df)
-
-    // small-graph probe and fetch in ONE job over the RAW edge relation:
-    // pull up to the cap + 1 rows — if they all fit, that IS the edge list.
-    // Probing raw edges (not the symmetrized+distinct view) matters twice:
-    // the union-with-own-reversal plan evaluates the edge SUBTREE two times
+    // small-graph probe and fetch in ONE bounded collect over the RAW edge
+    // relation: if up to the cap fit, that IS the edge list. Probing raw
+    // edges (not the symmetrized+distinct view) matters twice: the
+    // union-with-own-reversal plan evaluates the edge SUBTREE two times
     // inside one job (each union branch re-runs it — e.g. the declared CC
     // query's broadcast-NL cosine pair gen ran its whole scan twice), and
     // the distinct costs a full exchange round. Union-find is direction- and
     // duplicate-insensitive, so runLocal on the raw rows (self-loops dropped
-    // here) produces the identical labeling; the former count()-then-
-    // collect() pair additionally cost two executions plus a persist round.
-    // CollectLimit starts at `spark.sql.limit.initialNumPartitions` (default
-    // 1) and scales up 4× per round — on a 32-partition edge table whose row
-    // count sits under the cap, that is FOUR sequential driver jobs (1, 4,
-    // 16, then all partitions) just to learn "the graph is small". Scanning
-    // every partition in the first round turns the probe into ONE job; the
-    // conf is scoped to the probe and restored (a selective user limit
-    // elsewhere in the session keeps the incremental strategy).
-    val limitConfKey = "spark.sql.limit.initialNumPartitions"
-    val prevInit = spark.conf.getOption(limitConfKey)
-    val probe =
-      try {
-        spark.conf.set(limitConfKey, 100000)
-        edges.select($"src", $"dst")
-          .limit((smallGraphEdges + 1).toInt).as[(String, String)].collect()
-      } finally {
-        prevInit match {
-          case Some(v) => spark.conf.set(limitConfKey, v)
-          case None => spark.conf.unset(limitConfKey)
-        }
-      }
-    if (probe.length <= smallGraphEdges)
-      return runLocal(spark, probe.filter { case (a, b) => a != b })
+    // here) produces the identical labeling. Ids are read as strings, the
+    // type runLocal labels.
+    graft.tables.Checkpoints.collectUpTo(
+        edges.select($"src".cast("string"), $"dst".cast("string")), smallGraphEdges) match {
+      case Some(rows) => runLocal(spark,
+        rows.map(r => (r.getString(0), r.getString(1))).filter { case (a, b) => a != b })
+      case None => runDistributed(spark, edges, maxIter)
+    }
+  }
+
+  private def runDistributed(spark: SparkSession, edges: DataFrame, maxIter: Int): DataFrame = {
+    import spark.implicits._
+    // lineage truncation per round: reliable checkpoint when the session has
+    // a checkpoint dir (survives executor loss on a real cluster);
+    // localCheckpoint otherwise (single-JVM local mode)
+    def truncate(df: DataFrame): DataFrame = graft.tables.Checkpoints.truncate(df)
 
     // large path: symmetrize + distinct once, persisted for the iterative
     // rounds (the probe's partial scan is not reusable here — the cap bounds

@@ -101,8 +101,7 @@ object EntityDedup {
       // edges+components fast path (same bounded-collect discipline as
       // ConnectedComponents.SmallGraphEdges; ≤ ~75 MB transient at the cap).
       // 0 forces the distributed path (tests / memory-tight drivers).
-      maxLocalPending: Long = 50000L,
-      groupId: String = "default")
+      maxLocalPending: Long = 50000L)
 
   /** Collect distinct pending entities from mentions (phase 2a/2b analogue:
     * pipeline.py:1392-1459). First-occurrence summary wins, deterministically:
@@ -251,22 +250,12 @@ object EntityDedup {
   private[graft] def localComponents(spark: SparkSession, pending: DataFrame,
       cfg: Config): Option[DataFrame] = {
     if (cfg.maxLocalPending <= 0) return None
-    // scan every partition in the probe's first CollectLimit round — the
-    // probe wants the whole (tiny) table; see ConnectedComponents.run
-    val limitConfKey = "spark.sql.limit.initialNumPartitions"
-    val prevInit = spark.conf.getOption(limitConfKey)
-    val probe =
-      try {
-        spark.conf.set(limitConfKey, 100000)
-        pending.select("entity_uuid", "name", "entity_type", "embedding")
-          .limit((cfg.maxLocalPending + 1).toInt).collect()
-      } finally {
-        prevInit match {
-          case Some(v) => spark.conf.set(limitConfKey, v)
-          case None => spark.conf.unset(limitConfKey)
-        }
-      }
-    if (probe.length > cfg.maxLocalPending) return None
+    val probe = graft.tables.Checkpoints.collectUpTo(
+        pending.select("entity_uuid", "name", "entity_type", "embedding"),
+        cfg.maxLocalPending) match {
+      case Some(rows) => rows
+      case None => return None
+    }
     // (uuid, akey, fkey, type, embedding) — same derivations as candidateEdges
     val rows = probe.map { r =>
       (r.getString(0), aliasKey(r.getString(1)), firstTokenKey(r.getString(1)),

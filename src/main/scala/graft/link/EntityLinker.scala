@@ -18,9 +18,11 @@ import graft.functions.{Embed, Norm}
   *
   * Spark shape (the north star's "broadcast-joined entity-link scorer"):
   * candidates come from an equi-join on blocking key against the existing
-  * entity table — broadcast when small enough (the common case: the entity
-  * catalog is orders of magnitude smaller than the triple stream), shuffle
-  * hash join otherwise (`broadcastExisting = false`). Scoring is exact cosine
+  * entity table. Catalyst picks the join from the table's size estimate
+  * (`spark.sql.autoBroadcastJoinThreshold`): broadcast in the common case,
+  * where the entity catalog is orders of magnitude smaller than the triple
+  * stream, a shuffle join once it outgrows the threshold — the table holds
+  * embeddings and grows with the warehouse. Scoring is exact cosine
   * + alias-key equality; top-1 per new entity via a window; match accepted
   * above threshold. The LLM decision is replaced by the deterministic
   * rules of EntityDedup (alias table, suffix strip, type guardrail).
@@ -32,10 +34,7 @@ import graft.functions.{Embed, Norm}
   */
 object EntityLinker {
 
-  case class Config(
-      scoreThreshold: Double = 0.85,
-      broadcastExisting: Boolean = true,
-      groupId: String = "default")
+  case class Config(scoreThreshold: Double = 0.85)
 
   /** Column if present, else a typed null/default — keeps link() usable on
     * minimal entity schemas (tests, external tables without summaries).
@@ -71,7 +70,7 @@ object EntityLinker {
         .withColumn("is_new", lit(true))
     }
 
-    val exKeyed0 = existing.select(
+    val exKeyed = existing.select(
       explode(keysUdf($"name")).as("block_key"),
       aliasKeyUdf($"name").as("ex_akey"),
       $"entity_uuid".as("ex_uuid"),
@@ -81,7 +80,6 @@ object EntityLinker {
       colOr(existing, "summary", nullStr).as("ex_summary"),
       colOr(existing, "aliases", emptyStrArr).as("ex_aliases"),
       $"group_id")
-    val exKeyed = if (cfg.broadcastExisting) broadcast(exKeyed0) else exKeyed0
 
     val newKeyed = newEntities
       .withColumn("akey", aliasKeyUdf($"name"))

@@ -29,7 +29,7 @@ import graft.model.OntologyTopic
   */
 object TopicResolver {
 
-  case class Config(candidateFloor: Double = 0.40, groupId: String = "default")
+  case class Config(candidateFloor: Double = 0.40)
 
   def resolve(spark: SparkSession, topicNames: DataFrame,
       ontology: Seq[OntologyTopic], cfg: Config = Config()): DataFrame = {

@@ -54,8 +54,7 @@ object Ingest {
       // column instead of re-deriving per read. Default off: the embedder
       // is deterministic, so derive-at-read is value-identical and the
       // table stays 64 doubles/row slimmer.
-      factEmbeddings: Boolean = false,
-      groupId: String = "default")
+      factEmbeddings: Boolean = false)
 
   /** Where the stage chain keeps each stage's output. Each hook receives the
     * stage's plan by name, so a sink that already holds a stage (a committed

@@ -1,10 +1,11 @@
 package graft.tables
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Lineage-truncation helper shared by every stage that eagerly materializes
-  * a small intermediate (connected-components iterations, dedup's pending
-  * table, in-memory ingest's entity/remap/topic tables).
+/** Lineage-truncation and bounded-collect helpers shared by every stage that
+  * eagerly materializes a small intermediate (connected-components
+  * iterations, dedup's pending table, in-memory ingest's entity/remap/topic
+  * tables) or fetches one to the driver when it is small enough.
   *
   * `localCheckpoint` truncates lineage to executor-local blocks: on a real
   * cluster, losing an executor makes the data unrecoverable (no lineage left
@@ -48,5 +49,39 @@ object Checkpoints {
         sc.union(marked.map(_.queryExecution.toRdd.map(_ => ()))).count()
         marked
       }
+  }
+
+  /** `df`'s rows on the driver when it has at most `maxRows` of them, else
+    * None, in ONE job: a single `CollectLimit` of `maxRows + 1` rows is both
+    * the size probe and the fetch. CollectLimit starts at
+    * `spark.sql.limit.initialNumPartitions` partitions (default 1) and scales
+    * up 4× per round, so on a 32-partition relation under the cap the probe
+    * would cost four sequential jobs (1, 4, 16, then all partitions).
+    * Scanning every partition in the first round makes it one; the conf is
+    * scoped to this collect, so a selective user limit elsewhere in the
+    * session keeps the incremental strategy.
+    */
+  def collectUpTo(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
+    val rows = withConf(df.sparkSession, "spark.sql.limit.initialNumPartitions" -> "100000") {
+      df.limit(Math.toIntExact(maxRows + 1)).collect()
+    }
+    if (rows.length <= maxRows) Some(rows) else None
+  }
+
+  /** Runs `body` with the given session confs set, then restores each key's
+    * previous value (unsetting keys that were unset), also when `body`
+    * throws.
+    */
+  private[graft] def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    // getAll holds only explicitly set keys (getOption falls back to defaults)
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

@@ -86,11 +86,8 @@ class CosineExprSpec extends SparkSpec {
     // both children non-nullable AND containsNull=false → nullable=false →
     // nullSafeCodeGen binds ev.isNull to FalseLiteral; the generated code
     // must not assign to it (would be a Janino error → interpreted fallback)
-    val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    val prevWsc = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try {
+    graft.tables.Checkpoints.withConf(spark, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.wholeStage" -> "false") {
       val df = spark.range(50)
         .withColumn("a", array((0 until 4).map(i => rand(i).cast("double")): _*))
         .withColumn("b", array((0 until 4).map(i => rand(i + 9).cast("double")): _*))
@@ -98,10 +95,6 @@ class CosineExprSpec extends SparkSpec {
         graft.functions.expr.DotProduct($"a", $"b").as("d")).collect()
       assert(rows.length === 50)
       assert(rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
-    } finally {
-      prevFactory.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
-        spark.conf.set("spark.sql.codegen.factoryMode", _))
-      spark.conf.set("spark.sql.codegen.wholeStage", prevWsc)
     }
   }
 

@@ -84,11 +84,18 @@ class PipelineSpec extends SparkSpec {
     val turns = TranscriptGen.transcripts(spark, small)
     // the in-memory sink takes the fused extractor at the default config
     // (which has no layout requirement, hence the arbitrary repartition) and
-    // the chunk route at windowSize 2; the committed sink always chunks
+    // the chunk route at windowSize 2; the committed sink always chunks.
+    // A 50-byte broadcast threshold derives a topic-map cap of 1, which sends
+    // assembly down its explode + regroup fallback: it must give the same
+    // triples as the default run's broadcast-map path.
     val windowed = Ingest.Config(chunker = graft.chunk.TurnChunker.Config(windowSize = 2))
-    Seq(("default", turns, Ingest.Config()), ("repartition(7)", turns.repartition(7),
-        Ingest.Config()), ("windowSize=2", turns, windowed)).foreach {
-      case (input, t, cfg) =>
+    val fallback = Seq("spark.sql.autoBroadcastJoinThreshold" -> "50")
+    var broadcastMap = Array.empty[org.apache.spark.sql.Row]
+    Seq(("default", turns, Ingest.Config(), Nil),
+        ("repartition(7)", turns.repartition(7), Ingest.Config(), Nil),
+        ("windowSize=2", turns, windowed, Nil),
+        ("topic fallback", turns, Ingest.Config(), fallback)).foreach {
+      case (input, t, cfg, confs) => graft.tables.Checkpoints.withConf(spark, confs: _*) {
         val inMem = Ingest.runInMemory(spark, t, cfg).triples
           .orderBy($"fact_uuid").collect()
         val dir = Files.createTempDirectory("graft-parity").toString
@@ -96,6 +103,13 @@ class PipelineSpec extends SparkSpec {
           .orderBy($"fact_uuid").collect()
         assert(inMem.length === committed.length && inMem.nonEmpty, input)
         inMem.zip(committed).foreach { case (a, b) => assert(a === b, input) }
+        if (input == "default") broadcastMap = inMem
+        if (confs.nonEmpty) {
+          val labels = inMem.flatMap(r => r.getSeq[String](r.fieldIndex("topics"))).distinct.length
+          assert(graft.assemble.TripleAssembler.derivedTopicCap(spark) < labels, input)
+          assert(inMem.toSeq === broadcastMap.toSeq, input)
+        }
+      }
     }
   }
 

@@ -63,6 +63,37 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), "no cartesian in the pipeline plan:\n" + plan)
   }
 
+  test("entity-link join: Catalyst broadcasts the committed entity table at fixture size, " +
+      "sort-merges it when broadcasts are off, and both give the same links") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-link-plan").toString
+    val fixture = TranscriptGen.Config(4, 20, 2)
+    Ingest.run(spark, TranscriptGen.transcripts(spark, fixture), dir)
+    val log = new graft.tables.SnapshotLog(spark, dir)
+    // fresh conversations: same generator, other seed, prefixed conv ids
+    val batch = TranscriptGen.transcripts(spark, fixture.copy(seed = 1042L))
+      .withColumn("conv_id", concat(lit("inc-"), $"conv_id")).as[graft.model.Turn]
+    val incoming = Ingest.runInMemory(spark, batch).entities
+    // (join operator on the block key, link rows)
+    def link(): (Seq[String], Seq[org.apache.spark.sql.Row]) = {
+      val linked = graft.link.EntityLinker.link(spark, incoming, log.read("entities").get)
+      val joins = "(\\w+Join) \\[block_key".r
+        .findAllMatchIn(linked.queryExecution.executedPlan.toString).map(_.group(1)).toSeq
+      (joins, linked.orderBy($"entity_uuid").collect().toSeq)
+    }
+    def check(state: String): Unit = {
+      val (joins, rows) = link()
+      assert(joins === Seq("BroadcastHashJoin"), state)
+      val (forcedJoins, forcedRows) = graft.tables.Checkpoints.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(link())
+      assert(forcedJoins === Seq("SortMergeJoin"), state)
+      assert(rows.nonEmpty && forcedRows === rows, state)
+    }
+    check("fresh warehouse")
+    // one increment upserts the entity table: its read is then merge-on-read
+    Ingest.runIncremental(spark, batch, dir)
+    check("after one increment")
+  }
+
   test("chunker windows are all salted: no turn-ordered window partitioned by bare conv_id") {
     val turns = TranscriptGen.transcripts(spark, TranscriptGen.Config(4, 30, 2))
     val plan = graft.chunk.TurnChunker.chunk(spark, turns)
