@@ -1,7 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
-
 /** Measures MinHash-LSH precision/recall against brute-force exact Jaccard
   * on the driver's documents table (backs BASELINE.md near-dup quality).
   * Usage: DedupQualityProbe [sfDir] [maxDocId] [threshold]
@@ -11,11 +9,7 @@ object DedupQualityProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val maxDoc = args.lift(1).map(_.toLong).getOrElse(2000L)
     val th = args.lift(2).map(_.toDouble).getOrElse(0.7)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-dedup-quality", cores = 32, shufflePartitions = 32)
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") < maxDoc)

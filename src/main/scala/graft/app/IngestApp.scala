@@ -1,7 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Ingest
 import graft.synth.TranscriptGen
 
@@ -62,17 +60,7 @@ object IngestApp {
       sys.exit(2)
     }
 
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("--master", sys.env.getOrElse("SPARK_MASTER", "local[8]")))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.cli("graft-ingest", opts.get("--master"))
     import spark.implicits._
 
     var jsonlObs: Option[org.apache.spark.sql.Observation] = None

@@ -108,13 +108,7 @@ object IvfRecallProbe {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val nQueries = args.lift(1).map(_.toInt).getOrElse(50)
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("graft-ivf-recall")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("graft-ivf-recall", cores = 8, shufflePartitions = 8)
 
     measure(spark, "uniform(sf)",
       spark.read.parquet(s"$sfDir/embeddings.parquet"), nQueries, k)

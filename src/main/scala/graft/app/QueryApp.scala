@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.query.{GraphLookup, Researcher, Retriever}
@@ -83,14 +83,7 @@ object QueryApp {
     }
     val topK = opts.get("--topk").map(_.toInt).getOrElse(15)
 
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("--master", sys.env.getOrElse("SPARK_MASTER", "local[8]")))
-      .appName("graft-query")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.cli("graft-query", opts.get("--master"))
 
     val log = new SnapshotLog(spark, wh)
     def table(name: String): DataFrame = log.read(name).getOrElse {

@@ -13,44 +13,30 @@ import graft.synth.TranscriptGen
   * proxies N executors) and report turns/sec per level plus N→4N efficiency.
   *
   * Methodology: the corpus is generated once and written to parquet so every
-  * level reads the same bytes; each level runs in a fresh session with one
-  * warmup pass (codegen/planning) and `reps` measured passes, best-of —
-  * the sandbox VM shows multi-second host noise, best-of-n isolates the
-  * engine's own cost.
+  * level reads the same bytes; each level runs in its own child JVM
+  * (`forkMeasure`) with one warmup pass (codegen/planning) and `reps`
+  * measured passes, best-of — host noise runs to several seconds, and
+  * best-of-n isolates the engine's own cost.
   *
-  * Usage: ScalingBench [turns] [cores,cores,...] [reps]   (default: 1000000 8,32 2)
+  * Usage: ScalingBench [turns] [cores,cores,...] [reps] [mode]
+  * (default: 1000000 8,32 2 full). A level whose child fails exits 1.
   */
 object ScalingBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      // the SAME job at every parallelism level: shuffle partitioning is part
-      // of the job's logical config, so it is held CONSTANT (one wave on the
-      // widest level — the salted chunker balances partitions, so extra
-      // straggler waves only add task overhead; measured: 32 partitions beat
-      // 128 by ~1.6s at 32 cores and ~2× on the barrier-heavy full pipeline).
-      // Letting it track the core count would also hand low-core levels a
-      // lighter job and distort the scaling ratio.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
+  private def session(cores: Int): SparkSession =
+    // the SAME job at every parallelism level: shuffle partitioning is part
+    // of the job's logical config, so it is held CONSTANT (one wave on the
+    // widest level — the salted chunker balances partitions, so extra
+    // straggler waves only add task overhead; measured: 32 partitions beat
+    // 128 by ~1.6s at 32 cores and ~2× on the barrier-heavy full pipeline).
+    // Letting it track the core count would also hand low-core levels a
+    // lighter job and distort the scaling ratio.
+    Sessions.local(s"graft-scaling-$cores", cores, shufflePartitions = 32,
       // the measurement corpus is a few hundred MB: default 128 MB splits
       // would give the 32-core level single-digit scan tasks and idle cores —
       // a fixture artifact, not an engine property (a 10^12-turn table has
       // millions of splits). 8 MB keeps every level's scan saturated.
-      .config("spark.sql.files.maxPartitionBytes", s"${8 * 1024 * 1024}")
-      // env-overridable so the F-decomposition experiments (BASELINE.md) can
-      // isolate AQE's per-exchange replanning rounds from the dataflow cost
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+      "spark.sql.files.maxPartitionBytes" -> s"${8 * 1024 * 1024}")
 
   /** Generate the corpus once → parquet. Returns totalTurns. `sorted` writes
     * the storage-ordered layout a standing transcript store maintains (each
@@ -237,7 +223,12 @@ object ScalingBench {
     val dir = Files.createTempDirectory("graft-scaling-corpus").toString
     val total = materializeCorpus(turnsTarget, dir, sorted = mode.endsWith("_sorted"))
     val out = cores.map { n =>
-      val secs = measure(n, dir, reps, mode)
+      // one fresh JVM per level: levels timed in one JVM distort the ratio
+      // (BASELINE.md §JVM churn: 0.46 in-bench vs 0.81 isolated)
+      val secs = forkMeasure(n, dir, reps, mode).getOrElse {
+        System.err.println(s"[scaling] mode=$mode cores=$n: measurement failed; no number")
+        sys.exit(1)
+      }
       println(f"[scaling] mode=$mode cores=$n turns=$total secs=$secs%.2f " +
         f"turns_per_sec=${total / secs}%.0f")
       n -> total / secs

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, max, sum}
 
 import graft.tables.SnapshotLog
@@ -78,14 +78,7 @@ object TableApp {
     if (args.length < 2) usage()
     val wh = args(0)
     val cmd = args(1)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-tables")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.cli("graft-tables", None)
     val log = new SnapshotLog(spark, wh)
 
     def targets(idx: Int): Seq[String] =

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.perfbench.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Checkpoints
@@ -20,20 +16,6 @@ class CheckpointsSpec extends SparkSpec {
   // an RDD source: no row bound Catalyst could use to drop the limit
   private def relation(rows: Int) =
     spark.sparkContext.parallelize(0L until rows.toLong, 32).toDF("id")
-
-  private def jobsOf(action: => Any): Int = {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      ListenerBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
 
   test("collectUpTo returns every row at exactly maxRows and None at maxRows + 1") {
     val df = relation(100)
