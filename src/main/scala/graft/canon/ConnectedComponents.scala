@@ -32,6 +32,8 @@ object ConnectedComponents {
   val SmallGraphEdges = 100000L
 
   /** @param edges DataFrame with string columns (src, dst); undirected.
+    * @param maxIter round cap of the distributed loop; labels still changing
+    *        at the cap raise instead of returning a partial labeling.
     * @param smallGraphEdges driver-fallback threshold (tests force the
     *        distributed path by passing 0).
     * @return DataFrame (id, component) where component = min id reachable.
@@ -121,6 +123,9 @@ object ConnectedComponents {
       iter += 1
     }
     sym.unpersist()
+    // labels still moving at the cap are a partial propagation: returning
+    // them would merge too little, silently — fail instead
+    require(changed == 0, s"connected components did not converge in $maxIter rounds")
     labels
   }
 

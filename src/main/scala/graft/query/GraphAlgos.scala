@@ -396,7 +396,9 @@ object GraphAlgos {
     * tree-like tendrils a core keeps). Iterative peel to fixpoint, same
     * driver discipline as kCore: per-round edge COUNTS only, per-round
     * lineage truncation, O(peel-rounds) triangle passes. Returns the
-    * surviving edges in id-canonical orientation (src, dst).
+    * surviving edges in id-canonical orientation (src, dst); a peel still
+    * removing edges after `maxRounds` rounds raises instead of returning a
+    * partial truss.
     */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
@@ -414,6 +416,7 @@ object GraphAlgos {
       prev = n
       round += 1
     }
+    require(prev == 0, s"k-truss peeling did not converge in $maxRounds rounds")
     e
   }
 
@@ -442,7 +445,9 @@ object GraphAlgos {
     * DataFrame joins: drop all vertices below degree k, recompute degrees
     * on the induced subgraph, repeat to fixpoint. O(peel-rounds) shuffles;
     * the driver sees only per-round edge COUNTS (the CC precedent), never
-    * rows; per-round lineage truncation keeps plans flat.
+    * rows; per-round lineage truncation keeps plans flat. A peel still
+    * removing edges after `maxIter` rounds raises instead of returning a
+    * partial core.
     *
     * No driver-oracle row: the fixpoint's MAXIMALITY is not expressible as
     * a bounded DuckDB recomputation (round count is data-dependent, and
@@ -468,6 +473,7 @@ object GraphAlgos {
       adj = next
       it += 1
     }
+    require(converged, s"k-core peeling did not converge in $maxIter rounds")
     adj.select(col("src").as("id")).distinct()
   }
 

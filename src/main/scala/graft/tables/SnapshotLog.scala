@@ -64,11 +64,11 @@ import org.apache.spark.sql.functions._
   * merge may still plan to scan — serialize writes and maintenance
   * (TableApp) behind whatever job scheduler owns the warehouse.
   */
-/** @param bloomExpectedItems FLOOR capacity of each segment's key bloom.
-  *   The actual capacity is auto-sized to the segment's row count (known
-  *   from the lineage accumulator before the bloom job runs), so a large
-  *   compacted base stays prunable instead of saturating, while small
-  *   deltas never pay for more than the floor.
+/** Each segment's key bloom (and every aux lookup bloom) is sized to the
+  * segment's own row count, known from the lineage accumulator before the
+  * bloom job runs — an upper bound on its distinct keys. A large compacted
+  * base stays prunable instead of saturating, and a small delta writes,
+  * ships to the driver and probes with bloom bytes for its own rows only.
   * @param bloomMaxItems capacity CEILING: a segment holding more keys than
   *   this writes NO bloom (a saturated bloom flags everything anyway —
   *   "missing = always scan" is the same behavior minus the probe cost).
@@ -80,8 +80,8 @@ import org.apache.spark.sql.functions._
   *   ≈ deltaRows × fpp × segments — fpp must sit well under 1/deltaRows for
   *   the typical increment, not at the 1-5% of scan-time bloom defaults
   *   (0.03 at a 10k-row delta flags EVERY segment almost surely). 1e-6
-  *   costs ~28.8 bits/key ≈ 3.5 MB per bloom at the 1M default floor
-  *   and keeps a 10k-row delta's flag-FP chance at ~1% per segment.
+  *   costs ≈ 28.8 bits × segment rows per bloom and keeps a 10k-row
+  *   delta's flag-FP chance at ~1% per segment.
   */
 /** @param bloomProbeBudgetBytes cap on the bloom bytes resident on the
   *   driver (and serialized into one probe job's task closures) at any
@@ -97,7 +97,6 @@ import org.apache.spark.sql.functions._
   */
 class SnapshotLog(spark: SparkSession, baseDir: String,
     autoCompactSegments: Int = 32,
-    bloomExpectedItems: Long = 1L * 1000 * 1000,
     bloomFpp: Double = 1e-6,
     bloomMaxItems: Long = 32L * 1000 * 1000,
     bloomProbeBudgetBytes: Long = 512L << 20) {
@@ -729,10 +728,11 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     // to the runtime-filter confs (maxNumItems=4M, maxNumBits=64M bits) —
     // a 5M-row segment's bloom saturates to fpp≈1e-3 and every increment
     // flags every segment (measured: BloomProbe scan went 0/4 → 4/4).
-    // capacity auto-sizes to the segment's row count (already known from
-    // the lineage tuples — an upper bound on distinct keys), floored at
-    // bloomExpectedItems; above bloomMaxItems no bloom is written (missing
-    // = always scan, which is what a saturated bloom degrades to anyway)
+    // capacity is the segment's row count (already known from the lineage
+    // tuples — an upper bound on distinct keys), at least 1 so a zero-row
+    // segment still gets a valid empty bloom; above bloomMaxItems no bloom
+    // is written (missing = always scan, which is what a saturated bloom
+    // degrades to anyway)
     val segRows = tuples.map(_._2).sum
     // every requested bloom (the merge-key one plus any AUX lookup-column
     // ones) builds in the SAME single key-column read-back pass: one
@@ -741,7 +741,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     // extra scan
     val bloomSpecs = (if (keys.nonEmpty) Seq(keys) else Nil) ++ auxKeys
     if (bloomSpecs.nonEmpty && segRows <= bloomMaxItems) {
-      val capacity = math.max(bloomExpectedItems, segRows)
+      val capacity = math.max(1L, segRows)
       def fresh() = Array.fill(bloomSpecs.size)(
         org.apache.spark.util.sketch.BloomFilter.create(capacity, bloomFpp))
       // zero-row keyed commits (e.g. an empty streaming micro-batch stage)

@@ -122,6 +122,15 @@ class DedupSpec extends SparkSpec {
     assert(dist("v0300") === "v0000" && dist("w3") === "w1" && dist("z9") === "z8")
   }
 
+  test("distributed CC raises when labels are still changing at its round cap") {
+    // a 200-edge chain needs several pointer-jumping rounds; one round
+    // leaves a partial labeling that would merge too little, silently
+    val chain = (0 until 200).map(i => (f"c$i%04d", f"c${i + 1}%04d")).toDF("src", "dst")
+    val e = intercept[IllegalArgumentException](
+      ConnectedComponents.run(spark, chain, maxIter = 1, smallGraphEdges = 0L))
+    assert(e.getMessage.contains("did not converge in 1 rounds"), e.getMessage)
+  }
+
   test("hot firstToken blocks are capped: 10k same-first-token entities, no quadratic pairs") {
     val pending = (0 until 10000).map { i =>
       (f"e$i%05d", s"Hot Token Entity $i", "Organization",

@@ -171,6 +171,14 @@ class GraphAlgosSpec extends SparkSpec {
     assert(GraphAlgos.kCore(g, 1).count() === 8L)
   }
 
+  test("kCore raises when the peel is still running at its round cap") {
+    // a 40-edge path's 2-core peels two leaves per round: ~20 rounds
+    val path = edges((0L until 40L).map(i => i -> (i + 1)): _*)
+    val e = intercept[IllegalArgumentException](GraphAlgos.kCore(path, 2, maxIter = 3))
+    assert(e.getMessage.contains("did not converge in 3 rounds"), e.getMessage)
+    assert(GraphAlgos.kCore(path, 2).isEmpty)
+  }
+
   test("graphStats: one-row report with hand-checked counts") {
     val r = GraphAlgos.graphStats(g).collect().head
     def l(c: String) = r.getLong(r.fieldIndex(c))
@@ -428,6 +436,16 @@ class GraphAlgosSpec extends SparkSpec {
     // K4 is a 4-truss (every edge closes 2 triangles) — nothing peels
     val k4 = edges(1L -> 2L, 1L -> 3L, 1L -> 4L, 2L -> 3L, 2L -> 4L, 3L -> 4L)
     assert(GraphAlgos.kTruss(k4, 4).count() === 6L)
+  }
+
+  test("kTruss raises when the peel is still cascading at its round cap") {
+    // i ~ i+1, i+3, i+4 on 24 vertices: the 4-truss peels from both ends
+    // one layer per round (6 rounds) until nothing is left
+    val strip = edges((for (i <- 0L until 24L; d <- Seq(1L, 3L, 4L) if i + d < 24L)
+      yield i -> (i + d)): _*)
+    val e = intercept[IllegalArgumentException](GraphAlgos.kTruss(strip, 4, maxRounds = 2))
+    assert(e.getMessage.contains("did not converge in 2 rounds"), e.getMessage)
+    assert(GraphAlgos.kTruss(strip, 4).isEmpty)
   }
 
   test("assortativity: path is -1-free hand-check, star -1, regular graph NULL") {

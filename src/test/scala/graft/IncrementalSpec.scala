@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -392,6 +394,39 @@ class IncrementalSpec extends SparkSpec {
     assert(GraphLookup.searchRelationshipsSemantic(facts, res.chunks,
       f0.getString(0), topK = 5,
       dateFrom = Some("1990-01-01"), dateTo = Some("2099-12-31")).count() > 0)
+  }
+
+  test("runIncremental ships and writes bloom bytes in proportion to the rows it commits") {
+    // one increment writes five keyed blooms (entities, chunks, and the
+    // triples key plus its two lookup indexes); each must be sized to its
+    // own segment's rows, not to a fixed floor, or it is written, shipped
+    // to the driver and broadcast at full size on every commit
+    val dir = Files.createTempDirectory("graft-incr-bloom").toString
+    val base = TranscriptGen.Config(numConvs = 3, turnsPerConv = 20, skew = 1)
+    Ingest.run(spark, TranscriptGen.transcripts(spark, base), dir)
+    def listed(keep: String => Boolean): Set[java.nio.file.Path] =
+      Seq("entities", "triples", "chunks").flatMap { t =>
+        val s = Files.list(Paths.get(dir, t))
+        try s.iterator().asScala.filter(p => keep(p.getFileName.toString)).toList
+        finally s.close()
+      }.toSet
+    def blooms = listed(n => n.startsWith("snapshot-") && n.contains(".bloom"))
+    def lineages = listed(n => n.startsWith("snapshot-") && n.endsWith("-lineage"))
+    val (bloomsBefore, lineagesBefore) = (blooms, lineages)
+    val turns = TranscriptGen.transcripts(spark, base.copy(seed = 11L))
+      .withColumn("conv_id", concat(lit("inc-"), $"conv_id")).as[graft.model.Turn]
+    val resultBytes = taskResultBytesOf(Ingest.runIncremental(spark, turns, dir))
+
+    val newBlooms = blooms -- bloomsBefore
+    val newLineages = (lineages -- lineagesBefore).toSeq
+    assert(newBlooms.size === 5, s"new blooms: $newBlooms")
+    val committedRows = spark.read.parquet(newLineages.map(_.toString): _*)
+      .agg(sum($"output_rows")).head().getLong(0)
+    val bloomBytes = newBlooms.toSeq.map(Files.size).sum
+    assert(committedRows > 0L)
+    assert(bloomBytes < 64L * committedRows,
+      s"$bloomBytes bloom bytes for $committedRows committed rows")
+    assert(resultBytes <= (8L << 20), s"increment shipped $resultBytes task-result bytes")
   }
 
   test("runIncremental releases the relations it caches") {

@@ -371,11 +371,11 @@ class SnapshotLogSpec extends SparkSpec {
   }
 
   test("bloom capacity auto-sizes to the segment row count; the ceiling writes no bloom") {
-    // floor capacity 100 but 5,000 keys: a FIXED-capacity bloom would
-    // saturate (every probe hits, no pruning); auto-sizing keeps fpp at
-    // spec and the disjoint increment scans ZERO segments
+    // 5,000 keys: a FIXED small-capacity bloom would saturate (every probe
+    // hits, no pruning); auto-sizing keeps fpp at spec and the disjoint
+    // increment scans ZERO segments
     val dir = Files.createTempDirectory("graft-bloomsize").toString
-    val log = new SnapshotLog(spark, dir, bloomExpectedItems = 100L)
+    val log = new SnapshotLog(spark, dir)
     log.mergeAppend("t", (1L to 5000L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
     log.mergeAppend("t", (9001L to 9100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
     assert(log.lastMergeScan === Some((0, 1)),
@@ -384,13 +384,42 @@ class SnapshotLogSpec extends SparkSpec {
     // above the ceiling no bloom lands (saturated blooms flag everything
     // anyway); the segment is simply always scanned — and stays correct
     val dir2 = Files.createTempDirectory("graft-bloomcap").toString
-    val log2 = new SnapshotLog(spark, dir2, bloomExpectedItems = 100L, bloomMaxItems = 1000L)
+    val log2 = new SnapshotLog(spark, dir2, bloomMaxItems = 1000L)
     log2.mergeAppend("t", (1L to 5000L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
     assert(!Files.exists(Paths.get(dir2, "t", "snapshot-1.bloom")))
     log2.mergeAppend("t", (9001L to 9100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
     assert(log2.lastMergeScan === Some((1, 1)), s"${log2.lastMergeScan}")
     log2.mergeAppend("t", (1L to 5000L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
     assert(log2.read("t").get.count() === 5100L)
+  }
+
+  test("bloom bytes follow the segment's rows: a small merge writes and ships a small bloom") {
+    // 1,000 keys at fpp 1e-6 need ~28.8 bits each (~3.6 KB); a bloom sized
+    // past the segment's own rows shows up here as file bytes and as
+    // task-result bytes (every bloom-building task returns a full copy)
+    val dir = Files.createTempDirectory("graft-bloombytes").toString
+    val log = new SnapshotLog(spark, dir)
+    log.mergeAppend("t", Seq((0L, "v0")).toDF("id", "v"), Seq("id"))
+    val resultBytes = taskResultBytesOf(
+      log.mergeAppend("t", (1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id")))
+    val bloomBytes = Files.size(Paths.get(dir, "t", "snapshot-2.bloom"))
+    assert(bloomBytes <= 8L * 1024, s"1,000-row segment's bloom is $bloomBytes bytes")
+    assert(resultBytes <= (1L << 20), s"merge shipped $resultBytes task-result bytes")
+
+    // a zero-row keyed commit still writes a (tiny) bloom, so the segment
+    // stays skippable rather than always scanned
+    log.mergeAppend("z", Seq.empty[(Long, String)].toDF("id", "v"), Seq("id"))
+    assert(Files.exists(Paths.get(dir, "z", "snapshot-1.bloom")))
+    log.mergeAppend("z", Seq((7L, "v7")).toDF("id", "v"), Seq("id"))
+    assert(log.lastMergeScan === Some((0, 1)), s"${log.lastMergeScan}")
+
+    // small blooms keep pruning: a disjoint merge scans nothing, an
+    // overlapping one scans exactly the segment holding the key
+    log.mergeAppend("t", (5001L to 5010L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    assert(log.lastMergeScan === Some((0, 2)), s"${log.lastMergeScan}")
+    log.mergeAppend("t", Seq((500L, "dup")).toDF("id", "v"), Seq("id"))
+    assert(log.lastMergeScan === Some((1, 3)), s"${log.lastMergeScan}")
+    assert(log.read("t").get.count() === 1011L)
   }
 
   test("hash v1 formula is pinned (legacy warehouses keep verifying/pruning bit-identically)") {

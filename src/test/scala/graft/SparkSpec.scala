@@ -1,9 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.perfbench.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,15 +19,30 @@ abstract class SparkSpec extends AnyFunSuite {
   /** Jobs the shared session starts while `action` runs. */
   protected def jobsOf(action: => Any): Int = {
     val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
+    })(action)
+    jobs.get()
+  }
+
+  /** Bytes the shared session's tasks hand back to the driver as task
+    * results (`taskMetrics.resultSize`, summed) while `action` runs.
+    */
+  protected def taskResultBytesOf(action: => Any): Long = {
+    val bytes = new AtomicLong(0L)
+    listening(new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) bytes.addAndGet(te.taskMetrics.resultSize)
+    })(action)
+    bytes.get()
+  }
+
+  private def listening(listener: SparkListener)(action: => Any): Unit = {
     ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       action
       ListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
   }
 }
