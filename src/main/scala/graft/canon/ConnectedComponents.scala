@@ -1,18 +1,24 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.tables.Checkpoints
 
 /** Connected components as iterative DataFrame joins (SURVEY.md §2.3 J2).
   *
   * Replaces the reference's in-memory Union-Find
   * (/root/reference/src/util/entity_dedup.py:68-97,226-256) with distributed
   * min-label propagation: every vertex repeatedly adopts the smallest label
-  * among itself and its neighbors until fixpoint. Converges in O(diameter)
-  * rounds — alias/similarity graphs have tiny diameters (≤ 3-4), so this beats
-  * the constant-factor overhead of large-star/small-star for our workload
-  * while remaining fully distributed (no GraphFrames jar in /opt/spark/jars).
+  * among itself and its neighbors until fixpoint — with pointer jumping, no
+  * GraphFrames jar and none of large-star/small-star's constant overhead.
+  *
+  * The loop itself is [[minLabel]], the one min-label propagation kernel of
+  * the codebase: connected components run it on symmetrized edges, and
+  * [[graft.query.GraphAlgos.stronglyConnected]] runs it forward and on
+  * reversed edges. Graphs of at most [[SmallGraphEdges]] raw edges take the
+  * driver route instead, through the one bounded collect [[smallEdges]].
   *
   * Scale notes: each round is one shuffle on `id`; a per-round checkpoint
   * truncates lineage so plans don't grow across iterations — a RELIABLE
@@ -41,36 +47,32 @@ object ConnectedComponents {
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
       smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
     import spark.implicits._
-    // small-graph probe and fetch in ONE bounded collect over the RAW edge
-    // relation: if up to the cap fit, that IS the edge list. Probing raw
-    // edges (not the symmetrized+distinct view) matters twice: the
-    // union-with-own-reversal plan evaluates the edge SUBTREE two times
-    // inside one job (each union branch re-runs it — e.g. the declared CC
-    // query's broadcast-NL cosine pair gen ran its whole scan twice), and
-    // the distinct costs a full exchange round. Union-find is direction- and
-    // duplicate-insensitive, so runLocal on the raw rows (self-loops dropped
-    // here) produces the identical labeling. Ids are read as strings, the
-    // type runLocal labels.
-    graft.tables.Checkpoints.collectUpTo(
-        edges.select($"src".cast("string"), $"dst".cast("string")), smallGraphEdges) match {
+    // union-find is direction- and duplicate-insensitive, so runLocal on the
+    // raw rows (self-loops dropped here) gives the distributed labeling; ids
+    // are read as strings, the type runLocal labels
+    smallEdges(edges.select($"src".cast("string").as("src"), $"dst".cast("string").as("dst")),
+        smallGraphEdges) match {
       case Some(rows) => runLocal(spark,
         rows.map(r => (r.getString(0), r.getString(1))).filter { case (a, b) => a != b })
       case None => runDistributed(spark, edges, maxIter)
     }
   }
 
+  /** The (src, dst) rows of `edges` on the driver when there are at most
+    * `maxEdges` of them, else None: one bounded collect is both the
+    * small-graph probe and the fetch. It reads the RAW edges: a union with
+    * their own reversal would run the edge subtree twice in one job (e.g.
+    * the CC query's cosine pair scan), and a distinct costs an exchange.
+    * Shared by CC's and SCC's driver routes.
+    */
+  private[graft] def smallEdges(edges: DataFrame,
+      maxEdges: Long = SmallGraphEdges): Option[Array[Row]] =
+    Checkpoints.collectUpTo(edges.select(col("src"), col("dst")), maxEdges)
+
   private def runDistributed(spark: SparkSession, edges: DataFrame, maxIter: Int): DataFrame = {
     import spark.implicits._
-    // lineage truncation per round: reliable checkpoint when the session has
-    // a checkpoint dir (survives executor loss on a real cluster);
-    // localCheckpoint otherwise (single-JVM local mode)
-    def truncate(df: DataFrame): DataFrame = graft.tables.Checkpoints.truncate(df)
-
-    // large path: symmetrize + distinct once, persisted for the iterative
-    // rounds (the probe's partial scan is not reusable here — the cap bounds
-    // raw rows at ≤ cap+1, so the distinct symmetrized relation is ≤ ~2×cap
-    // away from the raw count and the routing boundary only shifts between
-    // two equally-correct paths).
+    // symmetrize + distinct once, persisted for the iterative rounds (the
+    // probe's partial scan is not reusable here)
     val sym = edges.select($"src", $"dst")
       .union(edges.select($"dst".as("src"), $"src".as("dst")))
       .filter($"src" =!= $"dst")
@@ -82,50 +84,48 @@ object ConnectedComponents {
       .union(edges.select($"src".as("id")))
       .union(edges.select($"dst".as("id")))
       .distinct()
+    try minLabel(sym, vertices, maxIter).withColumnRenamed("label", "component")
+    finally sym.unpersist()
+  }
 
-    var labels = truncate(vertices.withColumn("component", $"id"))
-    var iter = 0
+  /** Fixpoint min-label propagation along edge DIRECTION, the kernel of
+    * connected components (symmetrized edges) and of
+    * [[graft.query.GraphAlgos.stronglyConnected]] (forward and reversed):
+    * label(v) = the min vertex with a directed path to v, for every `id` of
+    * `vertices`, typed like it. Each round is one shuffle on `id` plus
+    * pointer jumping (adopt the label of my label: reachability composes,
+    * so long chains converge in O(log n) rounds, not O(diameter)). Rows
+    * carry their previous label as `old` (messages bring null), so the
+    * changed-count is observed in the job that truncates the round. Labels
+    * still moving after `maxIter` rounds raise, never a partial labeling.
+    *
+    * @param edges materialized directed (src, dst) edges, no self-loops.
+    */
+  private[graft] def minLabel(edges: DataFrame, vertices: DataFrame, maxIter: Int): DataFrame = {
+    val idType = vertices.schema("id").dataType
+    var labels = Checkpoints.truncate(vertices.select(col("id"), col("id").as("label")))
     var changed = 1L
+    var iter = 0
     while (changed > 0 && iter < maxIter) {
-      // 1. neighbor min: for each edge (src,dst), dst hears src's label.
-      //    labels rows carry their own label along as `old` (msgs contribute
-      //    null) so the changed-count is OBSERVED inside the same job that
-      //    materializes the checkpoint — one action per round, not two (the
-      //    former separate join+count paid a full extra job per iteration).
-      val msgs = sym.join(labels, sym("src") === labels("id"))
-        .select(sym("dst").as("id"), $"component", lit(null).cast("string").as("old"))
-      val merged = labels.select($"id", $"component", $"component".as("old")).union(msgs)
-        .groupBy($"id").agg(min($"component").as("component"), max($"old").as("old"))
-      // 2. pointer jumping: adopt the label of my label (labels are always
-      //    vertex ids, so the self-join is total) → O(log n) convergence on
-      //    long chains instead of O(diameter)
-      val jump = merged.select($"id".as("jid"), $"component".as("jcomp"))
-      val obs = org.apache.spark.sql.Observation(s"cc_changed_$iter")
-      val next = truncate(
-        merged.join(jump, merged("component") === jump("jid"), "left")
-          .select($"id",
-            least($"component", coalesce($"jcomp", $"component")).as("component"),
-            $"old")
-          .observe(obs, sum(when($"component" =!= $"old", 1L).otherwise(0L)).as("changed")))
-      // metric delivery is async on the listener bus; await briefly, fall
-      // back to the explicit join+count if it never lands (correctness
-      // unaffected — only the one-job-per-round optimization is lost)
-      changed = {
-        val row = try Some(scala.concurrent.Await.result(
-          obs.future, scala.concurrent.duration.Duration(30, "s")))
-        catch { case _: java.util.concurrent.TimeoutException => None }
-        row.collect { case r if !r.isNullAt(0) => r.getLong(0) }.getOrElse {
-          next.join(labels.withColumnRenamed("component", "old2"), "id")
-            .filter($"component" =!= $"old2").count()
-        }
-      }
+      // 1. neighbor min: for each edge (src,dst), dst hears src's label
+      val msgs = edges.join(labels, edges("src") === labels("id"))
+        .select(edges("dst").as("id"), col("label"), lit(null).cast(idType).as("old"))
+      val merged = labels.select(col("id"), col("label"), col("label").as("old"))
+        .unionByName(msgs)
+        .groupBy(col("id")).agg(min(col("label")).as("label"), max(col("old")).as("old"))
+      // 2. pointer jumping
+      val jump = merged.select(col("id").as("jid"), col("label").as("jlabel"))
+      val (next, n) = Checkpoints.truncateCounting(
+        merged.join(jump, merged("label") === jump("jid"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("jlabel"), col("label"))).as("label"),
+            col("old")),
+        count(when(col("label") =!= col("old"), 1)))
+      changed = n
       labels = next.drop("old")
       iter += 1
     }
-    sym.unpersist()
-    // labels still moving at the cap are a partial propagation: returning
-    // them would merge too little, silently — fail instead
-    require(changed == 0, s"connected components did not converge in $maxIter rounds")
+    require(changed == 0, s"min-label propagation did not converge in $maxIter rounds")
     labels
   }
 

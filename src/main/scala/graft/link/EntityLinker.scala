@@ -27,7 +27,11 @@ import graft.functions.{Embed, Norm}
   * above threshold. The LLM decision is replaced by the deterministic
   * rules of EntityDedup (alias table, suffix strip, type guardrail).
   *
-  * @return input `newEntities` columns + (resolved_uuid, resolved_name,
+  * `link` is lazy: it starts no job. An empty registry needs no branch of
+  * its own — the left join matches nothing, so every row is new.
+  *
+  * @return input `newEntities` columns (`group_id` first; select by name) +
+  *         (resolved_uuid, resolved_name, resolved_ex_summary,
   *         resolved_summary, resolved_aliases, resolved_embedding, is_new) —
   *         matched rows adopt the existing uuid/name/embedding, merge
   *         summaries, and append their surface form to the alias set.
@@ -58,17 +62,6 @@ object EntityLinker {
 
     val newSummary = colOr(newEntities, "summary", nullStr)
     val newAliases = colOr(newEntities, "aliases", emptyStrArr)
-
-    if (existing.isEmpty) {
-      return newEntities
-        .withColumn("resolved_uuid", $"entity_uuid")
-        .withColumn("resolved_name", $"name")
-        .withColumn("resolved_ex_summary", nullStr)
-        .withColumn("resolved_summary", newSummary)
-        .withColumn("resolved_aliases", newAliases)
-        .withColumn("resolved_embedding", $"embedding")
-        .withColumn("is_new", lit(true))
-    }
 
     val exKeyed = existing.select(
       explode(keysUdf($"name")).as("block_key"),

@@ -1,9 +1,14 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
+import graft.canon.ConnectedComponents
 import graft.tables.Checkpoints
 
 /** Graph analytics over the materialized entity/triple graph, expressed as
@@ -48,8 +53,7 @@ object GraphAlgos {
     * in no edge) are absent — join against the vertex table if zeros matter.
     */
   def degrees(edges: DataFrame): DataFrame =
-    sym(edges).groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("degree"))
+    sym(edges).groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
 
   /** Minimum-hop distance from any seed, bounded at `maxHops`:
     * (id, dist) with dist in [0, maxHops]. BFS as frontier expansion — each
@@ -57,29 +61,17 @@ object GraphAlgos {
     * anti-joins the accumulated visited set, so a vertex is labeled the
     * first round it is reached (= its true minimum distance).
     *
-    * Runs exactly `maxHops` rounds (no convergence probe — each round is
-    * lazy until the final truncation), `maxHops` shuffle rounds total.
+    * Runs exactly `maxHops` rounds of [[bfsLevels]], the BFS loop of
+    * [[betweenness]] and [[closeness]] (no convergence probe).
     *
     * @param seeds single-column DataFrame of seed vertex ids.
     */
   def kHop(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val adj = Checkpoints.truncate(sym(edges))
-    val seed = seeds.toDF("id").distinct()
-    var visited = Checkpoints.truncate(seed.withColumn("dist", lit(0)))
-    var frontier = visited.select(col("id"))
-    var h = 1
-    while (h <= maxHops) {
-      val next = frontier.join(adj, frontier("id") === adj("src"))
-        .select(adj("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .withColumn("dist", lit(h))
-      // one truncation materializes the round; frontier/visited reuse it
-      val nextT = Checkpoints.truncate(next)
-      visited = Checkpoints.truncate(visited.unionByName(nextT))
-      frontier = nextT.select(col("id"))
-      h += 1
-    }
-    visited
+    // all seeds share one BFS source, so each vertex keeps its nearest seed's level
+    val starts = seeds.toDF("id").distinct().select(lit(0).as("s"), col("id").as("v"))
+    bfsLevels(Checkpoints.truncate(sym(edges)), starts, maxHops, countPaths = false)
+      .zipWithIndex.map { case (level, d) => level.select(col("v").as("id"), lit(d).as("dist")) }
+      .reduce(_ unionByName _)
   }
 
   /** Fixed-iteration PageRank: (id, rank). The vertex set is the distinct
@@ -99,7 +91,7 @@ object GraphAlgos {
     */
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
       directed: Boolean = false): DataFrame =
-    pageRankImpl(prepareAdj(edges, directed), iters, damping, seeds = None)
+    pageRankImpl(prepareAdj(edges, directed, weighted = false), iters, damping, seeds = None)
 
   /** Personalized PageRank: the teleport (and the dangling redistribution)
     * lands only on `seeds`, uniformly, instead of on every vertex — so rank
@@ -112,7 +104,7 @@ object GraphAlgos {
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int = 5,
       damping: Double = 0.85, directed: Boolean = false): DataFrame =
-    pageRankImpl(prepareAdj(edges, directed), iters, damping,
+    pageRankImpl(prepareAdj(edges, directed, weighted = false), iters, damping,
       seeds = Some(seeds.toDF("id").distinct()))
 
   /** PageRank + degree in one report, sharing ONE materialized symmetric
@@ -121,7 +113,7 @@ object GraphAlgos {
     */
   def centralityReport(edges: DataFrame, iters: Int = 5,
       seeds: Option[DataFrame] = None, damping: Double = 0.85): DataFrame = {
-    val adj = Checkpoints.truncate(sym(edges))
+    val adj = prepareAdj(edges, directed = false, weighted = false)
     val pr = pageRankImpl(adj, iters, damping,
       seeds.map(_.toDF("id").distinct()))
     val deg = adj.groupBy(col("src").as("id")).agg(count(lit(1)).as("degree"))
@@ -134,57 +126,33 @@ object GraphAlgos {
     * and a vertex distributes its rank proportionally to edge weight:
     * rank_{t+1}(v) = (1-d)/n + d * Σ_{u→v} rank_t(u) * w(u,v)/W(u).
     * Undirected: each input edge contributes its weight in both directions.
-    * Same iteration shape as [[pageRank]] (the weighted adjacency carries a
-    * `w` column; W(u) is one aggregation); no dangling handling needed on
-    * the symmetrized form, and directed inputs reuse the dangling term.
+    * Runs [[pageRank]]'s own iteration loop over the weighted adjacency
+    * (W(u) is its out-degree aggregation, a sum of `w`); no dangling
+    * handling needed on the symmetrized form, and directed inputs reuse the
+    * dangling term.
     */
   def pageRankWeighted(edges: DataFrame, iters: Int = 5,
-      damping: Double = 0.85, directed: Boolean = false): DataFrame = {
-    val pairs = if (directed)
-      edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
-    else edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst"))
-    val adj = Checkpoints.truncate(
-      pairs.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
-    val verts = Checkpoints.truncate(
-      adj.select(col("src").as("id"))
-        .union(adj.select(col("dst").as("id"))).distinct())
-    val outW = Checkpoints.truncate(
-      adj.groupBy(col("src").as("id")).agg(sum(col("w")).as("ow")))
-    val n = verts.count().toDouble
-    val d = lit(damping)
-    var ranks = Checkpoints.truncate(
-      verts.withColumn("rank", lit(1.0) / lit(n)))
-    var it = 0
-    while (it < iters) {
-      val withW = ranks.join(outW, Seq("id"), "left")
-      val contribs = withW.filter(col("ow").isNotNull)
-        .join(adj, col("id") === adj("src"))
-        .groupBy(adj("dst").as("id"))
-        .agg(sum(col("rank") * col("w") / col("ow")).as("contrib"))
-      val dangling = withW.filter(col("ow").isNull)
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-      val next = verts.join(contribs, Seq("id"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"),
-          ((lit(1.0) - d) * (lit(1.0) / lit(n)) +
-            d * (coalesce(col("contrib"), lit(0.0)) +
-              col("dmass") * (lit(1.0) / lit(n)))).as("rank"))
-      ranks = Checkpoints.truncate(next)
-      it += 1
-    }
-    ranks
+      damping: Double = 0.85, directed: Boolean = false): DataFrame =
+    pageRankImpl(prepareAdj(edges, directed, weighted = true), iters, damping, seeds = None)
+
+  /** Loop-free weighted adjacency (src, dst, w), lineage-truncated (it feeds
+    * the out-degree aggregation plus one join per iteration): w = the number
+    * of parallel input edges when `weighted`, else 1 on the distinct pairs.
+    */
+  private def prepareAdj(edges: DataFrame, directed: Boolean, weighted: Boolean): DataFrame = {
+    val pairs = edges.select(col("src"), col("dst"))
+    val both = if (directed) pairs
+      else pairs.union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val loopFree = both.filter(col("src") =!= col("dst"))
+    Checkpoints.truncate(
+      if (weighted) loopFree.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
+      else loopFree.distinct().withColumn("w", lit(1L)))
   }
 
-  /** Loop-free deduplicated adjacency, lineage-truncated (it feeds the
-    * out-degree aggregation plus one join per iteration).
+  /** The PageRank loop over a weighted adjacency (src, dst, w): a vertex
+    * sends rank * w / W to each out-neighbor, W = its summed out-weight.
+    * With w = 1 that is rank / outdeg.
     */
-  private def prepareAdj(edges: DataFrame, directed: Boolean): DataFrame =
-    Checkpoints.truncate(if (directed)
-      edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")).distinct()
-    else sym(edges))
-
   private def pageRankImpl(adj: DataFrame, iters: Int, damping: Double,
       seeds: Option[DataFrame]): DataFrame = {
     val baseVerts = adj.select(col("src").as("id"))
@@ -199,37 +167,42 @@ object GraphAlgos {
         .select(col("id"), coalesce(col("is_seed"), lit(false)).as("is_seed"))
       case None => baseVerts.withColumn("is_seed", lit(true))
     })
-    val outDeg = Checkpoints.truncate(
-      adj.groupBy(col("src").as("id")).agg(count(lit(1)).as("od")))
+    val outW = Checkpoints.truncate(
+      adj.groupBy(col("src").as("id")).agg(sum(col("w")).as("od")))
+    // each edge carries its source's out-weight, and each vertex its
+    // teleport share and whether it is dangling (no out-edges), so an
+    // iteration joins the ranks only to the edges
+    val edgesW = Checkpoints.truncate(adj.join(outW.withColumnRenamed("id", "src"), "src"))
     val nTele = verts.filter(col("is_seed")).count().toDouble
-    val withTele = verts.withColumn("tele",
-      when(col("is_seed"), lit(1.0) / lit(nTele)).otherwise(lit(0.0)))
+    val consts = Checkpoints.truncate(verts.join(outW, Seq("id"), "left")
+      .select(col("id"),
+        when(col("is_seed"), lit(1.0) / lit(nTele)).otherwise(lit(0.0)).as("tele"),
+        col("od").isNull.as("dangling")))
     val d = lit(damping)
 
-    var ranks = Checkpoints.truncate(
-      withTele.select(col("id"), col("tele").as("rank")))
+    var ranks = consts.select(col("id"), col("tele").as("rank"), col("dangling"))
     var it = 0
     while (it < iters) {
-      val withDeg = ranks.join(outDeg, Seq("id"), "left")
-      val contribs = withDeg.filter(col("od").isNotNull)
-        .join(adj, col("id") === adj("src"))
-        .groupBy(adj("dst").as("id"))
-        .agg(sum(col("rank") / col("od")).as("contrib"))
+      val contribs = ranks.filter(!col("dangling"))
+        .join(edgesW, col("id") === edgesW("src"))
+        .groupBy(edgesW("dst").as("id"))
+        .agg(sum(col("rank") * col("w") / col("od")).as("contrib"))
       // dangling mass as a 1-row aggregate broadcast into the update — keeps
       // the whole iteration one lazy plan (no driver collect per round);
       // redistributed BY the teleport distribution (uniform in the standard
       // case), so mass is conserved in both variants
-      val dangling = withDeg.filter(col("od").isNull)
+      val dangling = ranks.filter(col("dangling"))
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-      val next = withTele.join(contribs, Seq("id"), "left")
+      val next = consts.join(contribs, Seq("id"), "left")
         .crossJoin(broadcast(dangling))
         .select(col("id"),
           ((lit(1.0) - d) * col("tele") + d * (coalesce(col("contrib"), lit(0.0)) +
-            col("dmass") * col("tele"))).as("rank"))
+            col("dmass") * col("tele"))).as("rank"),
+          col("dangling"))
       ranks = Checkpoints.truncate(next)
       it += 1
     }
-    ranks
+    ranks.select(col("id"), col("rank"))
   }
 
   /** Synchronous label-propagation community detection: (id, label) after
@@ -394,24 +367,24 @@ object GraphAlgos {
     * at least k−2 triangles of that subgraph — the edge-level strengthening
     * of [[kCore]] (a k-truss is always inside the (k−1)-core but prunes
     * tree-like tendrils a core keeps). Iterative peel to fixpoint, same
-    * driver discipline as kCore: per-round edge COUNTS only, per-round
-    * lineage truncation, O(peel-rounds) triangle passes. Returns the
-    * surviving edges in id-canonical orientation (src, dst); a peel still
-    * removing edges after `maxRounds` rounds raises instead of returning a
-    * partial truss.
+    * driver discipline as kCore: per-round edge COUNTS only (observed in
+    * the job that materializes the round), per-round lineage truncation,
+    * O(peel-rounds) triangle passes. Returns the surviving edges in
+    * id-canonical orientation (src, dst); a peel still removing edges after
+    * `maxRounds` rounds raises instead of returning a partial truss.
     */
   def kTruss(edges: DataFrame, k: Int, maxRounds: Int = 100): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    var e = Checkpoints.truncate(sym(edges).filter(col("src") < col("dst")))
-    var prev = e.count()
+    var (e, prev) = Checkpoints.truncateCounting(
+      sym(edges).filter(col("src") < col("dst")), count(lit(1)))
     var round = 0
     while (prev > 0 && round < maxRounds) {
       val und = Checkpoints.truncate(
         e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
-      e = Checkpoints.truncate(
+      val (next, n) = Checkpoints.truncateCounting(
         edgeSupportFromSym(und).filter(col("support") >= k - 2)
-          .select(col("src"), col("dst")))
-      val n = e.count()
+          .select(col("src"), col("dst")), count(lit(1)))
+      e = next
       if (n == prev) return e // fixpoint: every edge meets the bound
       prev = n
       round += 1
@@ -445,9 +418,10 @@ object GraphAlgos {
     * DataFrame joins: drop all vertices below degree k, recompute degrees
     * on the induced subgraph, repeat to fixpoint. O(peel-rounds) shuffles;
     * the driver sees only per-round edge COUNTS (the CC precedent), never
-    * rows; per-round lineage truncation keeps plans flat. A peel still
-    * removing edges after `maxIter` rounds raises instead of returning a
-    * partial core.
+    * rows, each observed in the job that materializes its round;
+    * per-round lineage truncation keeps plans flat. A peel still removing
+    * edges after `maxIter` rounds raises instead of returning a partial
+    * core.
     *
     * No driver-oracle row: the fixpoint's MAXIMALITY is not expressible as
     * a bounded DuckDB recomputation (round count is data-dependent, and
@@ -456,18 +430,16 @@ object GraphAlgos {
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var adj = Checkpoints.truncate(sym(edges))
-    var before = adj.count()
+    var (adj, before) = Checkpoints.truncateCounting(sym(edges), count(lit(1)))
     var it = 0
     var converged = before == 0L
     while (!converged && it < maxIter) {
       val keep = adj.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("id"))
-      val next = Checkpoints.truncate(
+      val (next, after) = Checkpoints.truncateCounting(
         adj.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst")))
-      val after = next.count()
+          .select(col("src"), col("dst")), count(lit(1)))
       converged = after == before || after == 0L
       before = after
       adj = next
@@ -494,18 +466,13 @@ object GraphAlgos {
       maxHops: Int = 8): DataFrame = {
     val spark = edges.sparkSession
     val idField = edges.schema("src")
-    val seed = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(srcId)), 1),
-      org.apache.spark.sql.types.StructType(Seq(idField.copy(name = "id"))))
+    val seed = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(srcId)), 1),
+      StructType(Seq(idField.copy(name = "id"))))
     val dists = Checkpoints.truncate(kHop(edges, seed, maxHops))
     val dDst = dists.filter(col("id") === lit(dstId))
       .select(col("dist")).collect().headOption.map(_.getInt(0))
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("step",
-          org.apache.spark.sql.types.IntegerType),
-        idField.copy(name = "vertex"))))
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("step", IntegerType), idField.copy(name = "vertex"))))
     dDst match {
       case None => empty
       case Some(d) =>
@@ -534,101 +501,124 @@ object GraphAlgos {
   }
 
   /** Strongly connected components of a DIRECTED graph: (id, component)
-    * where component = the smallest vertex id in the SCC (isolated and
-    * acyclic vertices are their own singleton components).
+    * where component = the smallest vertex id in the SCC under the id
+    * column's own ordering (numeric for bigint). The vertex set is the
+    * endpoints of the non-self-loop edges; acyclic vertices are singletons.
     *
-    * Forward-backward min-label peeling (the distributed FW-BW/coloring
-    * family): each pass computes to fixpoint fwd(v) = min vertex with a
-    * directed path TO v and bwd(v) = min vertex reachable FROM v (both with
-    * pointer jumping — label(label(v)) is always a valid label because
-    * reachability composes). A vertex with fwd(v) == bwd(v) == m is mutually
-    * reachable with m, and every member of SCC(m) shares both labels, so the
-    * filter peels COMPLETE SCCs — at minimum the SCC of every locally
-    * minimal vertex — and the remainder recurses on the induced subgraph.
-    * Pass count is bounded by the longest chain of SCCs in the condensation
-    * DAG, not by the SCC count.
-    *
-    * Scale: each fixpoint round is one shuffle on the vertex id (identical
-    * shape to [[graft.canon.ConnectedComponents]]); the driver sees only
-    * per-round changed-counts and per-pass remaining-counts, never rows.
+    * Graphs of at most [[ConnectedComponents.SmallGraphEdges]] raw edges
+    * take connected components' driver route: the same bounded collect
+    * ([[ConnectedComponents.smallEdges]]), then [[sccLocal]]. Larger graphs,
+    * and ids that do not hash and order on the driver as in Spark (floating
+    * point, binary, collated strings, nested), run [[sccPeel]].
     */
   def stronglyConnected(edges: DataFrame, maxIter: Int = 25): DataFrame = {
+    val idType = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).schema("id").dataType
+    val pairs = edges.select(col("src").cast(idType).as("src"), col("dst").cast(idType).as("dst"))
+    val ord: Option[Ordering[Any]] = idType match {
+      case StringType => Some(Ordering.by((v: Any) => UTF8String.fromString(v.asInstanceOf[String])))
+      case LongType | IntegerType | ShortType | ByteType | DateType | TimestampType | _: DecimalType =>
+        Some(Ordering.fromLessThan((a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0))
+      case _ => None
+    }
+    ord.flatMap(o => ConnectedComponents.smallEdges(pairs)
+        .map(sccLocal(pairs.sparkSession, idType, o, _)))
+      .getOrElse(sccPeel(pairs, maxIter))
+  }
+
+  /** SCCs of the collected (src, dst) rows on the driver: iterative Tarjan
+    * (an explicit DFS stack, so no path length meets the JVM stack), each
+    * component labeled by its minimum id under `ord`.
+    */
+  private[graft] def sccLocal(spark: SparkSession, idType: DataType, ord: Ordering[Any],
+      rows: Array[Row]): DataFrame = {
+    val ids = mutable.ArrayBuffer.empty[Any]
+    val index = mutable.HashMap.empty[Any, Int]
+    def vertex(id: Any) = index.getOrElseUpdate(id, { ids += id; ids.length - 1 })
+    val out = rows.collect {
+      case r if !r.isNullAt(0) && !r.isNullAt(1) && r.get(0) != r.get(1) =>
+        (vertex(r.get(0)), vertex(r.get(1)))
+    }.groupMap(_._1)(_._2)
+    val n = ids.length
+    val order = Array.fill(n)(-1) // discovery order, -1 = unvisited
+    val low = new Array[Int](n)
+    val arc = new Array[Int](n)   // next out-arc to follow
+    val label = new Array[Any](n) // set when the vertex's SCC closes
+    val open = mutable.ArrayBuffer.empty[Int] // Tarjan's stack
+    val path = mutable.ArrayBuffer.empty[Int] // the DFS call stack
+    var seen = 0
+    def enter(v: Int): Unit = { order(v) = seen; low(v) = seen; seen += 1; open += v; path += v }
+    for (root <- 0 until n if order(root) < 0) {
+      enter(root)
+      while (path.nonEmpty) {
+        val v = path.last
+        val succ = out.getOrElse(v, Array.emptyIntArray)
+        if (arc(v) < succ.length) {
+          val w = succ(arc(v))
+          arc(v) += 1
+          if (order(w) < 0) enter(w)
+          else if (label(w) == null) low(v) = math.min(low(v), order(w)) // w is open
+        } else {
+          path.dropRightInPlace(1)
+          if (path.nonEmpty) low(path.last) = math.min(low(path.last), low(v))
+          if (low(v) == order(v)) { // v roots an SCC: the open vertices from v up
+            val members = open.drop(open.lastIndexOf(v))
+            open.dropRightInPlace(members.length)
+            val m = members.map(ids).min(ord)
+            members.foreach(label(_) = m)
+          }
+        }
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(ids.indices.map(i => Row(ids(i), label(i))): _*),
+      StructType(Seq(StructField("id", idType), StructField("component", idType))))
+  }
+
+  /** Distributed SCC by forward-backward min-label peeling (the FW-BW
+    * family). Each pass runs connected components' kernel
+    * ([[ConnectedComponents.minLabel]]) forward, fwd(v) = min vertex with a
+    * path TO v, and on the reversed edges, bwd(v) = min vertex reachable
+    * FROM v. fwd(v) == bwd(v) == m makes v mutually reachable with m, and
+    * all of SCC(m) shares both labels, so each pass peels COMPLETE SCCs (at
+    * least that of every locally minimal vertex) and the rest recurses.
+    *
+    * Passes = the longest chain in the condensation DAG: an acyclic chain
+    * needs a pass per chain vertex, so a directed path of more than
+    * `maxIter` vertices raises "SCC peeling did not converge" at the cap.
+    * The driver sees only per-round changed-counts and per-pass
+    * remaining-counts, each observed in the job that materializes it.
+    */
+  private[graft] def sccPeel(edges: DataFrame, maxIter: Int): DataFrame = {
     val dir0 = edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-    var remaining = Checkpoints.truncate(
+    var (remaining, nRemaining) = Checkpoints.truncateCounting(
       dir0.select(col("src").as("id"))
-        .union(dir0.select(col("dst").as("id"))).distinct())
+        .union(dir0.select(col("dst").as("id"))).distinct(), count(lit(1)))
     var rem = Checkpoints.truncate(dir0)
-    var out: DataFrame = null
+    var out = remaining.select(col("id"), col("id").as("component")).limit(0)
     var pass = 0
-    var nRemaining = remaining.count()
     while (nRemaining > 0 && pass < maxIter) {
-      val fwd = minReachLabel(rem, remaining, maxIter)
-      val bwd = minReachLabel(
-        rem.select(col("dst").as("src"), col("src").as("dst")), remaining, maxIter)
+      val fwd = ConnectedComponents.minLabel(rem, remaining, maxIter * 4)
+      val bwd = ConnectedComponents.minLabel(
+        rem.select(col("dst").as("src"), col("src").as("dst")), remaining, maxIter * 4)
       val scc = Checkpoints.truncate(
         fwd.join(bwd.withColumnRenamed("label", "blabel"), "id")
           .filter(col("label") === col("blabel"))
           .select(col("id"), col("label").as("component")))
-      out = if (out == null) scc else out.unionByName(scc)
-      remaining = Checkpoints.truncate(remaining.join(scc, Seq("id"), "left_anti"))
+      out = out.unionByName(scc)
+      val (left, n) = Checkpoints.truncateCounting(
+        remaining.join(scc, Seq("id"), "left_anti"), count(lit(1)))
+      remaining = left
+      nRemaining = n
       rem = Checkpoints.truncate(
         rem.join(scc.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(scc.select(col("id").as("dst")), Seq("dst"), "left_anti")
           .select(col("src"), col("dst")))
-      nRemaining = remaining.count()
       pass += 1
     }
     require(nRemaining == 0, s"SCC peeling did not converge in $maxIter passes")
     out
   }
-
-  /** Fixpoint min-label propagation along edge DIRECTION (src's label flows
-    * to dst), with pointer jumping; the CC loop's observed-changed-count
-    * pattern (one job per round). Returns (id, label) for every vertex.
-    */
-  private def minReachLabel(edges: DataFrame, vertices: DataFrame,
-      maxRounds: Int): DataFrame = {
-    val idType = vertices.schema("id").dataType
-    var labels = Checkpoints.truncate(
-      vertices.select(col("id"), col("id").as("label")))
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds * 4) {
-      val msgs = edges.join(labels, edges("src") === labels("id"))
-        .select(edges("dst").as("id"), col("label"),
-          lit(null).cast(idType).as("old"))
-      val merged = labels
-        .select(col("id"), col("label"), col("label").as("old"))
-        .unionByName(msgs)
-        .groupBy(col("id"))
-        .agg(min(col("label")).as("label"), max(col("old")).as("old"))
-      val jump = merged.select(col("id").as("jid"), col("label").as("jlabel"))
-      val obs = org.apache.spark.sql.Observation(
-        s"scc_changed_${sccObsId.incrementAndGet()}")
-      val next = Checkpoints.truncate(
-        merged.join(jump, merged("label") === jump("jid"), "left")
-          .select(col("id"),
-            least(col("label"), coalesce(col("jlabel"), col("label"))).as("label"),
-            col("old"))
-          .observe(obs, sum(when(col("label") =!= col("old"), 1L)
-            .otherwise(0L)).as("changed")))
-      changed = {
-        val row = try Some(scala.concurrent.Await.result(
-          obs.future, scala.concurrent.duration.Duration(30, "s")))
-        catch { case _: java.util.concurrent.TimeoutException => None }
-        row.collect { case r if !r.isNullAt(0) => r.getLong(0) }.getOrElse {
-          next.join(labels.withColumnRenamed("label", "old2"), "id")
-            .filter(col("label") =!= col("old2")).count()
-        }
-      }
-      labels = next.drop("old")
-      round += 1
-    }
-    labels
-  }
-
-  private val sccObsId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** One-row graph health report over the undirected graph: vertex/edge
     * counts, connected-component count + largest size, degree profile
@@ -798,32 +788,17 @@ object GraphAlgos {
       sources: Option[DataFrame] = None): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val adj = Checkpoints.truncate(sym(edges))
-    val verts = adj.select(col("src").as("id")).distinct()
-    val srcs = sources.map(_.toDF("id").distinct()).getOrElse(verts)
-    // forward BFS: levels(d) = (s, v, sigma) for vertices first reached at
-    // depth d, sigma = number of distinct shortest s→v paths
-    val levels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    levels += Checkpoints.truncate(srcs.select(
-      col("id").as("s"), col("id").as("v"), lit(1L).as("sigma")))
-    var visited = levels(0).select(col("s"), col("v"))
-    var d = 1
-    while (d <= maxDepth) {
-      val next = levels(d - 1).join(adj, levels(d - 1)("v") === adj("src"))
-        .select(col("s"), adj("dst").as("v"), col("sigma"))
-        .join(visited, Seq("s", "v"), "left_anti")
-        .groupBy(col("s"), col("v"))
-        .agg(sum(col("sigma")).as("sigma"))
-      val nextT = Checkpoints.truncate(next)
-      levels += nextT
-      visited = Checkpoints.truncate(
-        visited.unionByName(nextT.select(col("s"), col("v"))))
-      d += 1
-    }
+    val srcs = sources.map(_.toDF("id").distinct())
+      .getOrElse(adj.select(col("src").as("id")).distinct())
+    val levels = bfsLevels(adj, srcs.select(col("id").as("s"), col("id").as("v")),
+      maxDepth, countPaths = true)
     // backward accumulation: deltaCur holds δ for the level being consumed
     var deltaCur = levels(maxDepth).select(
       col("s"), col("v"), lit(0.0).as("delta"))
-    var acc = deltaCur // deepest level's δ = 0: contributes nothing but keeps
-    d = maxDepth       // every reached (s,v≠s) pair present in the output sum
+    // deepest level's δ = 0: contributes nothing but keeps every reached
+    // (s,v≠s) pair present in the output sum
+    var acc = deltaCur
+    var d = maxDepth
     while (d >= 1) {
       val wlv = levels(d).join(deltaCur, Seq("s", "v"))
       val contrib = wlv.join(adj, wlv("v") === adj("src"))
@@ -854,36 +829,53 @@ object GraphAlgos {
     * (Boldi–Vigna); both are exact when maxDepth ≥ the diameter, and the
     * bounded horizon is the standard web-scale relaxation otherwise.
     *
-    * Shape: the same all-sources BFS as [[betweenness]]'s forward pass —
-    * maxDepth rounds of frontier ⋈ adjacency with an anti-join, O(n·reached)
-    * state, one final aggregation per source. At 10^12-edge scale run it
-    * over a source sample or swap the exact BFS for HyperBall-style HLL
-    * neighborhood sketches ([[graft.ops.Sketch.hllRegisters]] is the
-    * register layer that approach needs).
+    * Shape: [[betweenness]]'s forward BFS loop itself, without the path
+    * counts — maxDepth rounds of frontier ⋈ adjacency with an anti-join,
+    * O(n·reached) state, one final aggregation per source. At 10^12-edge
+    * scale run it over a source sample or swap the exact BFS for
+    * HyperBall-style HLL neighborhood sketches
+    * ([[graft.ops.Sketch.hllRegisters]] is the register layer that approach
+    * needs).
     */
   def closeness(edges: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val adj = Checkpoints.truncate(sym(edges))
-    var level = Checkpoints.truncate(adj.select(col("src").as("s")).distinct()
-      .select(col("s"), col("s").as("v")))
-    var visited = level
-    // accumulate (s, dist) per reached v>0 level; distances are the level no.
-    var acc = level.filter(lit(false)).withColumn("dist", lit(0))
-    var d = 1
-    while (d <= maxDepth) {
-      val next = level.join(adj, level("v") === adj("src"))
-        .select(col("s"), adj("dst").as("v")).distinct()
-        .join(visited, Seq("s", "v"), "left_anti")
-      val nextT = Checkpoints.truncate(next)
-      level = nextT
-      visited = Checkpoints.truncate(visited.unionByName(nextT))
-      acc = acc.unionByName(nextT.withColumn("dist", lit(d)))
-      d += 1
-    }
-    acc.groupBy(col("s").as("id")).agg(
+    val starts = adj.select(col("src").as("s"), col("src").as("v")).distinct()
+    // (s, v, dist) for every v ≠ s reached; distances are the level number
+    val reached = bfsLevels(adj, starts, maxDepth, countPaths = false).zipWithIndex.drop(1)
+      .map { case (level, d) => level.select(col("s"), col("v"), lit(d).as("dist")) }
+      .reduce(_ unionByName _)
+    reached.groupBy(col("s").as("id")).agg(
       count(lit(1)).as("reached"),
       (count(lit(1)).cast("double") / sum(col("dist")).cast("double")).as("closeness"),
       sum(lit(1.0) / col("dist").cast("double")).as("harmonic"))
+  }
+
+  /** Multi-source BFS over the symmetric adjacency, the loop of [[kHop]],
+    * [[closeness]] and [[betweenness]]'s forward pass: levels(d) =
+    * (s, v, sigma) for the vertices v first reached from source s at depth
+    * d, d = 0..maxDepth (level 0 = `starts`, (s, v) rows). With
+    * `countPaths`, sigma = the number of distinct shortest s→v paths
+    * (summed over predecessors, never enumerated); otherwise sigma stays 1,
+    * so a path-dense graph cannot overflow a count the caller never reads.
+    * Each level is lineage-truncated.
+    */
+  private def bfsLevels(adj: DataFrame, starts: DataFrame, maxDepth: Int,
+      countPaths: Boolean): IndexedSeq[DataFrame] = {
+    val levels = mutable.ArrayBuffer(Checkpoints.truncate(starts.withColumn("sigma", lit(1L))))
+    var visited = levels(0).select(col("s"), col("v"))
+    while (levels.length <= maxDepth) {
+      val next = levels.last.join(adj, levels.last("v") === adj("src"))
+        .select(col("s"), adj("dst").as("v"), col("sigma"))
+        .join(visited, Seq("s", "v"), "left_anti")
+        .groupBy(col("s"), col("v"))
+        .agg((if (countPaths) sum(col("sigma")) else max(col("sigma"))).as("sigma"))
+      val nextT = Checkpoints.truncate(next)
+      levels += nextT
+      visited = Checkpoints.truncate(
+        visited.unionByName(nextT.select(col("s"), col("v"))))
+    }
+    levels.toIndexedSeq
   }
 
   /** Weighted shortest distances from `seeds` under a bounded relaxation
@@ -948,25 +940,31 @@ object GraphAlgos {
     */
   def hyperBall(edges: DataFrame, maxDepth: Int, p: Int = 8): DataFrame = {
     require(maxDepth >= 0, s"maxDepth must be >= 0, got $maxDepth")
+    hyperBallRounds(edges, maxDepth, p).last
+  }
+
+  /** The [[hyperBall]] recurrence's registers after each round 0..maxDepth,
+    * each round lineage-truncated.
+    */
+  private def hyperBallRounds(edges: DataFrame, maxDepth: Int, p: Int): Seq[DataFrame] = {
     val adj = Checkpoints.truncate(sym(edges))
-    val verts = adj.select(col("src").as("id")).distinct()
-    var regs = Checkpoints.truncate(graft.ops.Sketch.hllRegistersBy(
-      verts.withColumn("member", col("id")), Seq("id"), "member", p))
-    var d = 1
-    while (d <= maxDepth) {
+    val rounds = mutable.ArrayBuffer(Checkpoints.truncate(graft.ops.Sketch.hllRegistersBy(
+      adj.select(col("src").as("id"), col("src").as("member")).distinct(), Seq("id"), "member", p)))
+    while (rounds.length <= maxDepth) {
+      val regs = rounds.last
       val nbr = regs.join(adj, regs("id") === adj("src"))
         .select(adj("dst").as("id"), col("register"), col("max_rho"))
-      regs = Checkpoints.truncate(
+      rounds += Checkpoints.truncate(
         nbr.unionByName(regs)
           .groupBy(col("id"), col("register"))
           .agg(max(col("max_rho")).as("max_rho")))
-      d += 1
     }
-    regs
+    rounds.toSeq
   }
 
   /** Approximate neighborhood function + harmonic centrality from the
-    * [[hyperBall]] recurrence: (id, ball_est, harmonic_est) where ball_est
+    * [[hyperBall]] recurrence (its own round loop, estimating every
+    * round's registers): (id, ball_est, harmonic_est) where ball_est
     * estimates |B(v, maxDepth)| (self included) and
     * harmonic_est ≈ Σ_u 1/d(v,u) via Σ_d (est_d − est_{d−1})/d. Per-round
     * shrinkage (estimates can wiggle at the linear-counting boundary even
@@ -975,24 +973,9 @@ object GraphAlgos {
     */
   def hyperBallHarmonic(edges: DataFrame, maxDepth: Int, p: Int = 8): DataFrame = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val adj = Checkpoints.truncate(sym(edges))
-    val verts = adj.select(col("src").as("id")).distinct()
-    var regs = Checkpoints.truncate(graft.ops.Sketch.hllRegistersBy(
-      verts.withColumn("member", col("id")), Seq("id"), "member", p))
-    def estAt(d: Int) = graft.ops.Sketch.hllEstimateBy(regs, Seq("id"), p)
-      .withColumn("d", lit(d))
-    var ests = estAt(0)
-    var d = 1
-    while (d <= maxDepth) {
-      val nbr = regs.join(adj, regs("id") === adj("src"))
-        .select(adj("dst").as("id"), col("register"), col("max_rho"))
-      regs = Checkpoints.truncate(
-        nbr.unionByName(regs)
-          .groupBy(col("id"), col("register"))
-          .agg(max(col("max_rho")).as("max_rho")))
-      ests = ests.unionByName(estAt(d))
-      d += 1
-    }
+    val ests = hyperBallRounds(edges, maxDepth, p).zipWithIndex.map { case (regs, d) =>
+      graft.ops.Sketch.hllEstimateBy(regs, Seq("id"), p).withColumn("d", lit(d))
+    }.reduce(_ unionByName _)
     val byId = Window.partitionBy(col("id")).orderBy(col("d"))
     ests
       .withColumn("growth",

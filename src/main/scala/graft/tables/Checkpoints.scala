@@ -1,11 +1,18 @@
 package graft.tables
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.util.concurrent.TimeoutException
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 
 /** Lineage-truncation and bounded-collect helpers shared by every stage that
-  * eagerly materializes a small intermediate (connected-components
-  * iterations, dedup's pending table, in-memory ingest's entity/remap/topic
-  * tables) or fetches one to the driver when it is small enough.
+  * eagerly materializes a small intermediate (the graph kernels' iteration
+  * rounds, with their convergence counts observed in the same job; dedup's
+  * pending table; in-memory ingest's entity/remap/topic tables) or fetches
+  * one to the driver when it is small enough.
   *
   * `localCheckpoint` truncates lineage to executor-local blocks: on a real
   * cluster, losing an executor makes the data unrecoverable (no lineage left
@@ -26,6 +33,22 @@ object Checkpoints {
       try df.checkpoint()
       finally df.unpersist()
     } else df.localCheckpoint()
+
+  /** [[truncate]]s `df` and returns it with `metric`, a Long aggregate of
+    * its rows (null counts as 0) observed in the job that materializes it,
+    * so a loop's per-round convergence count costs no job of its own. If
+    * the async metric has not landed after 30 s, it is aggregated over the
+    * truncated frame in a separate job instead.
+    */
+  private[graft] def truncateCounting(df: DataFrame, metric: Column): (DataFrame, Long) = {
+    val obs = Observation(s"graft_observed_${observations.incrementAndGet()}")
+    val t = truncate(df.observe(obs, metric.as("metric")))
+    val row = try Await.result(obs.future, Duration(30, "s"))
+    catch { case _: TimeoutException => t.agg(metric).head() }
+    (t, if (row.isNullAt(0)) 0L else row.getLong(0))
+  }
+
+  private val observations = new AtomicLong(0L)
 
   /** Truncate SEVERAL mutually-independent small intermediates in ONE job:
     * each is marked for local checkpoint lazily, then a single union action

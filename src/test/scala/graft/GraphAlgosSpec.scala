@@ -176,7 +176,10 @@ class GraphAlgosSpec extends SparkSpec {
     val path = edges((0L until 40L).map(i => i -> (i + 1)): _*)
     val e = intercept[IllegalArgumentException](GraphAlgos.kCore(path, 2, maxIter = 3))
     assert(e.getMessage.contains("did not converge in 3 rounds"), e.getMessage)
-    assert(GraphAlgos.kCore(path, 2).isEmpty)
+    // each round's edge count is observed in the job that materializes it
+    val jobs = jobsOf(assert(GraphAlgos.kCore(path, 2).isEmpty))
+    info(s"kCore(path40, 2): $jobs jobs")
+    assert(jobs <= 63, s"kCore ran $jobs jobs")
   }
 
   test("graphStats: one-row report with hand-checked counts") {
@@ -278,9 +281,15 @@ class GraphAlgosSpec extends SparkSpec {
     assert(GraphAlgos.shortestPath(edges(0L -> 1L, 5L -> 6L), 0L, 6L).isEmpty)
   }
 
-  private def scc(es: (Long, Long)*): Map[Long, Long] =
-    GraphAlgos.stronglyConnected(es.toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
+  // every fixture runs both routes: the driver Tarjan behind the public
+  // call and the distributed peel, which must agree with it
+  private def scc(es: (Long, Long)*): Map[Long, Long] = {
+    val df = es.toDF("src", "dst")
+    val driver = GraphAlgos.stronglyConnected(df).as[(Long, Long)].collect().toMap
+    val peel = GraphAlgos.sccPeel(df, maxIter = 25).as[(Long, Long)].collect().toMap
+    assert(peel === driver)
+    driver
+  }
 
   test("stronglyConnected: two cycles joined by a one-way bridge stay separate") {
     // cycle {0,1,2} → bridge 2→10 → cycle {10,11,12}
@@ -293,6 +302,48 @@ class GraphAlgosSpec extends SparkSpec {
   test("stronglyConnected: a DAG is all singletons") {
     val got = scc(0L -> 1L, 0L -> 2L, 1L -> 3L, 2L -> 3L, 3L -> 4L)
     assert(got === Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    // a 40-vertex directed path: the peel would need a pass per vertex,
+    // past its 25-pass cap; the driver route solves it in one collect
+    val path = GraphAlgos.stronglyConnected(edges((0L until 39L).map(i => i -> (i + 1)): _*))
+      .as[(Long, Long)].collect().toMap
+    assert(path === (0L until 40L).map(i => i -> i).toMap)
+    val e = intercept[IllegalArgumentException](
+      GraphAlgos.sccPeel(edges((0L until 39L).map(i => i -> (i + 1)): _*), maxIter = 3))
+    assert(e.getMessage.contains("SCC peeling did not converge in 3 passes"), e.getMessage)
+  }
+
+  test("stronglyConnected matches brute-force reachability on random digraphs") {
+    val rnd = new scala.util.Random(20261019L)
+    (1 to 20).foreach { g =>
+      val n = 25 + rnd.nextInt(11)
+      val es = Seq.fill(n + rnd.nextInt(n))((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      // reach(u) = every vertex with a directed path from u (u included)
+      val out = es.filter { case (a, b) => a != b }.groupMap(_._1)(_._2)
+      def reach(u: Long): Set[Long] = {
+        var seen = Set(u)
+        var frontier = List(u)
+        while (frontier.nonEmpty) {
+          val next = frontier.flatMap(out.getOrElse(_, Nil)).filterNot(seen)
+          seen ++= next
+          frontier = next.distinct
+        }
+        seen
+      }
+      val verts = out.keySet ++ out.values.flatten
+      val reachOf = verts.map(v => v -> reach(v)).toMap
+      val expected = verts.map(v => v -> verts.filter(u => reachOf(v)(u) && reachOf(u)(v)).min).toMap
+      val got = GraphAlgos.stronglyConnected(edges(es: _*)).as[(Long, Long)].collect().toMap
+      assert(got === expected, s"graph $g: $es")
+    }
+  }
+
+  test("stronglyConnected labels by the id type's own ordering") {
+    // bigint: 9 < 10 numerically (as strings "10" < "9")
+    assert(scc(9L -> 10L, 10L -> 9L) === Map(9L -> 9L, 10L -> 9L))
+    val str = GraphAlgos.stronglyConnected(
+        Seq("b" -> "a", "a" -> "b", "a" -> "c", "c" -> "c").toDF("src", "dst"))
+      .as[(String, String)].collect().toMap
+    assert(str === Map("a" -> "a", "b" -> "a", "c" -> "c"))
   }
 
   test("stronglyConnected: mutual pair + chained SCCs peel in order") {
@@ -445,7 +496,10 @@ class GraphAlgosSpec extends SparkSpec {
       yield i -> (i + d)): _*)
     val e = intercept[IllegalArgumentException](GraphAlgos.kTruss(strip, 4, maxRounds = 2))
     assert(e.getMessage.contains("did not converge in 2 rounds"), e.getMessage)
-    assert(GraphAlgos.kTruss(strip, 4).isEmpty)
+    // each round's edge count is observed in the job that materializes it
+    val jobs = jobsOf(assert(GraphAlgos.kTruss(strip, 4).isEmpty))
+    info(s"kTruss(strip24, 4): $jobs jobs")
+    assert(jobs <= 82, s"kTruss ran $jobs jobs")
   }
 
   test("assortativity: path is -1-free hand-check, star -1, regular graph NULL") {

@@ -83,6 +83,33 @@ class IncrementalSpec extends SparkSpec {
     assert(linked("n2") === ("ex2", false), s"cosine gate must merge (cos=$cos)")
   }
 
+  test("link starts no job against a committed registry; an empty one marks every row new") {
+    import graft.link.EntityLinker
+    def ent(uuid: String, name: String) =
+      (uuid, name, "Organization", graft.functions.Embed.embed(name).toSeq, "default")
+    val cols = Seq("entity_uuid", "name", "entity_type", "embedding", "group_id")
+    val log = new SnapshotLog(spark, Files.createTempDirectory("graft-link").toString)
+    log.mergeUpsert("entities", Seq(ent("ex1", "Quantum Dynamics Inc.")).toDF(cols: _*),
+      Seq("entity_uuid"), Seq("group_id"))
+    log.mergeUpsert("entities", Seq(ent("ex1", "Quantum Dynamics Inc."),
+      ent("ex2", "Granite Foods LLC")).toDF(cols: _*), Seq("entity_uuid"), Seq("group_id"))
+    val committed = log.read("entities").get
+    val incoming = Seq(ent("n1", "Quantum Dynamics"), ent("n2", "Harbor Logistics"))
+      .toDF(cols: _*)
+    // the merge-on-read registry is only scanned when the result runs
+    val jobs = jobsOf(EntityLinker.link(spark, incoming, committed))
+    assert(jobs === 0, s"link started $jobs jobs at call time")
+
+    val fresh = EntityLinker.link(spark, incoming, committed.limit(0))
+      .select($"entity_uuid", $"name", $"embedding", $"resolved_uuid", $"resolved_name",
+        $"resolved_embedding", $"is_new")
+      .as[(String, String, Seq[Double], String, String, Seq[Double], Boolean)].collect()
+    assert(fresh.map(_._1).sorted.toSeq === Seq("n1", "n2"))
+    fresh.foreach { case (uuid, name, emb, rUuid, rName, rEmb, isNew) =>
+      assert(isNew && rUuid === uuid && rName === name && rEmb === emb, uuid)
+    }
+  }
+
   test("split-corpus parity: A then incremental-B matches one batch run (J4 invariant)") {
     val cfg = TranscriptGen.Config(numConvs = 8, turnsPerConv = 25, skew = 2)
     val all = TranscriptGen.transcripts(spark, cfg).cache()
