@@ -2,7 +2,9 @@ package graft.canon
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.tables.Checkpoints
 
@@ -37,25 +39,42 @@ object ConnectedComponents {
     */
   val SmallGraphEdges = 100000L
 
-  /** @param edges DataFrame with string columns (src, dst); undirected.
+  /** @param edges DataFrame with columns (src, dst) of one id type;
+    *        undirected.
     * @param maxIter round cap of the distributed loop; labels still changing
     *        at the cap raise instead of returning a partial labeling.
     * @param smallGraphEdges driver-fallback threshold (tests force the
     *        distributed path by passing 0).
-    * @return DataFrame (id, component) where component = min id reachable.
+    * @return DataFrame (id, component), typed like the ids, where component
+    *         = the min id reachable under the id type's own ordering — the
+    *         same answer on the driver route and the distributed one.
     */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
       smallGraphEdges: Long = SmallGraphEdges): DataFrame = {
-    import spark.implicits._
+    val idType = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).schema("id").dataType
+    val pairs = edges.select(col("src").cast(idType).as("src"), col("dst").cast(idType).as("dst"))
     // union-find is direction- and duplicate-insensitive, so runLocal on the
-    // raw rows (self-loops dropped here) gives the distributed labeling; ids
-    // are read as strings, the type runLocal labels
-    smallEdges(edges.select($"src".cast("string").as("src"), $"dst".cast("string").as("dst")),
-        smallGraphEdges) match {
-      case Some(rows) => runLocal(spark,
-        rows.map(r => (r.getString(0), r.getString(1))).filter { case (a, b) => a != b })
-      case None => runDistributed(spark, edges, maxIter)
-    }
+    // raw rows gives the distributed labeling; ids without a driver-side
+    // order matching Spark's run distributed
+    driverOrdering(idType).flatMap(ord => smallEdges(pairs, smallGraphEdges).map(rows =>
+        runLocal(spark, idType, ord, rows.toSeq.map(r => (r.get(0), r.get(1))))))
+      .getOrElse(runDistributed(spark, pairs, maxIter))
+  }
+
+  /** The driver-side ordering that agrees with Spark's `min` over ids of
+    * `idType` (`UTF8String` byte order for strings, numeric for integral,
+    * decimal, date and timestamp ids), or None when the driver cannot
+    * reproduce it (floating point, binary, collated strings, nested types).
+    * The driver routes of CC and SCC label by it.
+    */
+  private[graft] def driverOrdering(idType: DataType): Option[Ordering[Any]] = idType match {
+    case StringType =>
+      Some(Ordering.by((v: Any) => UTF8String.fromString(v.asInstanceOf[String])))
+    case LongType | IntegerType | ShortType | ByteType | DateType | TimestampType |
+        _: DecimalType =>
+      Some(Ordering.fromLessThan((a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0))
+    case _ => None
   }
 
   /** The (src, dst) rows of `edges` on the driver when there are at most
@@ -131,30 +150,33 @@ object ConnectedComponents {
 
   /** Driver union-find with path compression (the reference's own structure,
     * entity_dedup.py:68-97) for graphs under SmallGraphEdges. Produces the
-    * identical (id, min-reachable-id) labeling as the distributed loop.
-    * `private[graft]`: EntityDedup's bounded driver-local fast path feeds it
-    * locally-generated edges directly (no self-loops by construction there).
+    * identical (id, min-reachable-id) labeling as the distributed loop,
+    * typed `idType` and ordered by `ord` ([[driverOrdering]]); self-loops
+    * and null endpoints add no union. `private[graft]`: EntityDedup's
+    * bounded driver-local fast path feeds it locally-generated edges
+    * directly.
     */
-  private[graft] def runLocal(spark: SparkSession, edges: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
+  private[graft] def runLocal(spark: SparkSession, idType: DataType, ord: Ordering[Any],
+      edges: Iterable[(Any, Any)]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      while (parent(c) != c) { val n = parent(c); parent(c) = r; c = n }
       r
     }
     edges.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
+      if (a != null) parent.getOrElseUpdate(a, a)
+      if (b != null) parent.getOrElseUpdate(b, b)
+      if (a != null && b != null) {
+        val (ra, rb) = (find(a), find(b))
         // union by min keeps the min-label invariant directly
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+        if (ord.lt(ra, rb)) parent(rb) = ra else if (ord.lt(rb, ra)) parent(ra) = rb
       }
     }
-    val rows = parent.keys.toSeq.map(id => (id, find(id)))
-    spark.createDataset(rows).toDF("id", "component")
+    val rows = parent.keys.toSeq.map(id => Row(id, find(id)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("id", idType), StructField("component", idType))))
   }
 }

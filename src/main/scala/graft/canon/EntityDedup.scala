@@ -292,7 +292,9 @@ object EntityDedup {
         }
       }
     }
-    Some(ConnectedComponents.runLocal(spark, edges.result()))
+    Some(ConnectedComponents.runLocal(spark, org.apache.spark.sql.types.StringType,
+      ConnectedComponents.driverOrdering(org.apache.spark.sql.types.StringType).get,
+      edges.result().toSeq))
   }
 
   /** Full dedup: mentions → canonical entity table + uuid remap.

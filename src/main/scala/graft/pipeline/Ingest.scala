@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -191,9 +193,22 @@ object Ingest {
     * genuinely new conversations — a re-submitted conv_id deduplicates by
     * uuid (idempotent re-ingest) rather than storing divergent content.
     *
-    * Chunks and raw triples are persisted for the run (each feeds several
-    * consumers) and released once the merges are committed; the returned
-    * `Result.chunks` and `rawTriples` remain valid as lazy plans.
+    * Link once: the link result (narrowed to the columns the entity fold
+    * and the remap join read), dedup's remap and the resolved topics
+    * materialize together in one `Checkpoints.truncateAll`, and every consumer —
+    * the entity fold, the topic-map probe, the triples assembly and the
+    * merges' bloom probes and writes — reads those tables instead of
+    * re-deriving the link. Chunks and raw triples are persisted for the run
+    * (each feeds several consumers) and released once the merges are
+    * committed; the returned `Result.chunks` and `rawTriples` remain valid as
+    * lazy plans.
+    *
+    * Commit: the entities, chunks and triples merges are STAGED side by side
+    * (`SnapshotLog.stageMerge`, on a pool created for this call), then
+    * published in that order once all three are written.
+    * Triples go last, so a reader never sees a fact whose entity or source
+    * chunk is not yet visible. If any merge fails, none publishes: the
+    * staged files are deleted and the failure rethrown.
     */
   def runIncremental(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
       cfg: Config = Config()): Result = {
@@ -216,26 +231,61 @@ object Ingest {
         override def raw(r: => DataFrame) = cache(r)
         def canon(dedup: => (DataFrame, DataFrame), topics: => DataFrame) = {
           val (newEntities, remap) = dedup
-          val linked = EntityLinker.link(spark, newEntities, existing, cfg.linker)
+          val Seq(linked, dedupRemap, resolvedTopics) = Checkpoints.truncateAll(
+            EntityLinker.link(spark, newEntities, existing, cfg.linker).drop(LinkUnread: _*),
+            remap, topics)
           // remap through the link result: mention name → resolved (existing or new)
-          val finalRemap = remap
+          val finalRemap = dedupRemap
             .join(linked.select($"entity_uuid".as("canonical_uuid"),
               $"resolved_uuid", $"resolved_name"), Seq("canonical_uuid"))
             .select($"entity_uuid", $"resolved_uuid".as("canonical_uuid"),
               $"resolved_name".as("canonical_name"), $"name")
-          (linked, finalRemap, topics)
+          (linked, finalRemap, resolvedTopics)
         }
         override def triples(t: => DataFrame) =
           if (withVectors) graft.query.Retriever.withFactEmbeddings(t) else t
       })
-      log.mergeUpsert("entities", foldLinkedEntities(spark, r.entities, existing.columns),
-        Seq("entity_uuid"), Seq("group_id"))
-      log.mergeAppend("triples", r.triples, Seq("fact_uuid"), Seq("group_id"),
-        auxBloomKeys = TripleLookupBlooms)
-      log.mergeAppend("chunks", r.chunks, Seq("chunk_uuid"), Seq("group_id"))
+      stageThenPublish(log, Seq(
+        () => log.stageMerge("entities", foldLinkedEntities(spark, r.entities, existing.columns),
+          Seq("entity_uuid"), Seq("group_id"), Nil, upsert = true),
+        () => log.stageMerge("chunks", r.chunks, Seq("chunk_uuid"), Seq("group_id"), Nil,
+          upsert = false),
+        () => log.stageMerge("triples", r.triples, Seq("fact_uuid"), Seq("group_id"),
+          TripleLookupBlooms, upsert = false)))
       r.copy(entities = log.read("entities").get, triples = log.read("triples").get)
     } finally cached.foreach(_.unpersist())
   }
+
+  /** Runs `merges` side by side on a pool created for this call (its
+    * threads start from the caller's, so they inherit Spark's local
+    * properties such as the job group and description) and waits for all
+    * of them. Then publishes the staged segments in `merges`' order; if any
+    * merge failed, discards every staged segment instead and rethrows the
+    * first failure.
+    */
+  private def stageThenPublish(log: SnapshotLog,
+      merges: Seq[() => SnapshotLog.Staged]): Unit = {
+    val pool = Executors.newFixedThreadPool(merges.size)
+    val outcomes = try {
+      val futures = merges.map(m => pool.submit(new Callable[SnapshotLog.Staged] {
+        def call(): SnapshotLog.Staged = m()
+      }))
+      futures.map(f => try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
+    } finally pool.shutdown()
+    outcomes.collectFirst { case Left(e) => e } match {
+      case Some(e) =>
+        outcomes.foreach(_.foreach(log.discard))
+        throw e
+      case None => outcomes.foreach(_.foreach(log.publish))
+    }
+  }
+
+  /** Columns of `EntityLinker.link`'s output that [[foldLinkedEntities]]
+    * replaces or recomputes (and the remap join never reads):
+    * `runIncremental` drops them before it materializes the link result.
+    */
+  private val LinkUnread =
+    Seq("name", "canonical_name", "aliases", "embedding", "name_embedding", "is_new")
 
   /** Fold EntityLinker output into one upsert row per resolved uuid
     * (entity_registry.py:252-333 merge-on-match): matched rows REPLACE the
@@ -246,6 +296,8 @@ object Ingest {
     * sorted order — folding the per-row pre-merged `resolved_summary`s
     * would repeat the existing text once per linked row. Alias/chunk sets
     * union; scalar columns take the max_by(name, summary) row's values.
+    * `name_embedding` is not carried: it is recomputed from the folded
+    * (name, summary), so `linked` needs no vector but `resolved_embedding`.
     */
   private[graft] def foldLinkedEntities(spark: SparkSession, linked: DataFrame,
       entityCols: Seq[String]): DataFrame = {
@@ -253,6 +305,7 @@ object Ingest {
     val mergeAllUdf = udf((ex: String, ss: Seq[String]) =>
       ss.sorted.foldLeft(Option(ex).getOrElse(""))((acc, s) =>
         graft.functions.Norm.mergeSummaries(acc, s)))
+    val carried = entityCols.filterNot(_ == "name_embedding")
     val entityRows0 = linked
       .withColumn("own_summary", $"summary")
       .withColumn("ex_summary", $"resolved_ex_summary")
@@ -262,10 +315,8 @@ object Ingest {
       .withColumn("summary", $"resolved_summary")
       .withColumn("aliases", $"resolved_aliases")
       .withColumn("embedding", $"resolved_embedding")
-      .drop("resolved_uuid", "resolved_name", "resolved_ex_summary",
-        "resolved_summary", "resolved_aliases", "resolved_embedding", "is_new")
-      .select((entityCols.map(col) :+ $"own_summary" :+ $"ex_summary"): _*)
-    val scalarCols = entityCols.filterNot(c =>
+      .select((carried.map(col) :+ $"own_summary" :+ $"ex_summary"): _*)
+    val scalarCols = carried.filterNot(c =>
       Set("entity_uuid", "summary", "aliases", "source_chunks").contains(c))
     val folded = entityRows0.groupBy($"entity_uuid")
       .agg(
@@ -276,16 +327,15 @@ object Ingest {
         array_distinct(flatten(collect_list($"aliases"))).as("aliases"),
         slice(array_distinct(flatten(collect_list($"source_chunks"))), 1, 20)
           .as("source_chunks"))
-      .select(entityCols.map(c =>
-        if (scalarCols.contains(c)) col(s"c.$c").as(c) else col(c)): _*)
-    // the semantic vector tracks the MERGED (name, summary) pair — recompute
-    // it after the fold (the name-only `embedding` is unchanged by a summary
+    // the semantic vector tracks the MERGED (name, summary) pair — computed
+    // after the fold (the name-only `embedding` is unchanged by a summary
     // merge and stays as committed). Guarded: linking against a legacy
     // warehouse committed before the dual-embedding column keeps its schema.
-    if (entityCols.contains("name_embedding")) {
-      val nameEmbUdf = udf((n: String, s: String) =>
-        graft.functions.Embed.semantic(n, s))
-      folded.withColumn("name_embedding", nameEmbUdf($"name", $"summary"))
-    } else folded
+    val nameEmbUdf = udf((n: String, s: String) => graft.functions.Embed.semantic(n, s))
+    folded.select(entityCols.map {
+      case "name_embedding" => nameEmbUdf($"c.name", $"summary").as("name_embedding")
+      case c if scalarCols.contains(c) => col(s"c.$c").as(c)
+      case c => col(c)
+    }: _*)
   }
 }

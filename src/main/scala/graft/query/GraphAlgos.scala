@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.canon.ConnectedComponents
 import graft.tables.Checkpoints
@@ -515,13 +514,7 @@ object GraphAlgos {
     val idType = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id"))).schema("id").dataType
     val pairs = edges.select(col("src").cast(idType).as("src"), col("dst").cast(idType).as("dst"))
-    val ord: Option[Ordering[Any]] = idType match {
-      case StringType => Some(Ordering.by((v: Any) => UTF8String.fromString(v.asInstanceOf[String])))
-      case LongType | IntegerType | ShortType | ByteType | DateType | TimestampType | _: DecimalType =>
-        Some(Ordering.fromLessThan((a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b) < 0))
-      case _ => None
-    }
-    ord.flatMap(o => ConnectedComponents.smallEdges(pairs)
+    ConnectedComponents.driverOrdering(idType).flatMap(o => ConnectedComponents.smallEdges(pairs)
         .map(sccLocal(pairs.sparkSession, idType, o, _)))
       .getOrElse(sccPeel(pairs, maxIter))
   }

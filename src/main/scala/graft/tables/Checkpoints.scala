@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.concurrent.Await
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 
 /** Lineage-truncation and bounded-collect helpers shared by every stage that
   * eagerly materializes a small intermediate (the graph kernels' iteration
@@ -75,36 +75,19 @@ object Checkpoints {
   }
 
   /** `df`'s rows on the driver when it has at most `maxRows` of them, else
-    * None, in ONE job: a single `CollectLimit` of `maxRows + 1` rows is both
-    * the size probe and the fetch. CollectLimit starts at
-    * `spark.sql.limit.initialNumPartitions` partitions (default 1) and scales
-    * up 4× per round, so on a 32-partition relation under the cap the probe
-    * would cost four sequential jobs (1, 4, 16, then all partitions).
-    * Scanning every partition in the first round makes it one; the conf is
-    * scoped to this collect, so a selective user limit elsewhere in the
-    * session keeps the incremental strategy.
+    * None, in ONE job: a single job over every partition, each task taking
+    * at most `maxRows + 1` rows, is both the size probe and the fetch. A
+    * `limit(maxRows + 1).collect()` would start at
+    * `spark.sql.limit.initialNumPartitions` partitions (default 1) and scale
+    * up 4× per round: four sequential jobs on a 32-partition relation under
+    * the cap. The job touches no session conf, so concurrent callers on one
+    * session cannot leave a setting behind.
     */
   def collectUpTo(df: DataFrame, maxRows: Long): Option[Array[Row]] = {
-    val rows = withConf(df.sparkSession, "spark.sql.limit.initialNumPartitions" -> "100000") {
-      df.limit(Math.toIntExact(maxRows + 1)).collect()
-    }
+    val take = Math.toIntExact(maxRows + 1)
+    val rows = df.sparkSession.sparkContext
+      .runJob(df.rdd, (it: Iterator[Row]) => it.take(take).toArray)
+      .iterator.flatten.take(take).toArray
     if (rows.length <= maxRows) Some(rows) else None
-  }
-
-  /** Runs `body` with the given session confs set, then restores each key's
-    * previous value (unsetting keys that were unset), also when `body`
-    * throws.
-    */
-  private[graft] def withConf[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
-    // getAll holds only explicitly set keys (getOption falls back to defaults)
-    val set = spark.conf.getAll
-    val prev = confs.map { case (k, _) => k -> set.get(k) }
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.reverse.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 }

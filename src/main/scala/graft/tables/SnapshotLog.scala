@@ -51,18 +51,33 @@ import org.apache.spark.sql.functions._
   *    a genuine match; false positives only cost an unnecessary scan.
   *    Segments without a bloom (legacy, or a saturated/oversized
   *    compaction) are always scanned — strictly the old behavior.
+  *  - staged commits: a merge is two halves. Staging writes the segment's
+  *    parquet, lineage and blooms under the table's next snapshot id;
+  *    publishing appends the manifest line (and compacts a fragmented
+  *    table). A staged segment is invisible, so a caller can stage several
+  *    tables' merges side by side and publish them in an order of its
+  *    choosing, or `discard` them all when one fails, as
+  *    `Ingest.runIncremental` does. A failed write deletes its own files.
+  *    `mergeAppend`/`mergeUpsert` stage and publish at once.
+  *  - a merge's input feeds two jobs (bloom probe and write) and is
+  *    persisted for them only when its plan is not already materialized
+  *    (cached, local, or checkpointed leaves): a persist of a cached input
+  *    stores it twice and keeps the cache's shuffle partitions, so a small
+  *    delta is written as several small files per partition.
   *
   * The driver never holds data rows — lineage aggregation happens in Spark
   * (the driver only collects one (partition, count, checksum) tuple per task
   * partition).
   *
-  * Concurrency contract: SINGLE WRITER per table (the reference pipeline is
-  * likewise one ingest process per store). Readers are safe against a
-  * concurrent writer (manifest renames are atomic; segments are immutable
-  * once listed), but two concurrent writers can both claim the same next
-  * snapshot id, and `vacuum` deletes segment files a concurrently-started
-  * merge may still plan to scan — serialize writes and maintenance
-  * (TableApp) behind whatever job scheduler owns the warehouse.
+  * Concurrency contract: ONE WRITER PER TABLE (the reference pipeline is
+  * likewise one ingest process per store). Different tables may be staged
+  * concurrently from threads of one writer — each claims its own table's
+  * next snapshot id — but two concurrent writers of one table can both
+  * claim the same id. Readers are safe against a concurrent writer
+  * (manifest renames are atomic; segments are immutable once listed), and
+  * `vacuum` deletes segment files a concurrently-started merge may still
+  * plan to scan — serialize each table's writes and maintenance (TableApp)
+  * behind whatever job scheduler owns the warehouse.
   */
 /** Each segment's key bloom (and every aux lookup bloom) is sized to the
   * segment's own row count, known from the lineage accumulator before the
@@ -91,9 +106,9 @@ import org.apache.spark.sql.functions._
   *   budget + one bloom (≤ budget + ~115 MB at the bloomMaxItems ceiling),
   *   independent of the live-segment count — without the grouping, a merge
   *   against 32 live max-size segments held ~3.7 GB of blooms in one task
-  *   binary. A group still probes in ONE aggregation job over the (persisted)
-  *   delta, so the typical table (few live segments, MB-scale blooms) keeps
-  *   paying a single job.
+  *   binary. A group still probes in ONE aggregation job over the
+  *   (materialized) delta, so the typical table (few live segments,
+  *   MB-scale blooms) keeps paying a single job.
   */
 class SnapshotLog(spark: SparkSession, baseDir: String,
     autoCompactSegments: Int = 32,
@@ -101,6 +116,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     bloomMaxItems: Long = 32L * 1000 * 1000,
     bloomProbeBudgetBytes: Long = 512L << 20) {
   import spark.implicits._
+  import SnapshotLog.{Segment, Staged}
 
   /** (segments scanned, segments live) of the most recent merge — a test/
     * diagnostics hook for the bloom-pruning read path.
@@ -389,10 +405,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     // orphaned-but-unreferenced files, never a referenced-but-deleted one
     rewriteManifest(name, live.map(_.id).toSet)
     dead.map { e =>
-      deleteRecursively(Paths.get(snapshotPath(name, e.id)))
-      deleteRecursively(tableDir(name).resolve(s"snapshot-${e.id}-lineage"))
-      Files.deleteIfExists(bloomPath(name, e.id))
-      e.auxKeys.foreach(s => Files.deleteIfExists(auxBloomPath(name, e.id, s)))
+      deleteSegment(name, e.id, e.auxKeys)
       e.id
     }
   }
@@ -531,7 +544,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * always-scan (correct, just unpruned).
     *
     * Segments probe in groups bounded by `bloomProbeBudgetBytes` (each
-    * group = one aggregation job over the persisted delta; blooms load
+    * group = one aggregation job over the materialized delta; blooms load
     * lazily per group and are dropped before the next group loads), so
     * driver memory and per-job task-closure size stay bounded regardless
     * of how many live segments the table has. Each segment's bloom is
@@ -587,8 +600,9 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     */
   def commit(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       bloomKeys: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
-    writeSegment(name, df, partitionBy, kind = "full", upsert = false,
-      keys = bloomKeys, auxKeys = auxBloomKeys).get
+    publish(Staged(name, partitionBy, bloomKeys, auxBloomKeys,
+      stageSegment(name, df, partitionBy, kind = "full", upsert = false,
+        keys = bloomKeys, auxKeys = auxBloomKeys)))
 
   /** One write pass that streams rows to parquet while folding per-partition
     * lineage (row count + xor-of-row-hash checksum) into a collection
@@ -606,11 +620,28 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * exactly one action here, so counts are exact unless speculative
     * execution races two attempts of one partition — `lineageFor` dedupes by
     * partition id, which also covers that case.
+    *
+    * This is the WRITE half of a commit: parquet, lineage and blooms land
+    * under the next snapshot id, but no manifest line lists them, so no
+    * reader sees the segment until [[publish]]. A failure deletes whatever
+    * the write left behind before it rethrows. None = a zero-row delta
+    * (`skipIfEmpty`), nothing written.
     */
-  private def writeSegment(name: String, df: DataFrame, partitionBy: Seq[String],
+  private def stageSegment(name: String, df: DataFrame, partitionBy: Seq[String],
       kind: String, upsert: Boolean, keys: Seq[String],
-      skipIfEmpty: Boolean = false, auxKeys: Seq[Seq[String]] = Nil): Option[Long] = {
+      skipIfEmpty: Boolean = false, auxKeys: Seq[Seq[String]] = Nil): Option[Segment] = {
     val id = latestSnapshot(name).getOrElse(0L) + 1L
+    try writeFiles(name, id, df, partitionBy, kind, upsert, keys, skipIfEmpty, auxKeys)
+    catch {
+      case e: Throwable =>
+        deleteSegment(name, id, auxKeys)
+        throw e
+    }
+  }
+
+  private def writeFiles(name: String, id: Long, df: DataFrame, partitionBy: Seq[String],
+      kind: String, upsert: Boolean, keys: Seq[String],
+      skipIfEmpty: Boolean, auxKeys: Seq[Seq[String]]): Option[Segment] = {
     val dataPath = snapshotPath(name, id)
 
     val acc = spark.sparkContext
@@ -774,11 +805,39 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
       }
     }
 
-    // aux key sets are recorded even when the row count exceeded the bloom
-    // ceiling (like `keys`): a missing bloom FILE means "always scan", and
-    // compaction derives the intended layout from the manifest
-    appendManifest(name, id, kind, upsert, keys, auxKeys, dataSchema, hashV)
-    Some(id)
+    Some(Segment(id, kind, upsert, dataSchema, hashV))
+  }
+
+  /** Lists a staged segment in its table's manifest (atomic rename), which
+    * makes it visible to readers, then compacts a delta-fragmented table.
+    * Returns the new snapshot id, or the current one when nothing was
+    * staged (a zero-row delta).
+    */
+  private[graft] def publish(s: Staged): Long = s.segment match {
+    case None => latestSnapshot(s.name).get
+    case Some(seg) =>
+      // aux key sets are recorded even when the row count exceeded the bloom
+      // ceiling (like `keys`): a missing bloom FILE means "always scan", and
+      // compaction derives the intended layout from the manifest
+      appendManifest(s.name, seg.id, seg.kind, seg.upsert, s.keys, s.auxKeys, seg.schema,
+        seg.hashV)
+      if (seg.kind == "full") seg.id
+      else compactIfFragmented(s.name, autoCompactSegments, s.partitionBy, s.keys, s.auxKeys)
+        .getOrElse(seg.id)
+  }
+
+  /** Deletes a staged segment's data, lineage and bloom files; it was never
+    * listed, so no reader can have seen it.
+    */
+  private[graft] def discard(s: Staged): Unit =
+    s.segment.foreach(seg => deleteSegment(s.name, seg.id, s.auxKeys))
+
+  /** Data, lineage and every bloom file of snapshot `id`. */
+  private def deleteSegment(name: String, id: Long, auxKeys: Seq[Seq[String]]): Unit = {
+    deleteRecursively(Paths.get(snapshotPath(name, id)))
+    deleteRecursively(tableDir(name).resolve(s"snapshot-$id-lineage"))
+    Files.deleteIfExists(bloomPath(name, id))
+    auxKeys.foreach(k => Files.deleteIfExists(auxBloomPath(name, id, k)))
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit =
@@ -868,70 +927,78 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * exists in the live table are dropped (left_anti); the remainder is
     * written as a DELTA SEGMENT — O(new rows), not O(table). Idempotent:
     * re-running the same append writes nothing. Returns the new segment id
-    * (or the current one when nothing new arrived).
+    * (or the current one when nothing new arrived). Stages and publishes at
+    * once; [[stageMerge]] is the staged half.
     */
   def mergeAppend(name: String, df: DataFrame, keys: Seq[String],
-      partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long = {
-    if (liveEntries(name).isEmpty)
-      return commit(name, df.dropDuplicates(keys), partitionBy, bloomKeys = keys,
-        auxBloomKeys = auxBloomKeys)
-    // the incoming delta feeds TWO jobs now (the bloom probe + the write):
-    // persist so the caller's upstream pipeline computes once
-    val in = df.dropDuplicates(keys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val existing = resolveSegments(name, scannedEntries(name, in, keys))
-      val fresh = existing match {
-        case None => in
-        case Some(ex) =>
-          in.join(ex.select(keys.map(col): _*), keys, "left_anti")
-      }
-      // write-first: the anti-join executes ONCE inside the write pass; a
-      // zero-row delta is discarded by writeSegment (skipIfEmpty) instead
-      // of being probed with a second isEmpty execution
-      writeSegment(name, fresh, partitionBy, kind = "delta",
-          upsert = false, keys, skipIfEmpty = true, auxKeys = auxBloomKeys) match {
-        case None => latestSnapshot(name).get
-        case Some(id) =>
-          compactIfFragmented(name, autoCompactSegments, partitionBy, keys,
-            auxBloomKeys).getOrElse(id)
-      }
-    } finally in.unpersist(blocking = false)
-  }
+      partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
+    publish(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = false))
 
   /** MERGE with UPDATE semantics (entity-link summary/alias merges): rows
     * whose key is new OR whose content differs from the live row are written
     * as an upsert delta; `read` resolves last-writer-wins per key
     * (merge-on-read). O(changed + new) write. EXCEPT does the change
-    * detection null-safely. Idempotent on content.
+    * detection null-safely. Idempotent on content. Stages and publishes at
+    * once; [[stageMerge]] is the staged half.
     */
   def mergeUpsert(name: String, df: DataFrame, keys: Seq[String],
-      partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long = {
-    if (liveEntries(name).isEmpty)
-      return commit(name, df.dropDuplicates(keys), partitionBy, bloomKeys = keys,
-        auxBloomKeys = auxBloomKeys)
-    val in0 = df.dropDuplicates(keys)
-    val in = in0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // pruning is key-complete (see resolveSegments), so last-writer-wins
-      // over the scanned subset resolves every key the delta could touch
-      // exactly as the full view does; EXCEPT rows from unrelated keys can
-      // never equal an incoming row (row equality implies key equality)
-      val existing = resolveSegments(name, scannedEntries(name, in, keys))
-      val delta = existing match {
-        case None => in
-        case Some(ex) => in.except(ex.select(in0.columns.map(col): _*))
+      partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
+    publish(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = true))
+
+  /** [[mergeUpsert]]'s (`upsert`) or [[mergeAppend]]'s write, staged:
+    * readers see nothing until [[publish]]; [[discard]] deletes it.
+    *
+    * The incoming rows (deduplicated on `keys`) feed two jobs, the bloom
+    * probe and the write. They are persisted for the pair only when `df`
+    * is not already materialized (see [[materialized]]); otherwise both
+    * jobs re-read the materialized leaves, no second copy is stored, and
+    * AQE still coalesces the write's partitions. The write itself is
+    * first: the anti-join (append) or EXCEPT (upsert) executes ONCE inside
+    * the write pass, and a zero-row delta is discarded there instead of
+    * being probed with a second isEmpty execution.
+    */
+  private[graft] def stageMerge(name: String, df: DataFrame, keys: Seq[String],
+      partitionBy: Seq[String], auxKeys: Seq[Seq[String]], upsert: Boolean): Staged = {
+    val in = df.dropDuplicates(keys)
+    val segment =
+      if (liveEntries(name).isEmpty)
+        stageSegment(name, in, partitionBy, kind = "full", upsert = false, keys,
+          auxKeys = auxKeys)
+      else {
+        val persisted = !materialized(df)
+        if (persisted) in.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // pruning is key-complete (see resolveSegments), so the scanned
+          // subset resolves every key the delta could touch exactly as the
+          // full view does; EXCEPT rows from unrelated keys can never equal
+          // an incoming row (row equality implies key equality)
+          val delta = resolveSegments(name, scannedEntries(name, in, keys)) match {
+            case None => in
+            case Some(ex) if upsert => in.except(ex.select(in.columns.map(col): _*))
+            case Some(ex) => in.join(ex.select(keys.map(col): _*), keys, "left_anti")
+          }
+          stageSegment(name, delta, partitionBy, kind = "delta", upsert, keys,
+            skipIfEmpty = true, auxKeys = auxKeys)
+        } finally if (persisted) in.unpersist(blocking = false)
       }
-      // write-first, as in mergeAppend: EXCEPT executes once, zero-row
-      // deltas are discarded inside the single write pass
-      writeSegment(name, delta, partitionBy, kind = "delta",
-          upsert = true, keys, skipIfEmpty = true, auxKeys = auxBloomKeys) match {
-        case None => latestSnapshot(name).get
-        case Some(id) =>
-          compactIfFragmented(name, autoCompactSegments, partitionBy, keys,
-            auxBloomKeys).getOrElse(id)
-      }
-    } finally in.unpersist(blocking = false)
+    Staged(name, partitionBy, keys, auxKeys, segment)
+  }
+
+  /** True when re-reading `df` costs no upstream work: every leaf of its
+    * plan, with cached data substituted, is a cached relation, a local
+    * relation or an RDD that is checkpointed, and the plan is
+    * deterministic (so the bloom probe and the write see the same rows).
+    * A `foreachBatch` frame or a `createDataFrame(rdd, schema)` frame is an
+    * RDD that is not materialized.
+    */
+  private def materialized(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.withCachedData
+    plan.deterministic && plan.collectLeaves().forall {
+      case _: org.apache.spark.sql.execution.columnar.InMemoryRelation => true
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.isCheckpointed
+      case _ => false
+    }
   }
 
   /** LSM-style amortized compaction: when the live manifest holds more than
@@ -961,4 +1028,18 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
         commit(name, f, partitionBy, bloomKeys, auxBloomKeys)
         read(name).get
     }
+}
+
+object SnapshotLog {
+
+  /** A segment written under its snapshot id but not listed in the manifest. */
+  private[graft] final case class Segment(id: Long, kind: String, upsert: Boolean,
+      schema: org.apache.spark.sql.types.StructType, hashV: Int)
+
+  /** A merge's or commit's output, fully written but not yet visible:
+    * `segment` is None when the merge had no new rows. [[SnapshotLog.publish]]
+    * makes it visible; [[SnapshotLog.discard]] deletes it.
+    */
+  private[graft] final case class Staged(name: String, partitionBy: Seq[String],
+      keys: Seq[String], auxKeys: Seq[Seq[String]], segment: Option[Segment])
 }

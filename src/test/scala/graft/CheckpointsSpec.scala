@@ -6,7 +6,7 @@ import graft.tables.Checkpoints
 
 /** `Checkpoints.collectUpTo`, the one bounded driver collect behind the
   * small-graph union-find, the local dedup and the broadcast topic map: its
-  * cap boundary, its one-job probe and its scoped conf.
+  * cap boundary, its one-job probe, and a session conf it leaves alone.
   */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
@@ -51,5 +51,39 @@ class CheckpointsSpec extends SparkSpec {
       roundTrip(Some("3"))
       roundTrip(None)
     } finally spark.conf.unset(LimitKey)
+  }
+
+  test("collectUpTo leaves the session conf alone while its job runs") {
+    // a collect held mid-job by a UDF: the main thread reads the session
+    // conf that every other thread shares (graft.Verify runs queries on 4)
+    val hold = udf { (x: Long) =>
+      CheckpointsSpec.entered.countDown()
+      CheckpointsSpec.release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      x
+    }
+    spark.conf.unset(LimitKey)
+    CheckpointsSpec.reset()
+    val collect = scala.concurrent.Future(
+      Checkpoints.collectUpTo(relation(10).select(hold($"id")), 10))(
+      scala.concurrent.ExecutionContext.global)
+    try {
+      assert(CheckpointsSpec.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(spark.conf.getAll.get(LimitKey) === None)
+    } finally CheckpointsSpec.release.countDown()
+    val got = scala.concurrent.Await.result(collect, scala.concurrent.duration.Duration(60, "s"))
+    assert(got.map(_.length) === Some(10))
+    assert(spark.conf.getAll.get(LimitKey) === None)
+  }
+}
+
+/** Latches the spec's UDF reaches statically: tasks run in the spec's JVM,
+  * and a latch captured in the closure would be a deserialized copy.
+  */
+object CheckpointsSpec {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
   }
 }

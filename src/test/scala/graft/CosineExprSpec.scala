@@ -86,7 +86,7 @@ class CosineExprSpec extends SparkSpec {
     // both children non-nullable AND containsNull=false → nullable=false →
     // nullSafeCodeGen binds ev.isNull to FalseLiteral; the generated code
     // must not assign to it (would be a Janino error → interpreted fallback)
-    graft.tables.Checkpoints.withConf(spark, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+    withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
         "spark.sql.codegen.wholeStage" -> "false") {
       val df = spark.range(50)
         .withColumn("a", array((0 until 4).map(i => rand(i).cast("double")): _*))

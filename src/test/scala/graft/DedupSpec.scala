@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.types.LongType
+
 import graft.canon.{ConnectedComponents, EntityDedup}
 import graft.model.Mention
 
@@ -120,6 +122,18 @@ class DedupSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(dist === local)
     assert(dist("v0300") === "v0000" && dist("w3") === "w1" && dist("z9") === "z8")
+
+    // bigint ids: both routes keep the id type and order labels numerically
+    // ({9, 10} is labelled 9, not "10" as a string order would pick)
+    val longs = Seq((1L, 2L), (2L, 3L), (9L, 10L)).toDF("src", "dst")
+    val localL = ConnectedComponents.run(spark, longs)
+    val distL = ConnectedComponents.run(spark, longs, smallGraphEdges = 0L)
+    Seq(localL, distL).foreach(df =>
+      assert(df.schema.map(f => f.name -> f.dataType) === Seq("id" -> LongType,
+        "component" -> LongType)))
+    val labelsL = localL.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labelsL === distL.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(labelsL === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L, 10L -> 9L))
   }
 
   test("distributed CC raises when labels are still changing at its round cap") {

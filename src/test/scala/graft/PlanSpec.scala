@@ -83,8 +83,8 @@ class PlanSpec extends SparkSpec {
     def check(state: String): Unit = {
       val (joins, rows) = link()
       assert(joins === Seq("BroadcastHashJoin"), state)
-      val (forcedJoins, forcedRows) = graft.tables.Checkpoints.withConf(spark,
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(link())
+      val (forcedJoins, forcedRows) =
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(link())
       assert(forcedJoins === Seq("SortMergeJoin"), state)
       assert(rows.nonEmpty && forcedRows === rows, state)
     }

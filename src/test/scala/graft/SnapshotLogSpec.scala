@@ -4,9 +4,15 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.perfbench.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import graft.model.Turn
+import graft.pipeline.Ingest
+import graft.synth.TranscriptGen
 import graft.tables.SnapshotLog
 
 /** Round-3 table-layer contracts: O(delta) append segments, merge-on-read
@@ -754,5 +760,76 @@ class SnapshotLogSpec extends SparkSpec {
     assert(log.read("t").get.count() === 4L)
     // nothing older than the last full snapshot → vacuum is a no-op
     assert(log.vacuum("t") === Seq.empty)
+  }
+
+  test("a merge persists an unmaterialized input for its two jobs and a checkpointed one never") {
+    val dir = Files.createTempDirectory("graft-persist").toString
+    val log = new SnapshotLog(spark, dir)
+    val schema = StructType.fromDDL("id BIGINT, v STRING")
+    log.commit("t", Seq((0L, "v0")).toDF("id", "v"), bloomKeys = Seq("id"))
+
+    // an RDD frame (the foreachBatch / createDataFrame shape) is not
+    // materialized: the bloom probe and the write share one evaluation
+    val evals = spark.sparkContext.longAccumulator("rdd-evals")
+    val rdd = spark.sparkContext.parallelize(1L to 100L, 4).map { i =>
+      evals.add(1L)
+      Row(i, s"v$i")
+    }
+    log.mergeAppend("t", spark.createDataFrame(rdd, schema), Seq("id"))
+    assert(evals.value === 100L, s"upstream evaluated ${evals.value} times per row set")
+
+    // a checkpointed input is already materialized: both jobs re-read it
+    // and the merge stores no RDD block of its own
+    val checkpointed = (101L to 200L).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartition(4).localCheckpoint()
+    val stored = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val info = e.blockUpdatedInfo
+        if (info.blockId.isRDD && info.storageLevel.isValid) stored.incrementAndGet()
+      }
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      log.mergeAppend("t", checkpointed, Seq("id"))
+      ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stored.get() === 0, s"the merge stored ${stored.get()} RDD blocks")
+    assert(log.read("t").get.count() === 201L)
+  }
+
+  test("an increment publishes all three tables (triples last) or, when one merge throws, none") {
+    val dir = Files.createTempDirectory("graft-staged").toString
+    val base = TranscriptGen.Config(numConvs = 3, turnsPerConv = 20, skew = 1)
+    Ingest.run(spark, TranscriptGen.transcripts(spark, base), dir)
+    val log = new SnapshotLog(spark, dir)
+    val tables = Seq("entities", "chunks", "triples")
+    def snapshots = tables.map(log.snapshots(_))
+    def listing = tables.map { t =>
+      val st = Files.list(Paths.get(dir, t))
+      try st.iterator().asScala.map(_.getFileName.toString).toSet finally st.close()
+    }
+    val turns = TranscriptGen.transcripts(spark, base.copy(seed = 5L))
+      .withColumn("conv_id", concat(lit("inc-"), $"conv_id")).as[Turn]
+
+    // the triples merge fails writing its key bloom: a directory sits
+    // where its staged segment's bloom file goes
+    val (snapshotsBefore, listingBefore) = (snapshots, listing)
+    val blocker = Paths.get(dir, "triples",
+      s"snapshot-${log.latestSnapshot("triples").get + 1}.bloom")
+    Files.createDirectory(blocker)
+    intercept[java.io.IOException](Ingest.runIncremental(spark, turns, dir))
+    Files.deleteIfExists(blocker)
+    assert(snapshots === snapshotsBefore, "a failed increment must publish no table")
+    assert(listing === listingBefore, "staged segment, lineage or bloom files were left behind")
+
+    // the same increment then commits one segment per table: entities,
+    // then chunks, then triples
+    Ingest.runIncremental(spark, turns, dir)
+    assert(snapshots.map(_.size) === snapshotsBefore.map(_.size + 1))
+    val committedAt = tables.map(t => log.history(t).orderBy($"snapshot_id".desc)
+      .select($"committed_at").head().getTimestamp(0).getTime)
+    assert(committedAt === committedAt.sorted, s"commit times ${tables.zip(committedAt)}")
   }
 }

@@ -25,6 +25,24 @@ abstract class SparkSpec extends AnyFunSuite {
     jobs.get()
   }
 
+  /** Runs `body` with the given session confs set, then restores each key's
+    * previous value (unsetting keys that were unset), also when `body`
+    * throws. Specs run one at a time, so scoping a conf on the shared
+    * session is safe here; library code never toggles session confs.
+    */
+  protected def withConf[T](confs: (String, String)*)(body: => T): T = {
+    // getAll holds only explicitly set keys (getOption falls back to defaults)
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Bytes the shared session's tasks hand back to the driver as task
     * results (`taskMetrics.resultSize`, summed) while `action` runs.
     */
