@@ -484,8 +484,9 @@ object TableApp {
         arr(col("aliases")).as(hdr("aliases", "aliases:string[]")),
         lit("Entity").as(hdr("label", ":LABEL"))), "nodes_entity")
     }
+    // the topics table holds one row per surface name; a node is one topic
     log.read("topics").foreach { t =>
-      write(t.select(
+      write(t.dropDuplicates("topic_uuid").select(
         col("topic_uuid").as(hdr("topic_uuid", "uuid:ID")),
         col("canonical_label").as("name"), col("definition"),
         lit("Topic").as(hdr("label", ":LABEL"))), "nodes_topic")

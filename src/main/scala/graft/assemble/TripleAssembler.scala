@@ -19,8 +19,8 @@ import graft.tables.Checkpoints
   *  - fact_uuid = _stable_uuid(group_id, chunk_uuid, subject_canonical,
   *    rel_type, object_canonical, fact_text, date_context) (:856-864).
   *
-  * Spark shape: two equi-joins on lower(name). The resolution table (canonical
-  * entities + remap) is far smaller than the triple stream, so it is always
+  * Spark shape: two equi-joins on lower(name). The resolution table (entity
+  * remap + topics) is far smaller than the triple stream, so it is always
   * broadcast: in the in-memory sink its inputs are checkpointed relations
   * with no size statistics Catalyst could decide from. Topics resolve through a broadcast ontology
   * map, capped by `derivedTopicCap`; unresolved topics are dropped from the
@@ -63,9 +63,9 @@ object TripleAssembler {
       Ids.stableUuid(g, chunk, s, rel, o, fact, date)
   }
 
-  /** @param remap   EntityDedup remap (entity_uuid, canonical_uuid,
-    *                canonical_name, name) — `name` is the normalized surface
-    *                form, lookup key is lower(name).
+  /** @param remap   name → canonical entity map; reads only (name,
+    *                canonical_uuid, canonical_name) — `name` is the normalized
+    *                surface form, lookup key is lower(name).
     * @param topics  TopicResolver output (name, group_id, topic_uuid,
     *                canonical_label, definition).
     */

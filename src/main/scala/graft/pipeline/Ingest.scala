@@ -70,11 +70,10 @@ object Ingest {
     def writesChunks: Boolean
     def chunks(c: => DataFrame): DataFrame = c
     def raw(r: => DataFrame): DataFrame = r
-    def mentions(m: => DataFrame): DataFrame = m
-    /** (entities, remap, topics) from dedup's (entities, remap) and the
-      * resolved topics.
+    /** (entities, [[aliasRemap]] of them, topics) from dedup's canonical
+      * entities and the resolved topics.
       */
-    def canon(dedup: => (DataFrame, DataFrame),
+    def canon(entities: => DataFrame,
         topics: => DataFrame): (DataFrame, DataFrame, DataFrame)
     def triples(t: => DataFrame): DataFrame = t
   }
@@ -100,9 +99,8 @@ object Ingest {
       if (fused) TripleExtractor.extractFused(spark, turns, c.minChars, c.groupId).toDF()
       else TripleExtractor.extract(spark, chunks.as[Chunk]).toDF())
     val raw = rawDf.as[RawTriple]
-    val mentions = sink.mentions(TripleExtractor.mentions(spark, raw).toDF())
     val (entities, remap, topics) = sink.canon(
-      { val (e, r) = EntityDedup.dedup(spark, mentions.as[Mention], cfg.dedup); (e.toDF(), r) },
+      EntityDedup.dedup(spark, TripleExtractor.mentions(spark, raw), cfg.dedup)._1.toDF(),
       {
         // one pass over raw (not a 3-way union = 3 scans): topics array ∪
         // topic-typed subjects ∪ topic-typed objects
@@ -118,6 +116,15 @@ object Ingest {
     Result(chunks, rawDf, entities, triples)
   }
 
+  /** Assembly's remap: (name, canonical_uuid, canonical_name) per alias of
+    * each entity row. An entity's `aliases` are every name dedup folded into
+    * it, so this maps the same names to the same entities as dedup's remap.
+    */
+  private def aliasRemap(entities: DataFrame, uuid: String = "entity_uuid",
+      canonicalName: String = "canonical_name"): DataFrame =
+    entities.select(explode(col("aliases")).as("name"), col(uuid).as("canonical_uuid"),
+      col(canonicalName).as("canonical_name"))
+
   /** Run without the table layer (used by tests/bench); keeps no chunks
     * table, so the default chunker config takes the fused extractor.
     *
@@ -127,13 +134,13 @@ object Ingest {
     * otherwise re-run extraction each. Chunks have a single consumer
     * (extraction) — a cache there would be a pure write-read overhead.
     *
-    * entities/remap/topics are tiny (≈ distinct names); eagerly truncating
+    * entities and topics are tiny (≈ distinct names); eagerly truncating
     * their lineage (the in-memory analogue of the committed path's stage
     * tables) stops downstream broadcast subqueries from re-running the whole
     * chunk+extract subtree — measured as a repeated multi-second broadcast
-    * build in the assembly phase. The three tables are mutually independent,
-    * so they materialize in ONE job (truncateAll) instead of three sequential
-    * driver rounds. Checkpoints prefers a reliable checkpoint when a dir is
+    * build in the assembly phase. Both materialize in one
+    * `Checkpoints.truncateAll`, and the remap is derived from the truncated
+    * entities. Checkpoints prefers a reliable checkpoint when a dir is
     * configured (cluster failure model).
     */
   def runInMemory(spark: SparkSession, turns: Dataset[Turn],
@@ -141,18 +148,18 @@ object Ingest {
     chain(spark, turns, cfg, new Sink {
       val writesChunks = false
       override def raw(r: => DataFrame) = r.persist(StorageLevel.MEMORY_AND_DISK)
-      def canon(dedup: => (DataFrame, DataFrame), topics: => DataFrame) = {
-        val (e, r) = dedup
-        val Seq(entities, remap, t) = Checkpoints.truncateAll(e, r, topics)
-        (entities, remap, t)
+      def canon(entities: => DataFrame, topics: => DataFrame) = {
+        val Seq(e, t) = Checkpoints.truncateAll(entities, topics)
+        (e, aliasRemap(e), t)
       }
     })
 
   /** Full run with committed snapshots + lineage + resume.
-    * Tables: chunks, raw_triples, mentions, entities, entity_remap, topics,
-    * triples — partitioned by group_id (tenant pruning, SURVEY.md §1.1)
-    * except the tiny remap and topics. Each stage commits once; a relaunch
-    * reads it back instead.
+    * Tables: chunks, raw_triples, entities, topics, triples — partitioned by
+    * group_id (tenant pruning, SURVEY.md §1.1) except the tiny topics. Each
+    * stage commits once; a relaunch reads it back instead. Mentions and the
+    * remap are re-derived from `raw_triples` and `entities`, so a fresh and
+    * a resumed run take one path.
     */
   def run(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
       cfg: Config = Config()): Result = {
@@ -162,17 +169,10 @@ object Ingest {
       override def chunks(c: => DataFrame) =
         log.computeIfAbsent("chunks", Seq("group_id"), bloomKeys = Seq("chunk_uuid"))(c)
       override def raw(r: => DataFrame) = log.computeIfAbsent("raw_triples", Seq("group_id"))(r)
-      override def mentions(m: => DataFrame) = log.computeIfAbsent("mentions", Seq("group_id"))(m)
-      def canon(dedup: => (DataFrame, DataFrame), topics: => DataFrame) = {
-        val (entities, remap) = (log.read("entities"), log.read("entity_remap")) match {
-          case (Some(e), Some(r)) => (e, r)
-          case _ =>
-            val (e, r) = dedup
-            log.commit("entities", e, Seq("group_id"), bloomKeys = Seq("entity_uuid"))
-            log.commit("entity_remap", r)
-            (log.read("entities").get, log.read("entity_remap").get)
-        }
-        (entities, remap, log.computeIfAbsent("topics")(topics))
+      def canon(entities: => DataFrame, topics: => DataFrame) = {
+        val e = log.computeIfAbsent("entities", Seq("group_id"),
+          bloomKeys = Seq("entity_uuid"))(entities)
+        (e, aliasRemap(e), log.computeIfAbsent("topics")(topics))
       }
       override def triples(t: => DataFrame) = log.computeIfAbsent("triples", Seq("group_id"),
           bloomKeys = Seq("fact_uuid"), auxBloomKeys = TripleLookupBlooms) {
@@ -194,14 +194,15 @@ object Ingest {
     * uuid (idempotent re-ingest) rather than storing divergent content.
     *
     * Link once: the link result (narrowed to the columns the entity fold
-    * and the remap join read), dedup's remap and the resolved topics
-    * materialize together in one `Checkpoints.truncateAll`, and every consumer —
-    * the entity fold, the topic-map probe, the triples assembly and the
-    * merges' bloom probes and writes — reads those tables instead of
-    * re-deriving the link. Chunks and raw triples are persisted for the run
-    * (each feeds several consumers) and released once the merges are
-    * committed; the returned `Result.chunks` and `rawTriples` remain valid as
-    * lazy plans.
+    * and the remap read) and the resolved topics materialize together in
+    * one `Checkpoints.truncateAll`, and every consumer — the entity fold,
+    * the topic-map probe, the triples assembly and the merges' bloom probes
+    * and writes — reads those tables instead of re-deriving the link. The
+    * link keeps one row per new entity, so the remap maps each of its
+    * `aliases` to its resolved uuid and name. Chunks and raw triples are
+    * persisted for the run (each feeds several consumers) and released once
+    * the merges are committed; the returned `Result.chunks` and `rawTriples`
+    * remain valid as lazy plans.
     *
     * Commit: the entities, chunks and triples merges are STAGED side by side
     * (`SnapshotLog.stageMerge`, on a pool created for this call), then
@@ -212,7 +213,6 @@ object Ingest {
     */
   def runIncremental(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
       cfg: Config = Config()): Result = {
-    import spark.implicits._
     val log = new SnapshotLog(spark, warehouseDir)
     val existing = log.read("entities").getOrElse(
       throw new IllegalStateException("runIncremental needs a committed entities table"))
@@ -229,18 +229,11 @@ object Ingest {
         val writesChunks = true
         override def chunks(c: => DataFrame) = cache(c)
         override def raw(r: => DataFrame) = cache(r)
-        def canon(dedup: => (DataFrame, DataFrame), topics: => DataFrame) = {
-          val (newEntities, remap) = dedup
-          val Seq(linked, dedupRemap, resolvedTopics) = Checkpoints.truncateAll(
-            EntityLinker.link(spark, newEntities, existing, cfg.linker).drop(LinkUnread: _*),
-            remap, topics)
-          // remap through the link result: mention name → resolved (existing or new)
-          val finalRemap = dedupRemap
-            .join(linked.select($"entity_uuid".as("canonical_uuid"),
-              $"resolved_uuid", $"resolved_name"), Seq("canonical_uuid"))
-            .select($"entity_uuid", $"resolved_uuid".as("canonical_uuid"),
-              $"resolved_name".as("canonical_name"), $"name")
-          (linked, finalRemap, resolvedTopics)
+        def canon(entities: => DataFrame, topics: => DataFrame) = {
+          val Seq(linked, resolvedTopics) = Checkpoints.truncateAll(
+            EntityLinker.link(spark, entities, existing, cfg.linker).drop(LinkUnread: _*),
+            topics)
+          (linked, aliasRemap(linked, "resolved_uuid", "resolved_name"), resolvedTopics)
         }
         override def triples(t: => DataFrame) =
           if (withVectors) graft.query.Retriever.withFactEmbeddings(t) else t
@@ -281,11 +274,11 @@ object Ingest {
   }
 
   /** Columns of `EntityLinker.link`'s output that [[foldLinkedEntities]]
-    * replaces or recomputes (and the remap join never reads):
+    * replaces or recomputes (and the remap never reads):
     * `runIncremental` drops them before it materializes the link result.
     */
   private val LinkUnread =
-    Seq("name", "canonical_name", "aliases", "embedding", "name_embedding", "is_new")
+    Seq("name", "canonical_name", "embedding", "name_embedding", "is_new")
 
   /** Fold EntityLinker output into one upsert row per resolved uuid
     * (entity_registry.py:252-333 merge-on-match): matched rows REPLACE the

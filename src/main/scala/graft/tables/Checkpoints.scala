@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 /** Lineage-truncation and bounded-collect helpers shared by every stage that
   * eagerly materializes a small intermediate (the graph kernels' iteration
   * rounds, with their convergence counts observed in the same job; dedup's
-  * pending table; in-memory ingest's entity/remap/topic tables) or fetches
+  * pending table; the sinks' entity (or link) and topic tables) or fetches
   * one to the driver when it is small enough.
   *
   * `localCheckpoint` truncates lineage to executor-local blocks: on a real
@@ -50,14 +50,15 @@ object Checkpoints {
 
   private val observations = new AtomicLong(0L)
 
-  /** Truncate SEVERAL mutually-independent small intermediates in ONE job:
-    * each is marked for local checkpoint lazily, then a single union action
-    * computes them all. N eager `truncate` calls cost N sequential driver
-    * job rounds — at the in-memory pipeline's scale those rounds are pure
-    * fixed cost (the tables are KB-sized), and within the one job Spark also
-    * reuses any shuffle stages the inputs share (entities/remap both hang
-    * off the dedup subtree). Reliable-checkpoint sessions keep per-df eager
-    * checkpoints: each is a distributed file write with its own commit.
+  /** Truncate SEVERAL mutually-independent small intermediates with one
+    * result job: each is marked for local checkpoint lazily, then a single
+    * union action computes them all, where N eager `truncate` calls would
+    * run N result jobs. Under adaptive execution the inputs' shuffle stages
+    * are NOT shared or overlapped: each input's stage jobs run when its
+    * `toRdd` is built, one input after another, and only then does the one
+    * union job materialize every input's final stage. Reliable-checkpoint
+    * sessions keep per-df eager checkpoints: each is a distributed file
+    * write with its own commit.
     */
   def truncateAll(dfs: DataFrame*): Seq[DataFrame] = dfs.toList match {
     case Nil => Nil

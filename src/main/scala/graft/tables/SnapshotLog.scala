@@ -89,14 +89,6 @@ import org.apache.spark.sql.functions._
   *   "missing = always scan" is the same behavior minus the probe cost).
   *   Bounds bloom bytes at ~28.8 bits/key × ceiling (≈115 MB at the 32M
   *   default) — the driver loads every live segment's bloom per merge.
-  * @param bloomFpp per-test false-positive rate AT capacity. A merge makes
-  *   deltaRows × segments membership tests and scans every segment with ≥ 1
-  *   hit, so the expected number of NEEDLESSLY scanned segments is
-  *   ≈ deltaRows × fpp × segments — fpp must sit well under 1/deltaRows for
-  *   the typical increment, not at the 1-5% of scan-time bloom defaults
-  *   (0.03 at a 10k-row delta flags EVERY segment almost surely). 1e-6
-  *   costs ≈ 28.8 bits × segment rows per bloom and keeps a 10k-row
-  *   delta's flag-FP chance at ~1% per segment.
   */
 /** @param bloomProbeBudgetBytes cap on the bloom bytes resident on the
   *   driver (and serialized into one probe job's task closures) at any
@@ -112,11 +104,10 @@ import org.apache.spark.sql.functions._
   */
 class SnapshotLog(spark: SparkSession, baseDir: String,
     autoCompactSegments: Int = 32,
-    bloomFpp: Double = 1e-6,
     bloomMaxItems: Long = 32L * 1000 * 1000,
     bloomProbeBudgetBytes: Long = 512L << 20) {
   import spark.implicits._
-  import SnapshotLog.{Segment, Staged}
+  import SnapshotLog.{BloomFpp, Segment, Staged}
 
   /** (segments scanned, segments live) of the most recent merge — a test/
     * diagnostics hook for the bloom-pruning read path.
@@ -774,7 +765,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     if (bloomSpecs.nonEmpty && segRows <= bloomMaxItems) {
       val capacity = math.max(1L, segRows)
       def fresh() = Array.fill(bloomSpecs.size)(
-        org.apache.spark.util.sketch.BloomFilter.create(capacity, bloomFpp))
+        org.apache.spark.util.sketch.BloomFilter.create(capacity, BloomFpp))
       // zero-row keyed commits (e.g. an empty streaming micro-batch stage)
       // skip the read job; treeAggregate on the empty frame would also
       // return the zero blooms, this just avoids scheduling it
@@ -1031,6 +1022,17 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
 }
 
 object SnapshotLog {
+
+  /** Per-test false-positive rate of every segment bloom AT capacity. A
+    * merge makes deltaRows × segments membership tests and scans every
+    * segment with ≥ 1 hit, so the expected number of NEEDLESSLY scanned
+    * segments is ≈ deltaRows × fpp × segments — fpp must sit well under
+    * 1/deltaRows for the typical increment, not at the 1-5% of scan-time
+    * bloom defaults (0.03 at a 10k-row delta flags EVERY segment almost
+    * surely). 1e-6 costs ≈ 28.8 bits × segment rows per bloom and keeps a
+    * 10k-row delta's flag-FP chance at ~1% per segment.
+    */
+  private val BloomFpp = 1e-6
 
   /** A segment written under its snapshot id but not listed in the manifest. */
   private[graft] final case class Segment(id: Long, kind: String, upsert: Boolean,

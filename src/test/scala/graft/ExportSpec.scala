@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.app.TableApp
+import graft.model.Turn
 import graft.pipeline.Ingest
 import graft.synth.TranscriptGen
 import graft.tables.SnapshotLog
@@ -73,5 +74,33 @@ class ExportSpec extends SparkSpec {
     assert(ents.schema("aliases").dataType.typeName === "array")
     assert(ents.count() === written("nodes_entity"))
     assert(ents.count() === log.read("entities").get.count())
+  }
+
+  test("every nodes_* export has unique ids: a topic's synonyms export one node") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-export-syn").toString
+    val turns = Seq(
+      "Summit Ventures partnered with Apex Holdings regarding CPI.",
+      "Northwind Traders partnered with Blue Harbor Group regarding Inflation.")
+      .zipWithIndex.map { case (text, i) =>
+        Turn("syn", i, "user", text, "", new java.sql.Timestamp(1704067200000L + i * 60000L))
+      }.toDS()
+    Ingest.run(spark, turns, dir)
+    val log = new SnapshotLog(spark, dir)
+    // precondition: the topics table holds two names for one topic
+    val perTopic = log.read("topics").get.groupBy($"topic_uuid").count().collect()
+    assert(perTopic.length === 1 && perTopic.head.getLong(1) === 2L)
+    for (csv <- Seq(true, false)) {
+      val out = Files.createTempDirectory("graft-export-ids").toString
+      val nodes = TableApp.exportGraph(log, out, csv).map(_._1).filter(_.startsWith("nodes_"))
+      assert(nodes.toSet === Set("nodes_entity", "nodes_topic", "nodes_chunk"))
+      nodes.foreach { name =>
+        val ids =
+          if (csv) spark.read.option("header", false).option("escape", "\"")
+            .csv(s"$out/$name/part-*.csv").select(col("_c0"))
+          else spark.read.json(s"$out/$name").select(col(name.stripPrefix("nodes_") + "_uuid"))
+        assert(ids.count() > 0 && ids.distinct().count() === ids.count(), s"$name csv=$csv")
+      }
+    }
   }
 }
