@@ -19,7 +19,8 @@ import graft.tables.SnapshotLog
   *   TableApp <warehouseDir> snapshot <table> <asOf>   time-travel row count + schema
   *   TableApp <warehouseDir> compact  <table>          force-rewrite as ONE full snapshot
   *   TableApp <warehouseDir> vacuum   [table]          drop pre-compaction history
-  *   TableApp <warehouseDir> verify   [table]          recompute lineage checksums
+  *   TableApp <warehouseDir> verify   [table]          recompute each segment's rows and
+  *                                   checksum; compare with its manifest lineage
   *   TableApp <warehouseDir> ann-index <table> [nCentroids] [vecCol] [idCol]
   *                                   train + commit the persisted IVF index
   *   TableApp <warehouseDir> ann-refresh <table> [vecCol]
@@ -32,6 +33,9 @@ import graft.tables.SnapshotLog
   *                                   deterministic DeepWalk training corpus
   *
   * `history`/`vacuum`/`verify` default to every table in the warehouse.
+  * `verify` scans each segment once (one job); a segment committed before
+  * lineage moved into the manifest is checked against its
+  * `snapshot-N-lineage/` directory instead.
   * `compact` preserves the table's partition layout (detected from the live
   * segment's directory structure) and merge keys (from the manifest), so the
   * compacted snapshot stays bloom-prunable and partition-pruned.

@@ -159,7 +159,7 @@ object Similarity {
     * buys more recall per scanned row than raising nprobe on
     * weakly-clustered data (measured: recall 0.71 @ 23% corpus scanned for
     * C=64/nprobe=8/r=2 vs 0.68 @ 25% for C=64/nprobe=16/r=1 on uniform
-    * embeddings — IvfRecallProbe prints the full curve). Cost: index storage
+    * embeddings — BASELINE.md records the full curve). Cost: index storage
     * and cell sizes scale ×r; candidate pairs reached through two shared
     * cells are deduped before ranking (else top-k would double-count).
     */

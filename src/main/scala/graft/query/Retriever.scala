@@ -274,8 +274,16 @@ object Retriever {
     * vector ∥ keyword ∥ graph → RRF(60) → top-k.
     */
   def search(facts: DataFrame, query: String, anchorEntities: Seq[String],
-      topK: Int = 10, cfg: Config = Config()): DataFrame = {
-    val vector = globalSearch(facts, query, cfg).select("fact_uuid", "score", "source")
+      topK: Int = 10, cfg: Config = Config()): DataFrame =
+    fuseWithVector(facts, globalSearch(facts, query, cfg), query, anchorEntities, topK, cfg)
+
+  /** The keyword and graph strategies over `facts`, fused by RRF with the
+    * given vector strategy's hits: the one body behind [[search]] and
+    * [[searchIndexed]], which differ only in how the vector hits are found.
+    */
+  private def fuseWithVector(facts: DataFrame, vectorHits: DataFrame, query: String,
+      anchorEntities: Seq[String], topK: Int, cfg: Config): DataFrame = {
+    val vector = vectorHits.select("fact_uuid", "score", "source")
     val keyword = keywordSearch(facts, query).select("fact_uuid", "score", "source")
     val graph =
       if (anchorEntities.isEmpty)
@@ -293,7 +301,8 @@ object Retriever {
     * re-scores the candidates with the exact codegen dot product. Emitted
     * scores are exact; only RECALL is approximate — probing every cell
     * reproduces [[globalSearch]] bit-for-bit (specced), and the recall/scan
-    * frontier is the committed IvfRecallProbe curve.
+    * frontier is BASELINE.md's IVF curve, with a floor pinned in
+    * QualitySpec.
     */
   def globalSearchIndexed(centroids: DataFrame, assignments: DataFrame,
       query: String, nprobe: Int = 4, cfg: Config = Config(),
@@ -321,14 +330,7 @@ object Retriever {
     */
   def searchIndexed(facts: DataFrame, centroids: DataFrame,
       assignments: DataFrame, query: String, anchorEntities: Seq[String],
-      topK: Int = 10, nprobe: Int = 4, cfg: Config = Config()): DataFrame = {
-    val vector = globalSearchIndexed(centroids, assignments, query, nprobe, cfg)
-    val keyword = keywordSearch(facts, query).select("fact_uuid", "score", "source")
-    val graph =
-      if (anchorEntities.isEmpty)
-        vector.limit(0)
-      else expandOneHop(facts, anchorEntities, cfg.scopedTopK, cfg)
-        .select("fact_uuid", "score", "source")
-    rrfFuse(vector.union(keyword).union(graph), topK, cfg)
-  }
+      topK: Int = 10, nprobe: Int = 4, cfg: Config = Config()): DataFrame =
+    fuseWithVector(facts, globalSearchIndexed(centroids, assignments, query, nprobe, cfg),
+      query, anchorEntities, topK, cfg)
 }

@@ -11,6 +11,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.model.LineageRow
+
 /** Iceberg-*style* table layer: partitioned Parquet + an atomic JSON snapshot
   * log (SURVEY.md §7.0/§2.1 S9). No Iceberg jar ships in /opt/spark/jars, so
   * this provides the north rule's observable behaviors directly:
@@ -21,10 +23,10 @@ import org.apache.spark.sql.functions._
   *  - checkpoint/resume: `latestSnapshot(stage)` lets a relaunched job skip
   *    every stage that already committed (reference checkpoint.py:116-157
   *    resume-from-last-phase semantics);
-  *  - per-partition lineage: each commit writes one row per task partition
-  *    (partition id, row count, xor-of-hash checksum) into a lineage dir —
-  *    computed IN the write pass (see commit), never by re-reading the
-  *    snapshot;
+  *  - per-partition lineage: each commit records one (partition id, row
+  *    count, xor-of-hash checksum) triple per write task in its manifest
+  *    line — computed IN the write pass (see commit), never by re-reading
+  *    the snapshot; older segments keep theirs in `snapshot-N-lineage/`;
   *  - O(delta) appends: a manifest entry is either a `full` snapshot or a
   *    `delta` segment; the live table is the last full snapshot plus every
   *    delta after it. `mergeAppend`/`mergeUpsert` write ONLY the new/changed
@@ -52,11 +54,11 @@ import org.apache.spark.sql.functions._
   *    Segments without a bloom (legacy, or a saturated/oversized
   *    compaction) are always scanned — strictly the old behavior.
   *  - staged commits: a merge is two halves. Staging writes the segment's
-  *    parquet, lineage and blooms under the table's next snapshot id;
-  *    publishing appends the manifest line (and compacts a fragmented
-  *    table). A staged segment is invisible, so a caller can stage several
-  *    tables' merges side by side and publish them in an order of its
-  *    choosing, or `discard` them all when one fails, as
+  *    parquet and blooms under the table's next snapshot id; publishing
+  *    appends the manifest line, lineage included (and compacts a
+  *    fragmented table). A staged segment is invisible, so a caller can
+  *    stage several tables' merges side by side and publish them in an
+  *    order of its choosing, or `discard` them all when one fails, as
   *    `Ingest.runIncremental` does. A failed write deletes its own files.
   *    `mergeAppend`/`mergeUpsert` stage and publish at once.
   *  - a merge's input feeds two jobs (bloom probe and write) and is
@@ -65,9 +67,9 @@ import org.apache.spark.sql.functions._
   *    stores it twice and keeps the cache's shuffle partitions, so a small
   *    delta is written as several small files per partition.
   *
-  * The driver never holds data rows — lineage aggregation happens in Spark
-  * (the driver only collects one (partition, count, checksum) tuple per task
-  * partition).
+  * The driver never holds data rows: each write task folds its own lineage,
+  * and the driver receives one (partition, count, checksum) tuple per task,
+  * which it writes into the manifest entry.
   *
   * Concurrency contract: ONE WRITER PER TABLE (the reference pipeline is
   * likewise one ingest process per store). Different tables may be staged
@@ -120,47 +122,44 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     */
   @volatile private[graft] var lastLookupScan: Option[(Int, Int)] = None
 
+  /** One manifest line; `lineage` is None on legacy lines (see recordedLineage). */
   private case class Entry(id: Long, kind: String, upsert: Boolean, keys: Seq[String],
       schemaB64: Option[String], committedAtMs: Option[Long] = None, hashV: Int = 1,
-      auxKeys: Seq[Seq[String]] = Nil)
+      auxKeys: Seq[Seq[String]] = Nil, lineage: Option[Seq[(Int, Long, Long)]] = None)
 
   private def tableDir(name: String): Path = Paths.get(baseDir, name)
   private def manifest(name: String): Path = tableDir(name).resolve("_snapshots.json")
+  private def legacyLineageDir(name: String, id: Long): Path =
+    tableDir(name).resolve(s"snapshot-$id-lineage")
 
-  private val idRe = """"snapshot_id":\s*(\d+)""".r
-  private val kindRe = """"kind":\s*"(\w+)"""".r
-  private val upsertRe = """"upsert":\s*(true|false)""".r
-  private val keysRe = """"keys":\s*\[([^\]]*)\]""".r
-  private val schemaRe = """"schema_b64":\s*"([A-Za-z0-9+/=]*)"""".r
-  private val tsRe = """"committed_at_ms":\s*(\d+)""".r
-  private val hashVRe = """"hash_v":\s*(\d+)""".r
-  // aux bloom column sets, flat-encoded (multi-column sets joined by "|")
-  // so the single-level-array regex style above keeps working
-  private val auxKeysRe = """"aux_keys":\s*\[([^\]]*)\]""".r
-
-  /** Parsed manifest entries, ascending by snapshot id. Legacy lines without
-    * a `kind` field are full snapshots.
+  /** A manifest line parsed, or None when it carries no snapshot id. Legacy
+    * lines without `kind` are full snapshots and without `hash_v` are v1.
+    * `aux_keys` is flat-encoded: multi-column sets are joined by "|".
     */
-  private def entries(name: String): Seq[Entry] = {
+  private def parseEntry(line: String): Option[Entry] = {
+    val j = SnapshotLog.Json.readTree(line)
+    def field(f: String) = Option(j.get(f))
+    def strings(f: String) = field(f).toSeq.flatMap(_.elements().asScala.map(_.asText))
+    field("snapshot_id").map { id =>
+      Entry(id.asLong, field("kind").fold("full")(_.asText), j.path("upsert").asBoolean,
+        strings("keys"), field("schema_b64").map(_.asText), field("committed_at_ms").map(_.asLong),
+        j.path("hash_v").asInt(1), strings("aux_keys").map(_.split("\\|").toSeq),
+        field("lineage").map(_.elements().asScala.map(t =>
+          (t.get(0).asInt, t.get(1).asLong, t.get(2).asLong)).toSeq))
+    }
+  }
+
+  /** The manifest's lines as written, each with its parsed entry. */
+  private def manifestLines(name: String): Seq[(String, Option[Entry])] = {
     val m = manifest(name)
     if (!Files.exists(m)) Seq.empty
-    else Files.readAllLines(m, UTF_8).asScala.toSeq.filter(_.nonEmpty).flatMap { line =>
-      idRe.findFirstMatchIn(line).map { idm =>
-        val kind = kindRe.findFirstMatchIn(line).map(_.group(1)).getOrElse("full")
-        val upsert = upsertRe.findFirstMatchIn(line).exists(_.group(1) == "true")
-        val keys = keysRe.findFirstMatchIn(line).map(_.group(1)).toSeq
-          .flatMap(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty))
-        val schemaB64 = schemaRe.findFirstMatchIn(line).map(_.group(1))
-        val ts = tsRe.findFirstMatchIn(line).map(_.group(1).toLong)
-        val hashV = hashVRe.findFirstMatchIn(line).map(_.group(1).toInt).getOrElse(1)
-        val auxKeys = auxKeysRe.findFirstMatchIn(line).map(_.group(1)).toSeq
-          .flatMap(_.split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-            .filter(_.nonEmpty).map(_.split("\\|").toSeq))
-        Entry(idm.group(1).toLong, kind, upsert, keys, schemaB64, ts, hashV, auxKeys)
-      }
-    }.sortBy(_.id)
+    else Files.readAllLines(m, UTF_8).asScala.toSeq
+      .map(l => l -> (if (l.isEmpty) None else parseEntry(l)))
   }
+
+  /** Parsed manifest entries, ascending by snapshot id. */
+  private def entries(name: String): Seq[Entry] =
+    manifestLines(name).flatMap(_._2).sortBy(_.id)
 
   /** Committed snapshot/segment ids for a table, ascending. */
   def snapshots(name: String): Seq[Long] = entries(name).map(_.id)
@@ -184,17 +183,8 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * the original types). Legacy entries without a recorded schema fall back
     * to inference.
     */
-  private def segDf(name: String, e: Entry): DataFrame = {
-    val path = snapshotPath(name, e.id)
-    e.schemaB64 match {
-      case Some(b64) =>
-        val json = new String(java.util.Base64.getDecoder.decode(b64), UTF_8)
-        val st = org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        spark.read.schema(st).parquet(path)
-      case None => spark.read.parquet(path)
-    }
-  }
+  private def segDf(name: String, e: Entry): DataFrame =
+    pinnedSchemaOf(e).fold(spark.read)(spark.read.schema(_)).parquet(snapshotPath(name, e.id))
 
   /** Read the current committed state of a table: union of live segments,
     * with last-writer-wins key resolution when any live segment is an upsert
@@ -402,14 +392,11 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
   }
 
   private def rewriteManifest(name: String, keep: Set[Long]): Unit = {
-    val m = manifest(name)
-    if (!Files.exists(m)) return
-    val kept = Files.readAllLines(m, UTF_8).asScala.toSeq.filter { line =>
-      line.isEmpty || idRe.findFirstMatchIn(line).forall(x => keep(x.group(1).toLong))
-    }
+    val kept = manifestLines(name).collect { case (line, e) if e.forall(x => keep(x.id)) => line }
     val tmp = tableDir(name).resolve("_snapshots.json.tmp-vacuum")
     Files.write(tmp, kept.mkString("\n").getBytes(UTF_8))
-    Files.move(tmp, m, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Files.move(tmp, manifest(name), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** The resolved view of a SUBSET of live segments (same union +
@@ -609,14 +596,15 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * Accumulator caveat (documented): updates come from the write job's
     * tasks; Spark drops updates from failed attempts, and the df feeds
     * exactly one action here, so counts are exact unless speculative
-    * execution races two attempts of one partition — `lineageFor` dedupes by
-    * partition id, which also covers that case.
+    * execution races two attempts of one partition — the tuples are deduped
+    * by partition id, which also covers that case.
     *
-    * This is the WRITE half of a commit: parquet, lineage and blooms land
-    * under the next snapshot id, but no manifest line lists them, so no
-    * reader sees the segment until [[publish]]. A failure deletes whatever
-    * the write left behind before it rethrows. None = a zero-row delta
-    * (`skipIfEmpty`), nothing written.
+    * This is the WRITE half of a commit: parquet and blooms land under the
+    * next snapshot id, and the lineage tuples ride in the returned
+    * [[Segment]], but no manifest line lists them, so no reader sees the
+    * segment until [[publish]] writes its line, lineage included. A failure
+    * deletes whatever the write left behind before it rethrows. None = a
+    * zero-row delta (`skipIfEmpty`), nothing written.
     */
   private def stageSegment(name: String, df: DataFrame, partitionBy: Seq[String],
       kind: String, upsert: Boolean, keys: Seq[String],
@@ -721,21 +709,6 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
         .coalesce(1).write.mode("append").parquet(dataPath)
     }
 
-    // lineage rows from the accumulated per-partition tuples (dedup by pid:
-    // a speculative duplicate attempt must not double-count)
-    val now = new Timestamp(System.currentTimeMillis())
-    val lineage = tuples.toDF("partition_id", "output_rows", "checksum")
-      .select(
-        lit(name).as("stage"),
-        $"partition_id",
-        lit(0L).as("input_rows"),
-        $"output_rows",
-        $"checksum",
-        lit(id).as("snapshot_id"),
-        lit(now).as("committed_at"))
-    val lineageDir = tableDir(name).resolve(s"snapshot-$id-lineage").toString
-    lineage.write.mode("overwrite").parquet(lineageDir)
-
     // key bloom lands BEFORE the manifest line makes the segment visible
     // (an EMPTY bloom is still written: it makes a zero-row segment
     // skippable, whereas a MISSING bloom means "always scan"). Built by a
@@ -796,7 +769,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
       }
     }
 
-    Some(Segment(id, kind, upsert, dataSchema, hashV))
+    Some(Segment(id, kind, upsert, dataSchema, hashV, tuples))
   }
 
   /** Lists a staged segment in its table's manifest (atomic rename), which
@@ -810,23 +783,22 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
       // aux key sets are recorded even when the row count exceeded the bloom
       // ceiling (like `keys`): a missing bloom FILE means "always scan", and
       // compaction derives the intended layout from the manifest
-      appendManifest(s.name, seg.id, seg.kind, seg.upsert, s.keys, s.auxKeys, seg.schema,
-        seg.hashV)
+      appendManifest(s.name, seg, s.keys, s.auxKeys)
       if (seg.kind == "full") seg.id
       else compactIfFragmented(s.name, autoCompactSegments, s.partitionBy, s.keys, s.auxKeys)
         .getOrElse(seg.id)
   }
 
-  /** Deletes a staged segment's data, lineage and bloom files; it was never
-    * listed, so no reader can have seen it.
+  /** Deletes a staged segment's data and bloom files; it was never listed,
+    * so no reader can have seen it.
     */
   private[graft] def discard(s: Staged): Unit =
     s.segment.foreach(seg => deleteSegment(s.name, seg.id, s.auxKeys))
 
-  /** Data, lineage and every bloom file of snapshot `id`. */
+  /** Data, legacy lineage directory and every bloom file of snapshot `id`. */
   private def deleteSegment(name: String, id: Long, auxKeys: Seq[Seq[String]]): Unit = {
     deleteRecursively(Paths.get(snapshotPath(name, id)))
-    deleteRecursively(tableDir(name).resolve(s"snapshot-$id-lineage"))
+    deleteRecursively(legacyLineageDir(name, id))
     Files.deleteIfExists(bloomPath(name, id))
     auxKeys.foreach(k => Files.deleteIfExists(auxBloomPath(name, id, k)))
   }
@@ -848,69 +820,90 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     else xxhash64(to_json(struct(columns.sorted.map(col): _*)))
 
   /** Recompute (total rows, global xor checksum) from the COMMITTED files of
-    * a segment and compare against the lineage written at commit time —
-    * with the hash version the segment's manifest entry records.
-    * Partition boundaries differ on read-back, so the comparison is at the
+    * a segment and compare against the lineage its manifest entry recorded
+    * at commit time — with the hash version that entry records. Partition
+    * boundaries differ on read-back, so the comparison is at the
     * order-independent aggregate level — which is exactly the resume
     * integrity question ("are the committed bytes the rows the job saw?").
+    * One job (the segment's scan) whatever the table's history. False for an
+    * id the manifest does not list or a segment with no recorded lineage.
     */
-  def verifyLineage(name: String, id: Long): Boolean = {
-    val entry = entries(name).find(_.id == id)
-    val committed = entry.map(segDf(name, _))
-      .getOrElse(spark.read.parquet(snapshotPath(name, id)))
-    val hashV = entry.map(_.hashV).getOrElse(1)
-    val actual = committed
-      .agg(count(lit(1)).as("rows"),
-        coalesce(bit_xor(rowHashCol(committed.columns, hashV)), lit(0L)).as("checksum"))
-      .first()
-    val recorded = lineage(name) match {
-      case None => return false
-      case Some(lin) =>
-        lin.filter($"snapshot_id" === id)
-          .agg(coalesce(sum($"output_rows"), lit(0L)).as("rows"),
-            coalesce(bit_xor(when($"output_rows" > 0, $"checksum")), lit(0L)).as("checksum"))
-          .first()
+  def verifyLineage(name: String, id: Long): Boolean =
+    entries(name).find(_.id == id).exists { e =>
+      recordedLineage(name, e).exists { recorded =>
+        val committed = segDf(name, e)
+        val perTask = committed.select(rowHashCol(committed.columns, e.hashV)).as[Long]
+          .mapPartitions { it =>
+            var (rows, xor) = (0L, 0L)
+            it.foreach { h => rows += 1; xor ^= h }
+            Iterator((rows, xor))
+          }.collect()
+        perTask.map(_._1).sum == recorded.map(_._2).sum &&
+          perTask.map(_._2).foldLeft(0L)(_ ^ _) ==
+            recorded.filter(_._2 > 0).map(_._3).foldLeft(0L)(_ ^ _)
+      }
     }
-    actual.getLong(0) == recorded.getLong(0) && actual.getLong(1) == recorded.getLong(1)
-  }
 
-  private def appendManifest(name: String, id: Long, kind: String, upsert: Boolean,
-      keys: Seq[String], auxKeys: Seq[Seq[String]],
-      schema: org.apache.spark.sql.types.StructType, hashV: Int): Unit = {
+  /** A segment's (partition, rows, checksum) tuples: its manifest entry's,
+    * or for a legacy entry those in its `snapshot-N-lineage/` directory.
+    */
+  private def recordedLineage(name: String, e: Entry): Option[Seq[(Int, Long, Long)]] =
+    e.lineage.orElse {
+      val dir = legacyLineageDir(name, e.id)
+      if (!Files.exists(dir)) None
+      else Some(legacyLineageRows(Seq(dir))
+        .select($"partition_id", $"output_rows", $"checksum").as[(Int, Long, Long)]
+        .collect().toSeq)
+    }
+
+  /** Legacy lineage directories, read with their known schema (no inference job). */
+  private def legacyLineageRows(dirs: Seq[Path]): DataFrame =
+    spark.read.schema(Encoders.product[LineageRow].schema).parquet(dirs.map(_.toString): _*)
+
+  private def appendManifest(name: String, seg: Segment, keys: Seq[String],
+      auxKeys: Seq[Seq[String]]): Unit = {
     Files.createDirectories(tableDir(name))
     val m = manifest(name)
-    val existing =
-      if (Files.exists(m)) Files.readAllLines(m, UTF_8).asScala.toSeq else Seq.empty
+    val existing = manifestLines(name)
     val keysJson = keys.map(k => "\"" + k + "\"").mkString("[", ", ", "]")
-    // flat-encoded (see auxKeysRe); only appended when present so legacy
+    // flat-encoded (see parseEntry); only appended when present so legacy
     // manifest lines stay byte-identical in format
     val auxJson =
       if (auxKeys.isEmpty) ""
       else auxKeys.map(s => "\"" + s.mkString("|") + "\"")
         .mkString(""", "aux_keys": [""", ", ", "]")
-    val schemaB64 = java.util.Base64.getEncoder.encodeToString(schema.json.getBytes(UTF_8))
+    val schemaB64 = java.util.Base64.getEncoder.encodeToString(seg.schema.json.getBytes(UTF_8))
+    val lineageJson = seg.lineage.map { case (p, n, x) => s"[$p, $n, $x]" }
+      .mkString("[", ", ", "]")
     // recorded commit time is clamped to be monotone with snapshot id (as
     // Delta monotonizes commit timestamps): readAtTime picks the highest-id
     // entry at-or-before ts and readAt then includes ALL lower-id segments,
     // which is only correct if no lower-id entry carries a LATER timestamp —
     // an NTP step-back between commits would otherwise break as-of reads
-    val prevTs = existing.reverseIterator
-      .flatMap(l => tsRe.findFirstMatchIn(l).map(_.group(1).toLong))
+    val prevTs = existing.reverseIterator.flatMap(_._2.flatMap(_.committedAtMs))
       .nextOption().getOrElse(0L)
+    val committedAt = math.max(System.currentTimeMillis(), prevTs)
     val entry =
-      s"""{"snapshot_id": $id, "table": "$name", "kind": "$kind", "upsert": $upsert, """ +
-        s""""keys": $keysJson$auxJson, "schema_b64": "$schemaB64", "hash_v": $hashV, """ +
-        s""""committed_at_ms": ${math.max(System.currentTimeMillis(), prevTs)}}"""
-    val tmp = tableDir(name).resolve(s"_snapshots.json.tmp-$id")
-    Files.write(tmp, (existing :+ entry).mkString("\n").getBytes(UTF_8))
+      s"""{"snapshot_id": ${seg.id}, "table": "$name", "kind": "${seg.kind}", """ +
+        s""""upsert": ${seg.upsert}, "keys": $keysJson$auxJson, "schema_b64": "$schemaB64", """ +
+        s""""hash_v": ${seg.hashV}, "committed_at_ms": $committedAt, "lineage": $lineageJson}"""
+    val tmp = tableDir(name).resolve(s"_snapshots.json.tmp-${seg.id}")
+    Files.write(tmp, (existing.map(_._1) :+ entry).mkString("\n").getBytes(UTF_8))
     Files.move(tmp, m, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** All lineage rows for a table across snapshots. */
+  /** All lineage rows for a table across snapshots: the manifest entries'
+    * tuples as [[LineageRow]]s (stamped with the entry's commit time), plus
+    * the legacy `snapshot-N-lineage/` directories of entries without them.
+    * None when no segment recorded lineage.
+    */
   def lineage(name: String): Option[DataFrame] = {
-    val dirs = snapshots(name).map(id => tableDir(name).resolve(s"snapshot-$id-lineage").toString)
-      .filter(p => Files.exists(Paths.get(p)))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    val (inManifest, legacy) = entries(name).partition(_.lineage.isDefined)
+    val rows = for (e <- inManifest; (p, n, x) <- e.lineage.get)
+      yield LineageRow(name, p, 0L, n, x, e.id, e.committedAtMs.map(new Timestamp(_)).orNull)
+    val dirs = legacy.map(e => legacyLineageDir(name, e.id)).filter(Files.exists(_))
+    (Option.when(inManifest.nonEmpty)(rows.toDF()) ++
+      Option.when(dirs.nonEmpty)(legacyLineageRows(dirs))).reduceOption(_ unionByName _)
   }
 
   /** MERGE-style append (S6 semantics, reference pipeline.py:416-547
@@ -1034,9 +1027,14 @@ object SnapshotLog {
     */
   private val BloomFpp = 1e-6
 
-  /** A segment written under its snapshot id but not listed in the manifest. */
+  /** A segment written under its snapshot id but not listed in the manifest,
+    * with its per-task (partition, rows, checksum) lineage tuples.
+    */
   private[graft] final case class Segment(id: Long, kind: String, upsert: Boolean,
-      schema: org.apache.spark.sql.types.StructType, hashV: Int)
+      schema: org.apache.spark.sql.types.StructType, hashV: Int,
+      lineage: Seq[(Int, Long, Long)])
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** A merge's or commit's output, fully written but not yet visible:
     * `segment` is None when the merge had no new rows. [[SnapshotLog.publish]]

@@ -431,24 +431,26 @@ class IncrementalSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-incr-bloom").toString
     val base = TranscriptGen.Config(numConvs = 3, turnsPerConv = 20, skew = 1)
     Ingest.run(spark, TranscriptGen.transcripts(spark, base), dir)
+    val log = new SnapshotLog(spark, dir)
+    val tables = Seq("entities", "triples", "chunks")
     def listed(keep: String => Boolean): Set[java.nio.file.Path] =
-      Seq("entities", "triples", "chunks").flatMap { t =>
+      tables.flatMap { t =>
         val s = Files.list(Paths.get(dir, t))
         try s.iterator().asScala.filter(p => keep(p.getFileName.toString)).toList
         finally s.close()
       }.toSet
     def blooms = listed(n => n.startsWith("snapshot-") && n.contains(".bloom"))
-    def lineages = listed(n => n.startsWith("snapshot-") && n.endsWith("-lineage"))
-    val (bloomsBefore, lineagesBefore) = (blooms, lineages)
+    val (bloomsBefore, idsBefore) = (blooms, tables.map(log.snapshots(_).toSet))
     val turns = TranscriptGen.transcripts(spark, base.copy(seed = 11L))
       .withColumn("conv_id", concat(lit("inc-"), $"conv_id")).as[graft.model.Turn]
     val resultBytes = taskResultBytesOf(Ingest.runIncremental(spark, turns, dir))
 
     val newBlooms = blooms -- bloomsBefore
-    val newLineages = (lineages -- lineagesBefore).toSeq
     assert(newBlooms.size === 5, s"new blooms: $newBlooms")
-    val committedRows = spark.read.parquet(newLineages.map(_.toString): _*)
-      .agg(sum($"output_rows")).head().getLong(0)
+    val committedRows = tables.zip(idsBefore).map { case (t, before) =>
+      log.lineage(t).get.filter(!$"snapshot_id".isin(before.toSeq: _*))
+        .agg(coalesce(sum($"output_rows"), lit(0L))).head().getLong(0)
+    }.sum
     val bloomBytes = newBlooms.toSeq.map(Files.size).sum
     assert(committedRows > 0L)
     assert(bloomBytes < 64L * committedRows,

@@ -232,7 +232,7 @@ class PipelineSpec extends SparkSpec {
     finally spark.sparkContext.removeSparkListener(listener)
     info(counts.map { case (s, n) => s"$s=$n" }.mkString(" "))
     // pinned at the measured counts: an extra driver round in a sink fails here
-    val ceilings = Map("runInMemory" -> 16, "run" -> 30, "runIncremental" -> 41)
+    val ceilings = Map("runInMemory" -> 16, "run" -> 25, "runIncremental" -> 38)
     counts.foreach { case (sink, n) =>
       assert(n <= ceilings(sink), s"$sink ran $n jobs, ceiling ${ceilings(sink)}")
     }

@@ -132,7 +132,7 @@ class SnapshotLogSpec extends SparkSpec {
     assert(log.snapshots("t") === before, "no-op upsert must not land a segment")
   }
 
-  test("commit runs ONE scan of the stage output and <=2 jobs (one-pass lineage)") {
+  test("commit runs ONE scan of the stage output and ONE job (lineage in manifest)") {
     val dir = Files.createTempDirectory("graft-onepass").toString
     val log = new SnapshotLog(spark, dir)
     // every evaluation of the stage output bumps the accumulator once per row
@@ -153,8 +153,9 @@ class SnapshotLogSpec extends SparkSpec {
 
     assert(scans.value === 5000L,
       s"stage output must be scanned exactly once (got ${scans.value} row evaluations)")
-    assert(jobs.get() <= 2,
-      s"commit must be data-write + local lineage-write, got ${jobs.get()} jobs")
+    assert(jobs.get() <= 1,
+      s"commit must be the data write alone, got ${jobs.get()} jobs")
+    assert(!Files.exists(Paths.get(dir, "t", "snapshot-1-lineage")))
     // and the lineage totals reconcile against the committed bytes
     assert(log.verifyLineage("t", 1L))
     val lin = log.lineage("t").get
@@ -172,6 +173,71 @@ class SnapshotLogSpec extends SparkSpec {
       .findFirst().get()
     Files.delete(victim)
     assert(!log.verifyLineage("t", 1L))
+  }
+
+  test("verifyLineage runs ONE job on a 12-segment table; no write leaves a lineage dir") {
+    val dir = Files.createTempDirectory("graft-vlin-jobs").toString
+    val log = new SnapshotLog(spark, dir, autoCompactSegments = 6)
+    def rows(from: Long) = (from until from + 50L).map(i => (i, s"v$i", s"g${i % 3}"))
+      .toDF("id", "v", "g")
+    log.commit("t", rows(0L), partitionBy = Seq("g"), bloomKeys = Seq("id"))
+    (1 to 10).foreach { i =>
+      if (i % 2 == 0) log.mergeAppend("t", rows(i * 100L), Seq("id"), Seq("g"))
+      else log.mergeUpsert("t", rows(i * 100L - 25L), Seq("id"), Seq("g"))
+    }
+    val ids = log.snapshots("t")
+    assert(ids.size >= 10 && log.history("t").filter($"kind" === "full").count() >= 2,
+      s"fixture must hold >= 10 segments and a compaction: $ids")
+    val lineageDirs = Files.list(Paths.get(dir, "t"))
+    try assert(lineageDirs.iterator().asScala.forall(!_.toString.endsWith("-lineage")))
+    finally lineageDirs.close()
+    ids.foreach { id =>
+      var ok = false
+      val jobs = jobsOf { ok = log.verifyLineage("t", id) }
+      assert(ok, s"snapshot $id must verify")
+      assert(jobs === 1, s"verifyLineage of snapshot $id ran $jobs jobs")
+    }
+  }
+
+  test("a legacy segment's lineage directory verifies, lists, detects loss and is vacuumed") {
+    val dir = Files.createTempDirectory("graft-vlin-legacy").toString
+    val log = new SnapshotLog(spark, dir)
+    log.mergeAppend("t", (1L to 300L).map(i => (i, s"v$i")).toDF("id", "v").repartition(3),
+      Seq("id"))
+    log.mergeAppend("t", (301L to 400L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    def lineageSet = log.lineage("t").get
+      .select($"snapshot_id", $"partition_id", $"output_rows", $"checksum")
+      .as[(Long, Int, Long, Long)].collect().toSet
+    val before = lineageSet
+    assert(before.map(_._1) === Set(1L, 2L))
+
+    // segment 1 in the older layout: no `lineage` field on its manifest
+    // line, its tuples in a seven-column snapshot-1-lineage/ directory
+    val legacyDir = Paths.get(dir, "t", "snapshot-1-lineage")
+    log.lineage("t").get.filter($"snapshot_id" === 1L).coalesce(1)
+      .write.parquet(legacyDir.toString)
+    val m = Paths.get(dir, "t", "_snapshots.json")
+    val lines = Files.readAllLines(m).asScala.toSeq
+    val rewritten = lines.map(l =>
+      if (l.contains("\"snapshot_id\": 1,")) l.replaceAll(""", "lineage": \[.*\]\}$""", "}")
+      else l)
+    assert(rewritten.head != lines.head && !rewritten.head.contains("lineage"))
+    Files.write(m, rewritten.mkString("\n").getBytes)
+
+    assert(log.verifyLineage("t", 1L) && log.verifyLineage("t", 2L))
+    assert(lineageSet === before, "lineage() must list the legacy and the manifest rows")
+    assert(log.lineage("t").get.columns.toSeq === Seq("stage", "partition_id", "input_rows",
+      "output_rows", "checksum", "snapshot_id", "committed_at"))
+
+    val victim = Files.walk(Paths.get(log.snapshotPath("t", 1)))
+      .filter(_.toString.endsWith(".parquet")).findFirst().get()
+    Files.delete(victim)
+    assert(!log.verifyLineage("t", 1L), "a lost data file of a legacy segment must not verify")
+
+    log.commit("t", log.read("t").get, bloomKeys = Seq("id"))
+    assert(log.vacuum("t") === Seq(1L, 2L))
+    assert(!Files.exists(legacyDir), "vacuum must delete the legacy lineage directory")
+    assert(log.verifyLineage("t", 3L))
   }
 
   test("truncateAll materializes three independent tables in ONE job, values intact") {
