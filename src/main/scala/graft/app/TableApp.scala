@@ -1,10 +1,10 @@
 package graft.app
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit, max, sum}
 
 import graft.tables.SnapshotLog
@@ -36,9 +36,12 @@ import graft.tables.SnapshotLog
   * `verify` scans each segment once (one job); a segment committed before
   * lineage moved into the manifest is checked against its
   * `snapshot-N-lineage/` directory instead.
-  * `compact` preserves the table's partition layout (detected from the live
-  * segment's directory structure) and merge keys (from the manifest), so the
-  * compacted snapshot stays bloom-prunable and partition-pruned.
+  * `compact` is `SnapshotLog.compactIfFragmented` with one segment allowed:
+  * the layout (partition columns, merge keys, aux key sets) is read from the
+  * live segments' manifest lines, by the same rule as auto-compaction, so
+  * the compacted snapshot stays bloom-prunable and partition-pruned. Only a
+  * legacy line without `partition_by` has its partition columns recovered
+  * from its directories.
   */
 object TableApp {
   private def usage(): Nothing = {
@@ -60,24 +63,6 @@ object TableApp {
       .map(_.getFileName.toString).toSeq.sorted
   }
 
-  /** Partition columns of a committed segment, recovered from its hive-style
-    * directory layout (`col=value/...`), outermost first.
-    */
-  private def partitionColumns(segDir: Path): Seq[String] = {
-    def step(dir: Path, acc: Seq[String]): Seq[String] = {
-      if (!Files.isDirectory(dir)) return acc
-      val sub = Files.list(dir).iterator().asScala
-        .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSeq
-      // find, not head: ignore non-partition dirs (e.g. a crashed write's
-      // _temporary) sitting next to hive-style col=value dirs
-      sub.find(_.contains("=")) match {
-        case Some(first) => step(dir.resolve(first), acc :+ first.takeWhile(_ != '='))
-        case None => acc
-      }
-    }
-    step(segDir, Seq.empty)
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.length < 2) usage()
     val wh = args(0)
@@ -95,7 +80,8 @@ object TableApp {
           log.history(t).orderBy("snapshot_id").collect().foreach { r =>
             println(s"  snapshot=${r.getLong(0)} kind=${r.getString(1)}" +
               s" upsert=${r.getBoolean(2)} keys=${r.getSeq[String](3).mkString(",")}" +
-              s" committed_at=${r.get(4)} live=${r.getBoolean(5)}")
+              s" committed_at=${r.get(4)} live=${r.getBoolean(5)}" +
+              s" partition_by=${r.getSeq[String](7).mkString(",")}")
           }
         }
 
@@ -120,45 +106,21 @@ object TableApp {
       case "compact" =>
         if (args.length < 3) usage()
         val t = args(2)
-        val live = log.history(t).filter("live").orderBy("snapshot_id").collect()
+        val live = log.history(t).filter("live").collect()
         if (live.isEmpty) { println(s"[table] $t: nothing committed"); sys.exit(1) }
         if (live.length == 1) { println(s"[table] $t: already one full snapshot"); sys.exit(0) }
-        // layout (partition columns + merge keys) comes from the live FULL
-        // (base) segment, falling back to the majority of live segments —
-        // NOT from the newest delta: an unpartitioned or keyless delta
-        // landing last would otherwise silently compact the table without
-        // its partition layout / key bloom, degrading every later read and
-        // merge prune. Empty layouts don't outvote recorded ones.
-        val layouts = live.toSeq.map { r =>
-          (r.getSeq[String](3).toSeq,
-            partitionColumns(Paths.get(log.snapshotPath(t, r.getLong(0)))))
-        }
-        // aux lookup-bloom column sets follow the same base/majority rule
-        val auxLayouts = live.toSeq.map(
-          _.getSeq[scala.collection.Seq[String]](6).toSeq.map(_.toSeq))
-        def majority[A](xs: Seq[A]): Option[A] =
-          // secondary key = the layout itself: a tied vote (e.g. live deltas
-          // split 2-2 with no full base) must pick deterministically, not by
-          // HashMap iteration order
-          xs.groupBy(identity).toSeq
-            .sortBy { case (k, g) => (-g.size, k.toString) }
-            .headOption.map(_._1)
-        val base = if (live.head.getString(1) == "full") Some(layouts.head) else None
-        val keys = base.map(_._1).filter(_.nonEmpty)
-          .orElse(majority(layouts.map(_._1).filter(_.nonEmpty))).getOrElse(Seq.empty)
-        val parts = base.map(_._2).filter(_.nonEmpty)
-          .orElse(majority(layouts.map(_._2).filter(_.nonEmpty))).getOrElse(Seq.empty)
-        val auxBase = if (live.head.getString(1) == "full") Some(auxLayouts.head) else None
-        val aux = auxBase.filter(_.nonEmpty)
-          .orElse(majority(auxLayouts.filter(_.nonEmpty))).getOrElse(Seq.empty)
-        if (layouts.map(_._1).distinct.size > 1 || layouts.map(_._2).distinct.size > 1)
+        val id = log.compactIfFragmented(t, 1).get
+        val c = log.history(t).filter(col("snapshot_id") === id).head()
+        def keys(r: Row) = r.getSeq[String](3).toList
+        def parts(r: Row) = r.getSeq[String](7).toList
+        val layouts = live.toSeq.map(r => (keys(r), parts(r))).distinct
+        if (layouts.size > 1)
           println(s"[table] $t: WARNING live segments disagree on layout" +
-            s" (${layouts.distinct.mkString("; ")}) — compacting with" +
-            s" partitionBy=${parts.mkString(",")} keys=${keys.mkString(",")}")
-        val id = log.commit(t, log.read(t).get, parts, bloomKeys = keys,
-          auxBloomKeys = aux)
+            s" (${layouts.mkString("; ")}) — compacting with" +
+            s" partitionBy=${parts(c).mkString(",")} keys=${keys(c).mkString(",")}")
+        val aux = c.getSeq[scala.collection.Seq[String]](6)
         println(s"[table] $t: compacted ${live.length} live segments -> snapshot $id" +
-          s" (partitionBy=${parts.mkString(",")} bloomKeys=${keys.mkString(",")}" +
+          s" (partitionBy=${parts(c).mkString(",")} bloomKeys=${keys(c).mkString(",")}" +
           (if (aux.nonEmpty) s" auxBlooms=${aux.map(_.mkString("|")).mkString(",")}" else "") + ")")
 
       case "vacuum" =>

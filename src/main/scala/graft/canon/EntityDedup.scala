@@ -155,6 +155,15 @@ object EntityDedup {
         $"group_id")
   }
 
+  /** Both candidate-edge routes' skip-log: `count` over-cap blocks, ≤ 10 examples. */
+  private def warnHotBlocks(count: Int, maxBlockSize: Int,
+      examples: Seq[(String, String, Long)]): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"candidateEdges: $count firstToken block(s) exceed " +
+        s"maxBlockSize=$maxBlockSize; similarity pairs skipped for them " +
+        s"(alias-rule merges still apply): " +
+        examples.map { case (k, t, n) => s"$k/$t=$n" }.mkString(", "))
+
   /** Similarity + rule edges over blocked candidates (J1 + J3 rules).
     *
     * Two edge sources, both linear-ish at corpus scale:
@@ -194,12 +203,8 @@ object EntityDedup {
     val hotKeys = base.groupBy($"fkey", $"entity_type").agg(count(lit(1)).as("bsz"))
       .filter($"bsz" > cfg.maxBlockSize)
       .collect()
-    if (hotKeys.nonEmpty) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"candidateEdges: ${hotKeys.length} firstToken block(s) exceed " +
-        s"maxBlockSize=${cfg.maxBlockSize}; similarity pairs skipped for them " +
-        s"(alias-rule merges still apply): " +
-        hotKeys.take(10).map(r => s"${r.getString(0)}/${r.getString(1)}=${r.getLong(2)}")
-          .mkString(", "))
+    if (hotKeys.nonEmpty) warnHotBlocks(hotKeys.length, cfg.maxBlockSize,
+      hotKeys.take(10).map(r => (r.getString(0), r.getString(1), r.getLong(2))))
     val capped =
       if (hotKeys.isEmpty) base
       else {
@@ -272,11 +277,8 @@ object EntityDedup {
     // (2) similarity pairs within capped firstToken blocks
     val blocks = rows.groupBy(r => (r._3, r._4))
     val hot = blocks.filter(_._2.length > cfg.maxBlockSize)
-    if (hot.nonEmpty) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"candidateEdges: ${hot.size} firstToken block(s) exceed " +
-        s"maxBlockSize=${cfg.maxBlockSize}; similarity pairs skipped for them " +
-        s"(alias-rule merges still apply): " +
-        hot.take(10).map { case ((k, t), ms) => s"$k/$t=${ms.length}" }.mkString(", "))
+    if (hot.nonEmpty) warnHotBlocks(hot.size, cfg.maxBlockSize,
+      hot.take(10).map { case ((k, t), ms) => (k, t, ms.length.toLong) }.toSeq)
     blocks.valuesIterator.foreach { ms =>
       if (ms.length > 1 && ms.length <= cfg.maxBlockSize) {
         var i = 0

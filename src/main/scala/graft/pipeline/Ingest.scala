@@ -206,10 +206,11 @@ object Ingest {
     *
     * Commit: the entities, chunks and triples merges are STAGED side by side
     * (`SnapshotLog.stageMerge`, on a pool created for this call), then
-    * published in that order once all three are written.
-    * Triples go last, so a reader never sees a fact whose entity or source
-    * chunk is not yet visible. If any merge fails, none publishes: the
-    * staged files are deleted and the failure rethrown.
+    * published in that order by one `SnapshotLog.publish` once all three
+    * are written. Triples go last, so a reader never sees a fact whose
+    * entity or source chunk is not yet visible. If any merge fails, none
+    * publishes: the staged files are deleted and the failure rethrown.
+    * A fragmented table compacts only after all three lines have landed.
     */
   def runIncremental(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
       cfg: Config = Config()): Result = {
@@ -265,12 +266,11 @@ object Ingest {
       }))
       futures.map(f => try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
     } finally pool.shutdown()
-    outcomes.collectFirst { case Left(e) => e } match {
-      case Some(e) =>
-        outcomes.foreach(_.foreach(log.discard))
-        throw e
-      case None => outcomes.foreach(_.foreach(log.publish))
+    outcomes.collectFirst { case Left(e) => e }.foreach { e =>
+      outcomes.foreach(_.foreach(log.discard))
+      throw e
     }
+    log.publish(outcomes.flatMap(_.toOption))
   }
 
   /** Columns of `EntityLinker.link`'s output that [[foldLinkedEntities]]

@@ -26,6 +26,9 @@ object StreamingIngest {
   /** Append-stream extraction: each micro-batch is chunked + extracted, raw
     * triples MERGE-append on (chunk_uuid, fact, subject, object) — replays
     * and overlapping batches are no-ops (exactly-once on content).
+    * A micro-batch's two merges are staged, then published together, chunks
+    * first, so no reader sees a raw triple whose chunk is not yet visible;
+    * if the chunks merge fails, the staged raw triples are discarded.
     *
     * Chunk numbering is BATCH-RUN PARITY (reference numbers chunks per
     * document globally, markdown_chunker.py:70-79): each micro-batch offsets
@@ -64,10 +67,13 @@ object StreamingIngest {
               .drop("chunk_off")
               .select(chunks.columns.map(col): _*)
         }
-        log.mergeAppend("raw_triples", raw.toDF(),
-          Seq("chunk_uuid", "fact", "subject", "relationship", "object"),
-          Seq("group_id"))
-        log.mergeAppend("chunks", renumbered, Seq("chunk_uuid"), Seq("group_id"))
+        val rawStaged = log.stageMerge("raw_triples", raw.toDF(),
+          Seq("chunk_uuid", "fact", "subject", "relationship", "object"), Seq("group_id"), Nil,
+          upsert = false)
+        val chunksStaged = try log.stageMerge("chunks", renumbered, Seq("chunk_uuid"),
+          Seq("group_id"), Nil, upsert = false)
+        catch { case e: Throwable => log.discard(rawStaged); throw e }
+        log.publish(Seq(chunksStaged, rawStaged))
         ()
       }
       .start()

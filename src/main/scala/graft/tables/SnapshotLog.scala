@@ -54,13 +54,15 @@ import graft.model.LineageRow
   *    Segments without a bloom (legacy, or a saturated/oversized
   *    compaction) are always scanned — strictly the old behavior.
   *  - staged commits: a merge is two halves. Staging writes the segment's
-  *    parquet and blooms under the table's next snapshot id; publishing
-  *    appends the manifest line, lineage included (and compacts a
-  *    fragmented table). A staged segment is invisible, so a caller can
-  *    stage several tables' merges side by side and publish them in an
-  *    order of its choosing, or `discard` them all when one fails, as
-  *    `Ingest.runIncremental` does. A failed write deletes its own files.
-  *    `mergeAppend`/`mergeUpsert` stage and publish at once.
+  *    parquet and blooms under the table's next snapshot id; `publish`
+  *    appends the manifest lines of several staged segments in order,
+  *    lineage and layout included, and only then compacts fragmented
+  *    tables, reading the layout from the manifest. A staged segment is
+  *    invisible, so a caller can stage several tables' merges side by side
+  *    and publish them together, or `discard` them all when one fails, as
+  *    `Ingest.runIncremental` and `StreamingIngest` do. A failed write
+  *    deletes its own files. `mergeAppend`/`mergeUpsert` stage and publish
+  *    at once.
   *  - a merge's input feeds two jobs (bloom probe and write) and is
   *    persisted for them only when its plan is not already materialized
   *    (cached, local, or checkpointed leaves): a persist of a cached input
@@ -117,15 +119,16 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
   @volatile private[graft] var lastMergeScan: Option[(Int, Int)] = None
 
   /** (segments scanned, segments live) of the most recent point-lookup read
-    * (`readForKeys`/`readForAnyKeys`) — the diagnostics hook for the
+    * (`readForKey`/`readForAnyKeys`) — the diagnostics hook for the
     * read-side bloom index.
     */
   @volatile private[graft] var lastLookupScan: Option[(Int, Int)] = None
 
-  /** One manifest line; `lineage` is None on legacy lines (see recordedLineage). */
+  /** One manifest line; `lineage` and `partitionBy` are None on legacy lines. */
   private case class Entry(id: Long, kind: String, upsert: Boolean, keys: Seq[String],
       schemaB64: Option[String], committedAtMs: Option[Long] = None, hashV: Int = 1,
-      auxKeys: Seq[Seq[String]] = Nil, lineage: Option[Seq[(Int, Long, Long)]] = None)
+      auxKeys: Seq[Seq[String]] = Nil, lineage: Option[Seq[(Int, Long, Long)]] = None,
+      partitionBy: Option[Seq[String]] = None)
 
   private def tableDir(name: String): Path = Paths.get(baseDir, name)
   private def manifest(name: String): Path = tableDir(name).resolve("_snapshots.json")
@@ -145,7 +148,8 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
         strings("keys"), field("schema_b64").map(_.asText), field("committed_at_ms").map(_.asLong),
         j.path("hash_v").asInt(1), strings("aux_keys").map(_.split("\\|").toSeq),
         field("lineage").map(_.elements().asScala.map(t =>
-          (t.get(0).asInt, t.get(1).asLong, t.get(2).asLong)).toSeq))
+          (t.get(0).asInt, t.get(1).asLong, t.get(2).asLong)).toSeq),
+        field("partition_by").map(_ => strings("partition_by")))
     }
   }
 
@@ -170,11 +174,9 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     tableDir(name).resolve(s"snapshot-$id").toString
 
   /** The live segment set: last full snapshot + every delta after it. */
-  private def liveEntries(name: String): Seq[Entry] = {
-    val all = entries(name)
-    val lastFull = all.lastIndexWhere(_.kind == "full")
-    if (lastFull < 0) all else all.drop(lastFull)
-  }
+  private def liveOf(all: Seq[Entry]): Seq[Entry] =
+    all.drop(math.max(0, all.lastIndexWhere(_.kind == "full")))
+  private def liveEntries(name: String): Seq[Entry] = liveOf(entries(name))
 
   /** Read one segment with its manifest-pinned schema: partition-column
     * TYPE INFERENCE otherwise re-types numeric-looking partition values
@@ -201,9 +203,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * committed at or before `asOf`, or a segment it needs was vacuumed.
     */
   def readAt(name: String, asOf: Long): Option[DataFrame] = {
-    val upTo = entries(name).filter(_.id <= asOf)
-    val lastFull = upTo.lastIndexWhere(_.kind == "full")
-    val live = if (lastFull < 0) upTo else upTo.drop(lastFull)
+    val live = liveOf(entries(name).filter(_.id <= asOf))
     if (live.exists(e => !Files.exists(Paths.get(snapshotPath(name, e.id))))) None
     else resolveSegments(name, live)
   }
@@ -233,8 +233,8 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
   }
 
   /** BLOOM-INDEXED POINT LOOKUP: the resolved table filtered to rows whose
-    * `keys` tuple is one of `values`, scanning ONLY the live segments whose
-    * key bloom (merge-key or aux) might contain one of the literal tuples.
+    * `key` is one of `values`, scanning ONLY the live segments whose
+    * key bloom (merge-key or aux) might contain one of the literals.
     * The graph-query surface (get_chunk(s), get_entity_info,
     * explore_neighbors) is point lookups by uuid — without this every MCP
     * call reads O(table); with it a lookup into a standing 100 TB table
@@ -243,12 +243,8 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * bloom (legacy, ceiling-skipped, different column set) always scan.
     * None only when the table has no committed state at all.
     */
-  def readForKeys(name: String, keys: Seq[String], values: Seq[Seq[Any]]): Option[DataFrame] =
-    readForAnyKeys(name, Seq(keys -> values))
-
-  /** Single-column convenience form of `readForKeys`. */
   def readForKey(name: String, key: String, values: Seq[Any]): Option[DataFrame] =
-    readForKeys(name, Seq(key), values.map(Seq(_)))
+    readForAnyKeys(name, Seq(Seq(key) -> values.map(Seq(_))))
 
   /** Disjunctive point lookup: rows matching ANY (columns, literal tuples)
     * probe — the 1-hop adjacency shape (`subject_uuid = u OR object_uuid
@@ -361,15 +357,35 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
   }
 
   /** Commit history of a table as a DataFrame (ascending snapshot_id):
-    * id, kind (full|delta), upsert flag, merge keys, commit timestamp, and
-    * whether the segment is part of the CURRENT live read set.
+    * id, kind (full|delta), upsert flag, merge keys, commit timestamp,
+    * whether the segment is part of the CURRENT live read set, aux key sets
+    * and partition columns (recovered from the directories on legacy lines).
     */
   def history(name: String): DataFrame = {
     val liveIds = liveEntries(name).map(_.id).toSet
     entries(name).map(e => (e.id, e.kind, e.upsert, e.keys,
-        e.committedAtMs.map(new Timestamp(_)).orNull, liveIds(e.id), e.auxKeys))
-      .toDF("snapshot_id", "kind", "upsert", "keys", "committed_at", "live", "aux_keys")
+        e.committedAtMs.map(new Timestamp(_)).orNull, liveIds(e.id), e.auxKeys,
+        partitionColumnsOf(name, e)))
+      .toDF("snapshot_id", "kind", "upsert", "keys", "committed_at", "live", "aux_keys",
+        "partition_by")
   }
+
+  /** A segment's partition columns as its line records them; a legacy line's
+    * are recovered from its hive-style `col=value/` directories, outermost
+    * first (a non-partition dir such as a crashed write's `_temporary` is
+    * skipped; a vacuumed segment has none).
+    */
+  private def partitionColumnsOf(name: String, e: Entry): Seq[String] =
+    e.partitionBy.getOrElse {
+      def step(dir: Path): Seq[String] = if (!Files.isDirectory(dir)) Nil else {
+        val s = Files.list(dir)
+        try s.iterator().asScala.filter(Files.isDirectory(_)).map(_.getFileName.toString)
+          .find(_.contains("=")).fold(Seq.empty[String])(f =>
+            f.takeWhile(_ != '=') +: step(dir.resolve(f)))
+        finally s.close()
+      }
+      step(Paths.get(snapshotPath(name, e.id)))
+    }
 
   /** RETENTION: delete every segment older than the last full snapshot (the
     * set unreachable from `read`, kept only for time travel) — data,
@@ -496,9 +512,6 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
       finally in.close()
     }
 
-  private def segBloom(name: String, e: Entry): Option[org.apache.spark.util.sketch.BloomFilter] =
-    loadBloom(bloomPath(name, e.id))
-
   /** The bloom file covering a requested column set on a segment, if any:
     * the merge-key bloom when the sets match (case-insensitively), else a
     * matching aux bloom. None = no usable bloom = the segment must scan.
@@ -553,7 +566,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     var group = List.empty[(Entry, org.apache.spark.util.sketch.BloomFilter)]
     var groupBytes = 0L
     candidates.foreach { e =>
-      segBloom(name, e) match {
+      loadBloom(bloomPath(name, e.id)) match {
         case None => noBloom += e // unreadable bloom file: always scan
         case Some(b) =>
           val bytes = b.bitSize() / 8
@@ -578,9 +591,8 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     */
   def commit(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       bloomKeys: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
-    publish(Staged(name, partitionBy, bloomKeys, auxBloomKeys,
-      stageSegment(name, df, partitionBy, kind = "full", upsert = false,
-        keys = bloomKeys, auxKeys = auxBloomKeys)))
+    publish(Seq(Staged(name, stageSegment(name, df, partitionBy, kind = "full",
+      upsert = false, keys = bloomKeys, auxKeys = auxBloomKeys)))).head
 
   /** One write pass that streams rows to parquet while folding per-partition
     * lineage (row count + xor-of-row-hash checksum) into a collection
@@ -651,7 +663,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
 
     // PARQUET COLUMN BLOOM FILTERS on the merge-key + aux lookup columns of
     // FULL segments: the pruning level BELOW the segment blooms. Once
-    // readForKeys/scannedEntries has resolved which segments might hold a
+    // readForAnyKeys/scannedEntries has resolved which segments might hold a
     // key, the parquet reader's row-group filter (parquet.filter.bloom
     // .enabled — on by default under spark.sql.parquet.filterPushdown)
     // skips the row groups inside a surviving segment whose column bloom
@@ -769,31 +781,33 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
       }
     }
 
-    Some(Segment(id, kind, upsert, dataSchema, hashV, tuples))
+    Some(Segment(id, kind, upsert, dataSchema, hashV, tuples, partitionBy, keys, auxKeys))
   }
 
-  /** Lists a staged segment in its table's manifest (atomic rename), which
-    * makes it visible to readers, then compacts a delta-fragmented table.
-    * Returns the new snapshot id, or the current one when nothing was
-    * staged (a zero-row delta).
+  /** Lists the staged segments in their tables' manifests in order (atomic
+    * renames), which makes them visible; a line that fails to land discards
+    * its segment and every later one, then rethrows. Only after every line
+    * has landed does it compact the tables that gained a delta, so a failed
+    * compaction leaves them published and fragmented. Returns per merge its
+    * table's compaction id, else its snapshot id, else (a zero-row delta)
+    * the current one.
     */
-  private[graft] def publish(s: Staged): Long = s.segment match {
-    case None => latestSnapshot(s.name).get
-    case Some(seg) =>
-      // aux key sets are recorded even when the row count exceeded the bloom
-      // ceiling (like `keys`): a missing bloom FILE means "always scan", and
-      // compaction derives the intended layout from the manifest
-      appendManifest(s.name, seg, s.keys, s.auxKeys)
-      if (seg.kind == "full") seg.id
-      else compactIfFragmented(s.name, autoCompactSegments, s.partitionBy, s.keys, s.auxKeys)
-        .getOrElse(seg.id)
+  private[graft] def publish(staged: Seq[Staged]): Seq[Long] = {
+    staged.indices.foreach { i =>
+      try staged(i).segment.foreach(appendManifest(staged(i).name, _))
+      catch { case e: Throwable => staged.drop(i).foreach(discard); throw e }
+    }
+    val compacted = staged.collect { case Staged(n, Some(seg)) if seg.kind == "delta" => n }
+      .distinct.flatMap(n => compactIfFragmented(n, autoCompactSegments).map(n -> _)).toMap
+    staged.map(s => compacted.getOrElse(s.name,
+      s.segment.fold(latestSnapshot(s.name).get)(_.id)))
   }
 
   /** Deletes a staged segment's data and bloom files; it was never listed,
     * so no reader can have seen it.
     */
   private[graft] def discard(s: Staged): Unit =
-    s.segment.foreach(seg => deleteSegment(s.name, seg.id, s.auxKeys))
+    s.segment.foreach(seg => deleteSegment(s.name, seg.id, seg.auxKeys))
 
   /** Data, legacy lineage directory and every bloom file of snapshot `id`. */
   private def deleteSegment(name: String, id: Long, auxKeys: Seq[Seq[String]]): Unit = {
@@ -860,17 +874,17 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
   private def legacyLineageRows(dirs: Seq[Path]): DataFrame =
     spark.read.schema(Encoders.product[LineageRow].schema).parquet(dirs.map(_.toString): _*)
 
-  private def appendManifest(name: String, seg: Segment, keys: Seq[String],
-      auxKeys: Seq[Seq[String]]): Unit = {
+  private def appendManifest(name: String, seg: Segment): Unit = {
     Files.createDirectories(tableDir(name))
     val m = manifest(name)
     val existing = manifestLines(name)
-    val keysJson = keys.map(k => "\"" + k + "\"").mkString("[", ", ", "]")
+    def strings(xs: Seq[String]) = xs.map(k => "\"" + k + "\"").mkString("[", ", ", "]")
     // flat-encoded (see parseEntry); only appended when present so legacy
-    // manifest lines stay byte-identical in format
+    // manifest lines stay byte-identical in format. Recorded even above the
+    // bloom ceiling (like `keys`): compaction reads the layout from the line
     val auxJson =
-      if (auxKeys.isEmpty) ""
-      else auxKeys.map(s => "\"" + s.mkString("|") + "\"")
+      if (seg.auxKeys.isEmpty) ""
+      else seg.auxKeys.map(s => "\"" + s.mkString("|") + "\"")
         .mkString(""", "aux_keys": [""", ", ", "]")
     val schemaB64 = java.util.Base64.getEncoder.encodeToString(seg.schema.json.getBytes(UTF_8))
     val lineageJson = seg.lineage.map { case (p, n, x) => s"[$p, $n, $x]" }
@@ -885,7 +899,8 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     val committedAt = math.max(System.currentTimeMillis(), prevTs)
     val entry =
       s"""{"snapshot_id": ${seg.id}, "table": "$name", "kind": "${seg.kind}", """ +
-        s""""upsert": ${seg.upsert}, "keys": $keysJson$auxJson, "schema_b64": "$schemaB64", """ +
+        s""""upsert": ${seg.upsert}, "keys": ${strings(seg.keys)}$auxJson, """ +
+        s""""partition_by": ${strings(seg.partitionBy)}, "schema_b64": "$schemaB64", """ +
         s""""hash_v": ${seg.hashV}, "committed_at_ms": $committedAt, "lineage": $lineageJson}"""
     val tmp = tableDir(name).resolve(s"_snapshots.json.tmp-${seg.id}")
     Files.write(tmp, (existing.map(_._1) :+ entry).mkString("\n").getBytes(UTF_8))
@@ -916,7 +931,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     */
   def mergeAppend(name: String, df: DataFrame, keys: Seq[String],
       partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
-    publish(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = false))
+    publish(Seq(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = false))).head
 
   /** MERGE with UPDATE semantics (entity-link summary/alias merges): rows
     * whose key is new OR whose content differs from the live row are written
@@ -927,7 +942,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     */
   def mergeUpsert(name: String, df: DataFrame, keys: Seq[String],
       partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
-    publish(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = true))
+    publish(Seq(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = true))).head
 
   /** [[mergeUpsert]]'s (`upsert`) or [[mergeAppend]]'s write, staged:
     * readers see nothing until [[publish]]; [[discard]] deletes it.
@@ -965,7 +980,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
             skipIfEmpty = true, auxKeys = auxKeys)
         } finally if (persisted) in.unpersist(blocking = false)
       }
-    Staged(name, partitionBy, keys, auxKeys, segment)
+    Staged(name, segment)
   }
 
   /** True when re-reading `df` costs no upstream work: every leaf of its
@@ -987,17 +1002,29 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
 
   /** LSM-style amortized compaction: when the live manifest holds more than
     * `maxSegments` segments, rewrite the resolved table as ONE full snapshot
-    * (collapsing the merge-on-read window). Auto-invoked after merge writes,
-    * so each row is rewritten at most once per `maxSegments` appends —
-    * amortized O(1/maxSegments) extra write per row — and the read path's
-    * segment union stays bounded no matter how many increments land.
+    * (collapsing the merge-on-read window). Auto-invoked by `publish`, so
+    * each row is rewritten at most once per `maxSegments` appends and the
+    * read path's segment union stays bounded; `TableApp compact` passes 1.
+    * The layout comes from the live entries, not a caller, so a bare delta
+    * landing last cannot strip it: partition columns, merge keys and aux
+    * key sets are each the live full base's value when non-empty, else the
+    * most common non-empty live value (ties by its text), else empty.
     */
-  def compactIfFragmented(name: String, maxSegments: Int,
-      partitionBy: Seq[String] = Nil, bloomKeys: Seq[String] = Nil,
-      auxBloomKeys: Seq[Seq[String]] = Nil): Option[Long] =
-    if (liveEntries(name).size > maxSegments)
-      read(name).map(df => commit(name, df, partitionBy, bloomKeys, auxBloomKeys))
-    else None
+  def compactIfFragmented(name: String, maxSegments: Int): Option[Long] = {
+    val live = liveEntries(name)
+    if (live.size <= maxSegments) None
+    else {
+      val baseFull = live.head.kind == "full"
+      def pick[A](values: Seq[Seq[A]]): Seq[A] =
+        values.headOption.filter(v => baseFull && v.nonEmpty).orElse(
+          values.filter(_.nonEmpty).map(_.toList).groupBy(identity).toSeq
+            .sortBy { case (v, g) => (-g.size, v.toString) }.headOption.map(_._1))
+          .getOrElse(Nil)
+      resolveSegments(name, live).map(df => commit(name, df,
+        pick(live.map(partitionColumnsOf(name, _))), pick(live.map(_.keys)),
+        pick(live.map(_.auxKeys))))
+    }
+  }
 
   /** Read a stage if committed, else compute + commit it (resume semantics).
     * `bloomKeys` = the table's merge keys when later increments will merge
@@ -1028,11 +1055,13 @@ object SnapshotLog {
   private val BloomFpp = 1e-6
 
   /** A segment written under its snapshot id but not listed in the manifest,
-    * with its per-task (partition, rows, checksum) lineage tuples.
+    * with its per-task (partition, rows, checksum) lineage tuples and its
+    * layout: partition columns, merge keys and aux key sets.
     */
   private[graft] final case class Segment(id: Long, kind: String, upsert: Boolean,
       schema: org.apache.spark.sql.types.StructType, hashV: Int,
-      lineage: Seq[(Int, Long, Long)])
+      lineage: Seq[(Int, Long, Long)], partitionBy: Seq[String], keys: Seq[String],
+      auxKeys: Seq[Seq[String]])
 
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -1040,6 +1069,5 @@ object SnapshotLog {
     * `segment` is None when the merge had no new rows. [[SnapshotLog.publish]]
     * makes it visible; [[SnapshotLog.discard]] deletes it.
     */
-  private[graft] final case class Staged(name: String, partitionBy: Seq[String],
-      keys: Seq[String], auxKeys: Seq[Seq[String]], segment: Option[Segment])
+  private[graft] final case class Staged(name: String, segment: Option[Segment])
 }

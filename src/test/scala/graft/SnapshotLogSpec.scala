@@ -898,4 +898,98 @@ class SnapshotLogSpec extends SparkSpec {
       .select($"committed_at").head().getTimestamp(0).getTime)
     assert(committedAt === committedAt.sorted, s"commit times ${tables.zip(committedAt)}")
   }
+
+  /** Snapshot ids with a data directory or bloom file under table `t` that
+    * its manifest does not list.
+    */
+  private def unlisted(log: SnapshotLog, dir: String, t: String): Seq[String] = {
+    val listed = log.snapshots(t).toSet
+    val seg = """snapshot-(\d+)(\.bloom.*)?""".r
+    val st = Files.list(Paths.get(dir, t))
+    try st.iterator().asScala.map(_.getFileName.toString).collect {
+      case n @ seg(id, _) if !listed(id.toLong) => n
+    }.toSeq.sorted finally st.close()
+  }
+
+  private def partitionDirs(p: String): Seq[String] = {
+    val st = Files.list(Paths.get(p))
+    try st.iterator().asScala.map(_.getFileName.toString).filter(_.contains("=")).toSeq
+    finally st.close()
+  }
+
+  test("auto-compaction keeps the base's layout when the merges that trip it pass none") {
+    val dir = Files.createTempDirectory("graft-layout").toString
+    val log = new SnapshotLog(spark, dir, autoCompactSegments = 2)
+    log.commit("t", (1L to 40L).map(i => (i, s"v$i", s"g${i % 3}")).toDF("id", "v", "g"),
+      partitionBy = Seq("g"), bloomKeys = Seq("id"), auxBloomKeys = Seq(Seq("v")))
+    // three deltas without partition columns or aux keys: the second trips
+    // compaction (3 live > 2), which must still write the base's layout
+    (1 to 3).foreach(i =>
+      log.mergeAppend("t", Seq((100L + i, s"w$i", "g0")).toDF("id", "v", "g"), Seq("id")))
+    assert(log.history("t").filter($"kind" === "full").select($"snapshot_id").as[Long]
+      .collect().toSeq === Seq(1L, 4L))
+    assert(partitionDirs(log.snapshotPath("t", 4)).sorted === Seq("g=g0", "g=g1", "g=g2"),
+      "the compacted snapshot lost the base's partition columns")
+    assert(Files.exists(Paths.get(dir, "t", "snapshot-4.bloom")), "no key bloom")
+    assert(Files.exists(Paths.get(dir, "t", "snapshot-4.bloom-v")), "no aux bloom on v")
+    assert(log.read("t").get.count() === 43L)
+    assert(log.readForKey("t", "v", Seq("w1")).get.select($"id").as[Long].collect().toSeq
+      === Seq(101L))
+  }
+
+  test("a legacy line without partition_by has its partition columns recovered from its directories") {
+    val dir = Files.createTempDirectory("graft-layout-legacy").toString
+    val log = new SnapshotLog(spark, dir)
+    log.commit("t", (1L to 30L).map(i => (i, s"g${i % 2}")).toDF("id", "g"),
+      partitionBy = Seq("g"), bloomKeys = Seq("id"))
+    log.mergeAppend("t", Seq((31L, "g2")).toDF("id", "g"), Seq("id"), partitionBy = Seq("g"))
+    val m = Paths.get(dir, "t", "_snapshots.json")
+    Files.write(m, Files.readAllLines(m).asScala
+      .map(_.replaceAll(""""partition_by": \[[^\]]*\], """, "")).mkString("\n").getBytes)
+    assert(!Files.readString(m).contains("partition_by"))
+
+    assert(log.compactIfFragmented("t", 1) === Some(3L))
+    assert(partitionDirs(log.snapshotPath("t", 3)).sorted === Seq("g=g0", "g=g1", "g=g2"))
+    assert(Files.exists(Paths.get(dir, "t", "snapshot-3.bloom")))
+    assert(log.history("t").orderBy($"snapshot_id").select($"partition_by").as[Seq[String]]
+      .collect().toSeq === Seq(Seq("g"), Seq("g"), Seq("g")))
+    assert(Files.readAllLines(m).asScala.last.contains(""""partition_by": ["g"]"""))
+    assert(log.read("t").get.count() === 31L && log.verifyLineage("t", 3L))
+  }
+
+  test("a compaction that fails after an increment's lines land leaves all three tables published") {
+    val dir = Files.createTempDirectory("graft-compact-fail").toString
+    val base = TranscriptGen.Config(numConvs = 3, turnsPerConv = 20, skew = 1)
+    Ingest.run(spark, TranscriptGen.transcripts(spark, base), dir)
+    val log = new SnapshotLog(spark, dir)
+    val tables = Seq("entities", "chunks", "triples")
+
+    // pad entities to 32 live segments (the default autoCompactSegments) with
+    // one-row upserts under fresh uuids; the increment's entities delta then
+    // makes 33 and trips compaction
+    val entities = log.read("entities").get
+    val row = entities.limit(1).collect().toSeq.asJava
+    val started = System.nanoTime()
+    (2 to 32).foreach { i =>
+      log.mergeUpsert("entities", spark.createDataFrame(row, entities.schema)
+        .withColumn("entity_uuid", lit(s"pad-$i")), Seq("entity_uuid"), Seq("group_id"))
+    }
+    info(f"padding entities to 32 live segments took ${(System.nanoTime() - started) / 1e9}%.1f s")
+    assert(log.snapshots("entities") === (1L to 32L))
+
+    // the compaction (entities snapshot 34, after the increment's 33) fails
+    // writing its key bloom: a directory sits where that file goes
+    val before = tables.map(log.snapshots(_))
+    val blocker = Paths.get(dir, "entities", "snapshot-34.bloom")
+    Files.createDirectory(blocker)
+    val turns = TranscriptGen.transcripts(spark, base.copy(seed = 5L))
+      .withColumn("conv_id", concat(lit("inc-"), $"conv_id")).as[Turn]
+    intercept[java.io.IOException](Ingest.runIncremental(spark, turns, dir))
+    Files.deleteIfExists(blocker)
+
+    assert(tables.map(log.snapshots(_)) === before.map(ids => ids :+ (ids.last + 1)),
+      "every table must publish its increment segment, and entities must not compact")
+    tables.foreach(t => assert(unlisted(log, dir, t).isEmpty, s"$t holds unlisted files"))
+    assert(log.read("entities").get.count() > entities.count())
+  }
 }

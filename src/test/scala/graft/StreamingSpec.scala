@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.model.Turn
 import graft.streaming.StreamingIngest
@@ -94,6 +95,25 @@ class StreamingSpec extends SparkSpec {
     assert(streamed === batch,
       s"restart+replay must land the single-batch result; diff=" +
         s"${(streamed.toSet diff batch.toSet) ++ (batch.toSet diff streamed.toSet)}")
+  }
+
+  test("a micro-batch whose chunks merge throws publishes neither table") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft-stream-fail").toString
+    // a directory where the chunks merge's key bloom goes makes that merge throw
+    Files.createDirectories(Paths.get(dir, "chunks", "snapshot-1.bloom"))
+    val mem = MemoryStream[Turn]
+    val q = StreamingIngest.start(spark, mem.toDS(), dir)
+    try {
+      mem.addData(turn("c1", 0, fact1))
+      intercept[StreamingQueryException](q.processAllAvailable())
+    } finally q.stop()
+    val log = new SnapshotLog(spark, dir)
+    assert(log.snapshots("raw_triples").isEmpty,
+      "raw triples were published although their chunk was not")
+    assert(log.snapshots("chunks").isEmpty)
+    assert(!Files.exists(Paths.get(dir, "raw_triples", "snapshot-1")),
+      "the staged raw triples were left behind")
   }
 
   test("flatMapGroupsWithState session tracker accumulates per-conv state across batches") {
