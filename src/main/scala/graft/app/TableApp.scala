@@ -4,10 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, lit, max, sum}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.{col, concat_ws, lit, max, sum}
 
 import graft.tables.SnapshotLog
+import graft.tables.SnapshotLog.Write
 
 /** Warehouse maintenance CLI — the operational surface of the table layer
   * (reference: a standing Neo4j store is administered out-of-band; this
@@ -72,6 +73,15 @@ object TableApp {
 
     def targets(idx: Int): Seq[String] =
       if (args.length > idx) Seq(args(idx)) else tables(wh)
+
+    // the committed table `t`; exit 2 when it is absent or lacks one of `cols`
+    def committed(t: String, cols: String*): DataFrame = {
+      val src = log.read(t).getOrElse { System.err.println(s"no committed table: $t"); sys.exit(2) }
+      for (c <- cols if !src.columns.contains(c)) {
+        System.err.println(s"table $t has no '$c' column"); sys.exit(2)
+      }
+      src
+    }
 
     cmd match {
       case "history" =>
@@ -139,37 +149,18 @@ object TableApp {
         }
         if (bad > 0) { println(s"[table] $bad snapshot(s) FAILED lineage verification"); sys.exit(1) }
 
-      // ann-index <table> [nCentroids] [vecCol] [idCol]: train + commit the
-      // persisted IVF index for a committed table's vector column; serving
-      // reads <table>_ann_{centroids,assignments} via Similarity.ivfTopKIndexed
+      // ann-index <table> [nCentroids] [vecCol] [idCol]: train + commit an IVF index
       case "ann-index" =>
         if (args.length < 3) usage()
         val t = args(2)
         val nCentroids = args.lift(3).map(_.toInt).getOrElse(64)
-        val src = log.read(t).getOrElse {
-          System.err.println(s"no committed table: $t"); sys.exit(2)
-        }
         val vecCol = args.lift(4).getOrElse("embedding")
+        val src = committed(t, vecCol)
         val idCol = args.lift(5).orElse(
           Seq("fact_uuid", "vec_id", "doc_id").find(src.columns.contains)).getOrElse {
           System.err.println(s"no id column found in $t (pass one explicitly)"); sys.exit(2)
         }
-        if (!src.columns.contains(vecCol)) {
-          System.err.println(s"table $t has no '$vecCol' column"); sys.exit(2)
-        }
-        val (cents, assigned) = graft.ops.Similarity.buildIvfIndex(
-          src, nCentroids = nCentroids, kmeansIters = 2,
-          idCol = idCol, vecCol = vecCol)
-        // a (re)build pairs fresh centroids with a FULL assignment snapshot —
-        // merge-appending into an older build would mix rows keyed to the
-        // previous centroids' cells; only ann-refresh (same centroids)
-        // appends. bloomKeys keep the refresh deltas prunable.
-        log.commit(s"${t}_ann_centroids", cents)
-        val assignedRows = assigned.persist()
-        val nAssigned = assignedRows.count()
-        log.commit(s"${t}_ann_assignments", assignedRows, partitionBy = Seq("cell"),
-          bloomKeys = Seq("cell", idCol))
-        assignedRows.unpersist()
+        val nAssigned = annIndex(log, t, src, nCentroids, vecCol, idCol)
         println(s"[table] $t: IVF index committed " +
           s"(${t}_ann_centroids n=$nCentroids, ${t}_ann_assignments " +
           s"rows=$nAssigned idCol=$idCol)")
@@ -204,11 +195,7 @@ object TableApp {
         println(s"[table] $t: ann-refresh appended $nNew assignment row(s)" +
           s" (snapshot $snap)")
 
-      // sketch <table> <column> [width] [depth] [p]: build-or-refresh
-      // committed CMS + HLL sketches over a column. Appends since the last
-      // build fold in by MERGE (counters add, registers max) — O(delta),
-      // the standing table is never rescanned; a compaction or upsert since
-      // the last build forces a full rebuild (readSince declines the delta).
+      // sketch <table> <column> [width] [depth] [p]: build or refresh CMS + HLL sketches
       case "sketch" =>
         if (args.length < 4) usage()
         val t = args(2)
@@ -216,57 +203,12 @@ object TableApp {
         val width = args.lift(4).map(_.toInt).getOrElse(1024)
         val depth = args.lift(5).map(_.toInt).getOrElse(4)
         val p = args.lift(6).map(_.toInt).getOrElse(8)
-        val src = log.read(t).getOrElse {
-          System.err.println(s"no committed table: $t"); sys.exit(2)
-        }
-        if (!src.columns.contains(colName)) {
-          System.err.println(s"table $t has no '$colName' column"); sys.exit(2)
-        }
+        val src = committed(t, colName)
         val srcSnap = log.latestSnapshot(t).get
-        val cmsName = s"${t}_sketch_${colName}_cms"
-        val hllName = s"${t}_sketch_${colName}_hll"
-        val meta = Seq("source_snapshot", "width", "depth", "p")
-        val priorCms = log.read(cmsName)
-        val priorHll = log.read(hllName)
-        val priorSnap = priorCms.map(
-          _.agg(max(col("source_snapshot"))).collect()(0).getLong(0))
-        val sameParams = priorCms.forall(d => d.agg(max(col("width")),
-          max(col("depth"))).collect()(0) match {
-            case r => r.getInt(0) == width && r.getInt(1) == depth
-          }) && priorHll.forall(
-          _.agg(max(col("p"))).collect()(0).getInt(0) == p)
-        if (priorSnap.contains(srcSnap) && sameParams) {
-          println(s"[table] $t.$colName sketches already at snapshot $srcSnap")
-        } else {
-          val delta = priorSnap.filter(_ => sameParams)
-            .flatMap(ps => log.readSince(t, ps))
-          val keyed = delta.getOrElse(src).select(col(colName))
-          val (cms, hll, mode) = delta match {
-            case Some(_) =>
-              (graft.ops.Sketch.cmsMerge(
-                priorCms.get.drop(meta: _*),
-                graft.ops.Sketch.countMin(keyed, colName, width, depth)),
-                graft.ops.Sketch.hllMerge(
-                  priorHll.get.drop(meta: _*),
-                  graft.ops.Sketch.hllRegisters(keyed, colName, p)),
-                "incremental")
-            case None =>
-              (graft.ops.Sketch.countMin(keyed, colName, width, depth),
-                graft.ops.Sketch.hllRegisters(keyed, colName, p), "full")
-          }
-          val stamp = (d: DataFrame) => d
-            .withColumn("source_snapshot", lit(srcSnap))
-            .withColumn("width", lit(width)).withColumn("depth", lit(depth))
-            .withColumn("p", lit(p))
-          log.commit(cmsName, stamp(cms))
-          val hllStamped = stamp(hll).persist()
-          log.commit(hllName, hllStamped)
-          val estimate = graft.ops.Sketch.hllEstimate(
-            hllStamped.drop(meta: _*), p)
-          hllStamped.unpersist()
-          println(f"[table] $t.$colName sketches committed ($mode, source " +
-            f"snapshot $srcSnap): cms ${width}x$depth, hll p=$p " +
-            f"distinct≈${estimate}%.0f")
+        sketch(log, t, src, colName, width, depth, p) match {
+          case None => println(s"[table] $t.$colName sketches already at snapshot $srcSnap")
+          case Some((mode, est)) => println(f"[table] $t.$colName sketches committed ($mode," +
+            f" source snapshot $srcSnap): cms ${width}x$depth, hll p=$p distinct≈$est%.0f")
         }
 
       // profile <table>: one-pass column health report (nulls, approx
@@ -274,10 +216,7 @@ object TableApp {
       case "profile" =>
         if (args.length < 3) usage()
         val t = args(2)
-        val src = log.read(t).getOrElse {
-          System.err.println(s"no committed table: $t"); sys.exit(2)
-        }
-        val prof = graft.ops.Profiler.profile(src).collect()
+        val prof = graft.ops.Profiler.profile(committed(t)).collect()
         println("column | dtype | rows | nulls | null_frac | distinct~ | min | max")
         prof.foreach { r =>
           println((0 until 8).map(i => Option(r.get(i)).map {
@@ -301,12 +240,7 @@ object TableApp {
         val labelCol = args(4)
         val posValue = args(5)
         val buckets = args.lift(6).map(_.toInt).getOrElse(4096)
-        val src = log.read(t).getOrElse {
-          System.err.println(s"no committed table: $t"); sys.exit(2)
-        }
-        for (c <- Seq(textCol, labelCol) if !src.columns.contains(c)) {
-          System.err.println(s"table $t has no '$c' column"); sys.exit(2)
-        }
+        val src = committed(t, textCol, labelCol)
         val srcSnap = log.latestSnapshot(t).get
         val modelName = s"${t}_classifier_$textCol"
         val meta = Seq("source_snapshot", "buckets", "npos", "nneg",
@@ -398,6 +332,77 @@ object TableApp {
     spark.stop()
   }
 
+  /** Trains an IVF index over `src`'s `vecCol` and commits `<t>_ann_centroids`
+    * and a FULL `<t>_ann_assignments` snapshot (the older build's rows are
+    * keyed to its centroids' cells; only ann-refresh appends) in one
+    * `SnapshotLog.write`: a failed rebuild leaves the previous pair live.
+    * Bloom keys keep refresh deltas prunable. Returns the assignment rows.
+    */
+  def annIndex(log: SnapshotLog, t: String, src: DataFrame, nCentroids: Int,
+      vecCol: String, idCol: String): Long = {
+    val (cents, assigned) = graft.ops.Similarity.buildIvfIndex(
+      src, nCentroids = nCentroids, kmeansIters = 2, idCol = idCol, vecCol = vecCol)
+    val assignedRows = assigned.persist()
+    try {
+      val nAssigned = assignedRows.count()
+      log.write(Seq(Write(s"${t}_ann_centroids", cents, Write.Full),
+        Write(s"${t}_ann_assignments", assignedRows, Write.Full, Seq("cell", idCol), Seq("cell"))))
+      nAssigned
+    } finally assignedRows.unpersist()
+  }
+
+  /** Builds or refreshes the committed count-min and HLL sketches of `t`'s
+    * `colName`, stamped with `t`'s latest snapshot. Appends since the last
+    * build fold in by MERGE (counters add, registers max), O(delta); a
+    * compaction or upsert since then forces a full rebuild (readSince
+    * declines the delta). Both commit in one `SnapshotLog.write`, so a
+    * failure stamps neither. Returns the mode and the distinct estimate,
+    * or None when both already stand at that snapshot and parameters.
+    */
+  def sketch(log: SnapshotLog, t: String, src: DataFrame, colName: String,
+      width: Int, depth: Int, p: Int): Option[(String, Double)] = {
+    val srcSnap = log.latestSnapshot(t).get
+    val cmsName = s"${t}_sketch_${colName}_cms"
+    val hllName = s"${t}_sketch_${colName}_hll"
+    val meta = Seq("source_snapshot", "width", "depth", "p")
+    val priorCms = log.read(cmsName)
+    val priorHll = log.read(hllName)
+    val priorSnap = priorCms.map(
+      _.agg(max(col("source_snapshot"))).collect()(0).getLong(0))
+    val sameParams = priorCms.forall(d => d.agg(max(col("width")),
+      max(col("depth"))).collect()(0) match {
+        case r => r.getInt(0) == width && r.getInt(1) == depth
+      }) && priorHll.forall(
+      _.agg(max(col("p"))).collect()(0).getInt(0) == p)
+    if (priorSnap.contains(srcSnap) && sameParams) None
+    else {
+      val delta = priorSnap.filter(_ => sameParams)
+        .flatMap(ps => log.readSince(t, ps))
+      val keyed = delta.getOrElse(src).select(col(colName))
+      val (cms, hll, mode) = delta match {
+        case Some(_) =>
+          (graft.ops.Sketch.cmsMerge(
+            priorCms.get.drop(meta: _*),
+            graft.ops.Sketch.countMin(keyed, colName, width, depth)),
+            graft.ops.Sketch.hllMerge(
+              priorHll.get.drop(meta: _*),
+              graft.ops.Sketch.hllRegisters(keyed, colName, p)),
+            "incremental")
+        case None =>
+          (graft.ops.Sketch.countMin(keyed, colName, width, depth),
+            graft.ops.Sketch.hllRegisters(keyed, colName, p), "full")
+      }
+      val stamp = (d: DataFrame) => d.withColumn("source_snapshot", lit(srcSnap))
+        .withColumn("width", lit(width)).withColumn("depth", lit(depth)).withColumn("p", lit(p))
+      val hllStamped = stamp(hll).persist()
+      try {
+        log.write(Seq(Write(cmsName, stamp(cms), Write.Full),
+          Write(hllName, hllStamped, Write.Full)))
+        Some((mode, graft.ops.Sketch.hllEstimate(hllStamped.drop(meta: _*), p)))
+      } finally hllStamped.unpersist()
+    }
+  }
+
   /** Property-graph dump of the committed warehouse — the analogue of the
     * reference's Neo4j materialization (pipeline.py:219-312 creates
     * Entity/Topic/Document/Episodic nodes + fact edges in a live store; a
@@ -419,8 +424,6 @@ object TableApp {
     */
   def exportGraph(log: SnapshotLog, out: String,
       csv: Boolean): Seq[(String, Long)] = {
-    import org.apache.spark.sql.{Column, DataFrame}
-    import org.apache.spark.sql.functions.{col, concat_ws, lit}
     def arr(c: Column) = if (csv) concat_ws(";", c) else c
     def hdr(plain: String, neo: String) = if (csv) neo else plain
     val written = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]

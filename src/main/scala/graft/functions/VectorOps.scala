@@ -40,14 +40,6 @@ object VectorOps {
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dot(a, b) / (na * nb))
   }
 
-  /** Cosine of two *pre-normalized* vectors: just the dot product — backed by
-    * the codegen'd DotProduct expression (the HOF `dot` above is kept as the
-    * interpreted A/B reference). Use this on the big-data side: normalize once
-    * per row, then candidate scoring is a single fused loop per pair.
-    */
-  def cosinePreNormalized(a: Column, b: Column): Column =
-    graft.functions.expr.DotProduct(a, b)
-
   /** Normalize a vector to unit L2 (zero vector stays zero), double elements. */
   def normalize(a: Column): Column = {
     val n = l2Norm(a)

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, Executors}
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -14,6 +12,7 @@ import graft.link.{EntityLinker, TopicResolver}
 import graft.model._
 import graft.synth.TranscriptGen
 import graft.tables.{Checkpoints, SnapshotLog}
+import graft.tables.SnapshotLog.Write
 
 /** End-to-end knowledge-graph construction over a transcripts table
   * (SURVEY.md §3.1): chunk → extract → collect/dedup/canonicalize → link →
@@ -204,13 +203,13 @@ object Ingest {
     * the merges are committed; the returned `Result.chunks` and `rawTriples`
     * remain valid as lazy plans.
     *
-    * Commit: the entities, chunks and triples merges are STAGED side by side
-    * (`SnapshotLog.stageMerge`, on a pool created for this call), then
-    * published in that order by one `SnapshotLog.publish` once all three
-    * are written. Triples go last, so a reader never sees a fact whose
-    * entity or source chunk is not yet visible. If any merge fails, none
-    * publishes: the staged files are deleted and the failure rethrown.
-    * A fragmented table compacts only after all three lines have landed.
+    * Commit: one `SnapshotLog.write` of the entities upsert and the chunks
+    * and triples appends. It stages the three merges side by side and lists
+    * them in that order once all three are written. Triples go last, so a
+    * reader never sees a fact whose entity or source chunk is not yet
+    * visible. If any merge fails, no table gains a snapshot: the staged
+    * files are deleted and the failure rethrown. A fragmented table
+    * compacts only after all three lines have landed.
     */
   def runIncremental(spark: SparkSession, turns: Dataset[Turn], warehouseDir: String,
       cfg: Config = Config()): Result = {
@@ -239,38 +238,14 @@ object Ingest {
         override def triples(t: => DataFrame) =
           if (withVectors) graft.query.Retriever.withFactEmbeddings(t) else t
       })
-      stageThenPublish(log, Seq(
-        () => log.stageMerge("entities", foldLinkedEntities(spark, r.entities, existing.columns),
-          Seq("entity_uuid"), Seq("group_id"), Nil, upsert = true),
-        () => log.stageMerge("chunks", r.chunks, Seq("chunk_uuid"), Seq("group_id"), Nil,
-          upsert = false),
-        () => log.stageMerge("triples", r.triples, Seq("fact_uuid"), Seq("group_id"),
-          TripleLookupBlooms, upsert = false)))
+      log.write(Seq(
+        Write("entities", foldLinkedEntities(spark, r.entities, existing.columns), Write.Upsert,
+          Seq("entity_uuid"), Seq("group_id")),
+        Write("chunks", r.chunks, Write.Append, Seq("chunk_uuid"), Seq("group_id")),
+        Write("triples", r.triples, Write.Append, Seq("fact_uuid"), Seq("group_id"),
+          TripleLookupBlooms)))
       r.copy(entities = log.read("entities").get, triples = log.read("triples").get)
     } finally cached.foreach(_.unpersist())
-  }
-
-  /** Runs `merges` side by side on a pool created for this call (its
-    * threads start from the caller's, so they inherit Spark's local
-    * properties such as the job group and description) and waits for all
-    * of them. Then publishes the staged segments in `merges`' order; if any
-    * merge failed, discards every staged segment instead and rethrows the
-    * first failure.
-    */
-  private def stageThenPublish(log: SnapshotLog,
-      merges: Seq[() => SnapshotLog.Staged]): Unit = {
-    val pool = Executors.newFixedThreadPool(merges.size)
-    val outcomes = try {
-      val futures = merges.map(m => pool.submit(new Callable[SnapshotLog.Staged] {
-        def call(): SnapshotLog.Staged = m()
-      }))
-      futures.map(f => try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
-    } finally pool.shutdown()
-    outcomes.collectFirst { case Left(e) => e }.foreach { e =>
-      outcomes.foreach(_.foreach(log.discard))
-      throw e
-    }
-    log.publish(outcomes.flatMap(_.toOption))
   }
 
   /** Columns of `EntityLinker.link`'s output that [[foldLinkedEntities]]

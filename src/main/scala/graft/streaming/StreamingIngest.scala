@@ -9,6 +9,7 @@ import graft.extract.TripleExtractor
 import graft.model.Turn
 import graft.pipeline.Ingest
 import graft.tables.SnapshotLog
+import graft.tables.SnapshotLog.Write
 
 /** Incremental (streaming) ingest. The reference is batch-only (SURVEY.md
   * §2.9); this is the optional append-stream path it anticipates: phase-1
@@ -26,9 +27,9 @@ object StreamingIngest {
   /** Append-stream extraction: each micro-batch is chunked + extracted, raw
     * triples MERGE-append on (chunk_uuid, fact, subject, object) — replays
     * and overlapping batches are no-ops (exactly-once on content).
-    * A micro-batch's two merges are staged, then published together, chunks
+    * A micro-batch's two merges are one `SnapshotLog.write`, chunks listed
     * first, so no reader sees a raw triple whose chunk is not yet visible;
-    * if the chunks merge fails, the staged raw triples are discarded.
+    * if either merge fails, neither table gains a snapshot.
     *
     * Chunk numbering is BATCH-RUN PARITY (reference numbers chunks per
     * document globally, markdown_chunker.py:70-79): each micro-batch offsets
@@ -67,13 +68,10 @@ object StreamingIngest {
               .drop("chunk_off")
               .select(chunks.columns.map(col): _*)
         }
-        val rawStaged = log.stageMerge("raw_triples", raw.toDF(),
-          Seq("chunk_uuid", "fact", "subject", "relationship", "object"), Seq("group_id"), Nil,
-          upsert = false)
-        val chunksStaged = try log.stageMerge("chunks", renumbered, Seq("chunk_uuid"),
-          Seq("group_id"), Nil, upsert = false)
-        catch { case e: Throwable => log.discard(rawStaged); throw e }
-        log.publish(Seq(chunksStaged, rawStaged))
+        log.write(Seq(
+          Write("chunks", renumbered, Write.Append, Seq("chunk_uuid"), Seq("group_id")),
+          Write("raw_triples", raw.toDF(), Write.Append,
+            Seq("chunk_uuid", "fact", "subject", "relationship", "object"), Seq("group_id"))))
         ()
       }
       .start()

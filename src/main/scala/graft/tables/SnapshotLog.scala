@@ -3,6 +3,7 @@ package graft.tables
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.sql.Timestamp
+import java.util.concurrent.{ExecutionException, Executors}
 
 import scala.jdk.CollectionConverters._
 
@@ -53,16 +54,13 @@ import graft.model.LineageRow
   *    a genuine match; false positives only cost an unnecessary scan.
   *    Segments without a bloom (legacy, or a saturated/oversized
   *    compaction) are always scanned — strictly the old behavior.
-  *  - staged commits: a merge is two halves. Staging writes the segment's
-  *    parquet and blooms under the table's next snapshot id; `publish`
-  *    appends the manifest lines of several staged segments in order,
-  *    lineage and layout included, and only then compacts fragmented
-  *    tables, reading the layout from the manifest. A staged segment is
-  *    invisible, so a caller can stage several tables' merges side by side
-  *    and publish them together, or `discard` them all when one fails, as
-  *    `Ingest.runIncremental` and `StreamingIngest` do. A failed write
-  *    deletes its own files. `mergeAppend`/`mergeUpsert` stage and publish
-  *    at once.
+  *  - staged commits: `write` commits several tables' full snapshots or
+  *    merges as one unit. It stages each segment's parquet and blooms under
+  *    its table's next snapshot id, invisible until a manifest line lists
+  *    it; then appends the lines in order, lineage and layout included, and
+  *    only then compacts fragmented tables (layout read from the manifest).
+  *    A staging failure deletes every staged segment: no table changes.
+  *    `commit`, `mergeAppend` and `mergeUpsert` are one-write calls.
   *  - a merge's input feeds two jobs (bloom probe and write) and is
   *    persisted for them only when its plan is not already materialized
   *    (cached, local, or checkpointed leaves): a persist of a cached input
@@ -82,8 +80,8 @@ import graft.model.LineageRow
   * `vacuum` deletes segment files a concurrently-started merge may still
   * plan to scan — serialize each table's writes and maintenance (TableApp)
   * behind whatever job scheduler owns the warehouse.
-  */
-/** Each segment's key bloom (and every aux lookup bloom) is sized to the
+  *
+  * Each segment's key bloom (and every aux lookup bloom) is sized to the
   * segment's own row count, known from the lineage accumulator before the
   * bloom job runs — an upper bound on its distinct keys. A large compacted
   * base stays prunable instead of saturating, and a small delta writes,
@@ -93,8 +91,7 @@ import graft.model.LineageRow
   *   "missing = always scan" is the same behavior minus the probe cost).
   *   Bounds bloom bytes at ~28.8 bits/key × ceiling (≈115 MB at the 32M
   *   default) — the driver loads every live segment's bloom per merge.
-  */
-/** @param bloomProbeBudgetBytes cap on the bloom bytes resident on the
+  * @param bloomProbeBudgetBytes cap on the bloom bytes resident on the
   *   driver (and serialized into one probe job's task closures) at any
   *   moment during a merge: segments are probed in GROUPS whose summed
   *   bloom size stays under the budget, each group's blooms dropped before
@@ -111,7 +108,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     bloomMaxItems: Long = 32L * 1000 * 1000,
     bloomProbeBudgetBytes: Long = 512L << 20) {
   import spark.implicits._
-  import SnapshotLog.{BloomFpp, Segment, Staged}
+  import SnapshotLog.{BloomFpp, Segment, Staged, Write}
 
   /** (segments scanned, segments live) of the most recent merge — a test/
     * diagnostics hook for the bloom-pruning read path.
@@ -591,8 +588,29 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     */
   def commit(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       bloomKeys: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
-    publish(Seq(Staged(name, stageSegment(name, df, partitionBy, kind = "full",
-      upsert = false, keys = bloomKeys, auxKeys = auxBloomKeys)))).head
+    write(Seq(Write(name, df, Write.Full, bloomKeys, partitionBy, auxBloomKeys))).head
+
+  /** Commits `writes`, one per table, as one unit: stages them side by side
+    * on a pool made for the call (its threads inherit the caller's Spark
+    * local properties; one write stages on the caller's thread), then lists
+    * their lines in order. A staging failure deletes every staged segment
+    * and rethrows the first failure. Returns per write its table's
+    * compaction id, else its snapshot id, else (a zero-row merge) the current one.
+    */
+  def write(writes: Seq[Write]): Seq[Long] = {
+    require(writes.map(_.name).distinct.size == writes.size, "one write per table")
+    publish(if (writes.size <= 1) writes.map(stage) else {
+      val pool = Executors.newFixedThreadPool(writes.size)
+      val outcomes = try writes.map(w => pool.submit(() => stage(w)))
+        .map(f => try Right(f.get()) catch { case e: ExecutionException => Left(e.getCause) })
+      finally pool.shutdown()
+      outcomes.collectFirst { case Left(e) => e }.foreach { e =>
+        outcomes.foreach(_.foreach(discard))
+        throw e
+      }
+      outcomes.flatMap(_.toOption)
+    })
+  }
 
   /** One write pass that streams rows to parquet while folding per-partition
     * lineage (row count + xor-of-row-hash checksum) into a collection
@@ -614,7 +632,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * This is the WRITE half of a commit: parquet and blooms land under the
     * next snapshot id, and the lineage tuples ride in the returned
     * [[Segment]], but no manifest line lists them, so no reader sees the
-    * segment until [[publish]] writes its line, lineage included. A failure
+    * segment until `publish` writes its line, lineage included. A failure
     * deletes whatever the write left behind before it rethrows. None = a
     * zero-row delta (`skipIfEmpty`), nothing written.
     */
@@ -625,7 +643,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     try writeFiles(name, id, df, partitionBy, kind, upsert, keys, skipIfEmpty, auxKeys)
     catch {
       case e: Throwable =>
-        deleteSegment(name, id, auxKeys)
+        try deleteSegment(name, id, auxKeys) catch { case d: Throwable => e.addSuppressed(d) }
         throw e
     }
   }
@@ -788,11 +806,10 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * renames), which makes them visible; a line that fails to land discards
     * its segment and every later one, then rethrows. Only after every line
     * has landed does it compact the tables that gained a delta, so a failed
-    * compaction leaves them published and fragmented. Returns per merge its
-    * table's compaction id, else its snapshot id, else (a zero-row delta)
-    * the current one.
+    * compaction leaves them published and fragmented. Returns what
+    * [[write]] returns.
     */
-  private[graft] def publish(staged: Seq[Staged]): Seq[Long] = {
+  private def publish(staged: Seq[Staged]): Seq[Long] = {
     staged.indices.foreach { i =>
       try staged(i).segment.foreach(appendManifest(staged(i).name, _))
       catch { case e: Throwable => staged.drop(i).foreach(discard); throw e }
@@ -806,7 +823,7 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
   /** Deletes a staged segment's data and bloom files; it was never listed,
     * so no reader can have seen it.
     */
-  private[graft] def discard(s: Staged): Unit =
+  private def discard(s: Staged): Unit =
     s.segment.foreach(seg => deleteSegment(s.name, seg.id, seg.auxKeys))
 
   /** Data, legacy lineage directory and every bloom file of snapshot `id`. */
@@ -926,28 +943,27 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * exists in the live table are dropped (left_anti); the remainder is
     * written as a DELTA SEGMENT — O(new rows), not O(table). Idempotent:
     * re-running the same append writes nothing. Returns the new segment id
-    * (or the current one when nothing new arrived). Stages and publishes at
-    * once; [[stageMerge]] is the staged half.
+    * (or the current one when nothing new arrived). A one-write [[write]].
     */
   def mergeAppend(name: String, df: DataFrame, keys: Seq[String],
       partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
-    publish(Seq(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = false))).head
+    write(Seq(Write(name, df, Write.Append, keys, partitionBy, auxBloomKeys))).head
 
   /** MERGE with UPDATE semantics (entity-link summary/alias merges): rows
     * whose key is new OR whose content differs from the live row are written
     * as an upsert delta; `read` resolves last-writer-wins per key
     * (merge-on-read). O(changed + new) write. EXCEPT does the change
-    * detection null-safely. Idempotent on content. Stages and publishes at
-    * once; [[stageMerge]] is the staged half.
+    * detection null-safely. Idempotent on content. A one-write [[write]].
     */
   def mergeUpsert(name: String, df: DataFrame, keys: Seq[String],
       partitionBy: Seq[String] = Nil, auxBloomKeys: Seq[Seq[String]] = Nil): Long =
-    publish(Seq(stageMerge(name, df, keys, partitionBy, auxBloomKeys, upsert = true))).head
+    write(Seq(Write(name, df, Write.Upsert, keys, partitionBy, auxBloomKeys))).head
 
-  /** [[mergeUpsert]]'s (`upsert`) or [[mergeAppend]]'s write, staged:
-    * readers see nothing until [[publish]]; [[discard]] deletes it.
+  /** One write, staged: readers see nothing until `publish`; `discard`
+    * deletes it. A merge into a table with no live segment, like a full
+    * write, stages a full snapshot.
     *
-    * The incoming rows (deduplicated on `keys`) feed two jobs, the bloom
+    * A merge's incoming rows (deduplicated on `keys`) feed two jobs, the bloom
     * probe and the write. They are persisted for the pair only when `df`
     * is not already materialized (see [[materialized]]); otherwise both
     * jobs re-read the materialized leaves, no second copy is stored, and
@@ -956,11 +972,12 @@ class SnapshotLog(spark: SparkSession, baseDir: String,
     * the write pass, and a zero-row delta is discarded there instead of
     * being probed with a second isEmpty execution.
     */
-  private[graft] def stageMerge(name: String, df: DataFrame, keys: Seq[String],
-      partitionBy: Seq[String], auxKeys: Seq[Seq[String]], upsert: Boolean): Staged = {
-    val in = df.dropDuplicates(keys)
+  private def stage(w: Write): Staged = {
+    val Write(name, df, _, keys, partitionBy, auxKeys) = w
+    val upsert = w.kind == Write.Upsert
+    val in = if (w.kind == Write.Full) df else df.dropDuplicates(keys)
     val segment =
-      if (liveEntries(name).isEmpty)
+      if (w.kind == Write.Full || liveEntries(name).isEmpty)
         stageSegment(name, in, partitionBy, kind = "full", upsert = false, keys,
           auxKeys = auxKeys)
       else {
@@ -1058,16 +1075,30 @@ object SnapshotLog {
     * with its per-task (partition, rows, checksum) lineage tuples and its
     * layout: partition columns, merge keys and aux key sets.
     */
-  private[graft] final case class Segment(id: Long, kind: String, upsert: Boolean,
+  private final case class Segment(id: Long, kind: String, upsert: Boolean,
       schema: org.apache.spark.sql.types.StructType, hashV: Int,
       lineage: Seq[(Int, Long, Long)], partitionBy: Seq[String], keys: Seq[String],
       auxKeys: Seq[Seq[String]])
 
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  /** A merge's or commit's output, fully written but not yet visible:
-    * `segment` is None when the merge had no new rows. [[SnapshotLog.publish]]
-    * makes it visible; [[SnapshotLog.discard]] deletes it.
+  /** A write's output, written but not yet listed; None for a zero-row merge. */
+  private final case class Staged(name: String, segment: Option[Segment])
+
+  /** One table's part of a [[SnapshotLog.write]]: its frame, how it lands
+    * and its layout — merge keys (a full snapshot's bloom keys), partition
+    * columns and aux lookup key sets.
     */
-  private[graft] final case class Staged(name: String, segment: Option[Segment])
+  final case class Write(name: String, df: DataFrame, kind: Write.Kind,
+      keys: Seq[String] = Nil, partitionBy: Seq[String] = Nil,
+      auxKeys: Seq[Seq[String]] = Nil)
+
+  object Write {
+    /** A full snapshot, or a merge that drops rows whose key is live
+      * (append) or keeps new and changed rows (upsert). */
+    sealed trait Kind
+    case object Full extends Kind
+    case object Append extends Kind
+    case object Upsert extends Kind
+  }
 }

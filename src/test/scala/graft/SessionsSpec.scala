@@ -47,6 +47,18 @@ class SessionsSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"build the session through graft.app.Sessions: $offenders")
   }
 
+  test("only SnapshotLog and Verify create a thread pool under src/main") {
+    val pool = """Executors\.""".r
+    val allowed = Set("SnapshotLog.scala", "Verify.scala")
+    val offenders = sources.collect {
+      case (p, text) if p.startsWith(Paths.get("src/main")) &&
+        pool.findFirstIn(text).isDefined && !allowed(p.getFileName.toString) => p.toString
+    }
+    assert(sources.exists { case (p, text) =>
+      p.endsWith("SnapshotLog.scala") && pool.findFirstIn(text).isDefined })
+    assert(offenders.isEmpty, s"stage multi-table commits through SnapshotLog.write: $offenders")
+  }
+
   test("no source reads the deleted session env knobs") {
     val knob = "\"SPARK_(MASTER|GRAFT_SHUFFLE|GRAFT_AQE)\"".r
     val offenders = sources.collect {

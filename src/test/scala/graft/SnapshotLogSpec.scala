@@ -14,6 +14,7 @@ import graft.model.Turn
 import graft.pipeline.Ingest
 import graft.synth.TranscriptGen
 import graft.tables.SnapshotLog
+import graft.tables.SnapshotLog.Write
 
 /** Round-3 table-layer contracts: O(delta) append segments, merge-on-read
   * upserts, one-pass lineage (no re-read of the written snapshot), and
@@ -899,16 +900,21 @@ class SnapshotLogSpec extends SparkSpec {
     assert(committedAt === committedAt.sorted, s"commit times ${tables.zip(committedAt)}")
   }
 
-  /** Snapshot ids with a data directory or bloom file under table `t` that
-    * its manifest does not list.
-    */
-  private def unlisted(log: SnapshotLog, dir: String, t: String): Seq[String] = {
-    val listed = log.snapshots(t).toSet
-    val seg = """snapshot-(\d+)(\.bloom.*)?""".r
-    val st = Files.list(Paths.get(dir, t))
-    try st.iterator().asScala.map(_.getFileName.toString).collect {
-      case n @ seg(id, _) if !listed(id.toLong) => n
-    }.toSeq.sorted finally st.close()
+  test("a two-table write whose second staging throws commits neither table") {
+    val dir = Files.createTempDirectory("graft-write-fail").toString
+    val log = new SnapshotLog(spark, dir)
+    val rows = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
+    def writes = Seq(Write("a", rows, Write.Full),
+      Write("b", rows, Write.Full, keys = Seq("id"), auxKeys = Seq(Seq("v"))))
+    // b's full snapshot fails writing its key bloom: a directory sits there
+    Files.createDirectories(Paths.get(dir, "b", "snapshot-1.bloom"))
+    intercept[java.io.IOException](log.write(writes))
+    assert(log.snapshots("a").isEmpty && log.snapshots("b").isEmpty,
+      "a failed write must commit no table")
+    Seq("a", "b").foreach(t => assert(unlisted(log, dir, t).isEmpty, s"$t holds unlisted files"))
+
+    assert(log.write(writes) === Seq(1L, 1L))
+    assert(log.read("a").get.count() === 20L && log.read("b").get.count() === 20L)
   }
 
   private def partitionDirs(p: String): Seq[String] = {

@@ -1,11 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.perfbench.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.tables.SnapshotLog
 
 /** Shared local SparkSession for specs (one per JVM; sbt forks one test JVM). */
 object SparkSpec {
@@ -53,6 +58,18 @@ abstract class SparkSpec extends AnyFunSuite {
         if (te.taskMetrics != null) bytes.addAndGet(te.taskMetrics.resultSize)
     })(action)
     bytes.get()
+  }
+
+  /** Snapshot ids with a data path or bloom file under table `t` of the
+    * warehouse at `dir` that its manifest does not list.
+    */
+  protected def unlisted(log: SnapshotLog, dir: String, t: String): Seq[String] = {
+    val listed = log.snapshots(t).toSet
+    val seg = """snapshot-(\d+)(\.bloom.*)?""".r
+    val st = Files.list(Paths.get(dir, t))
+    try st.iterator().asScala.map(_.getFileName.toString).collect {
+      case n @ seg(id, _) if !listed(id.toLong) => n
+    }.toSeq.sorted finally st.close()
   }
 
   private def listening(listener: SparkListener)(action: => Any): Unit = {
